@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.model._
-import graft.plans.{DependencyFinder, Planner}
-import graft.sources.SegmentStore
+import graft.plans.Planner
+import graft.sources.{RunHistoryEntry, SegmentStore}
 import org.apache.spark.sql.DataFrame
 
 /** Top-level rule lifecycle — the engine a user of the reference platform
@@ -42,31 +42,35 @@ final class SegmentRunner(
   private def compoundSentinel(op: SetOp): Option[String] =
     Some(s"COMPOUND_OPERATION:${op.toString.toLowerCase}")
 
+  /** The catalog fields a plan decides: stored conditions (the residual
+    * for a compound rule), parents, operation and display SQL.
+    */
+  private def withPlan(e: SegmentCatalogEntry, plan: SegmentPlan): SegmentCatalogEntry =
+    plan match {
+      case SegmentPlan.Base(cs) =>
+        e.copy(conditions = cs, dependsOn = Nil, operation = None,
+          sqlQuery = Some(ReferenceSql.generateSegmentSql(cs)))
+      case SegmentPlan.Compound(parents, op, residual) =>
+        e.copy(conditions = residual, dependsOn = parents,
+          operation = Some(op.toString.toLowerCase), sqlQuery = compoundSentinel(op))
+    }
+
   /** Create + catalog a rule. Returns its id and the plan that was bound.
     * Like the reference, the rule keeps only the conditions the dependency
     * cover did NOT consume (reference rules.py:40-50). `schedule` and
-    * `isActive` govern scheduled execution ([[runAll]]/[[runDue]]).
+    * `isActive` govern scheduled execution ([[runAll]]/[[runDue]]). Id
+    * assignment and dependency detection run inside the catalog
+    * transaction, so concurrent creates get distinct ids.
     */
   def createRule(name: String, conditions: Seq[Condition],
-      schedule: String = Schedule.Daily, isActive: Boolean = true): (Long, SegmentPlan) = {
-    val catalog = store.loadCatalog()
-    val id = catalog.map(_.ruleId).maxOption.getOrElse(0L) + 1L
-    val existing = catalog.map(asRule)
-    val plan = Planner.planNew(conditions, existing)
-    val entry = plan match {
-      case SegmentPlan.Base(cs) =>
-        SegmentCatalogEntry(id, name, s"segment_output_$id", cs, Nil, None,
-          schedule = schedule, isActive = isActive,
-          sqlQuery = Some(ReferenceSql.generateSegmentSql(cs)))
-      case SegmentPlan.Compound(parents, op, residual) =>
-        SegmentCatalogEntry(id, name, s"segment_output_$id", residual,
-          parents, Some(op.toString.toLowerCase),
-          schedule = schedule, isActive = isActive,
-          sqlQuery = compoundSentinel(op))
+      schedule: String = Schedule.Daily, isActive: Boolean = true): (Long, SegmentPlan) =
+    store.modifyCatalog { catalog =>
+      val id = catalog.map(_.ruleId).maxOption.getOrElse(0L) + 1L
+      val plan = Planner.planNew(conditions, catalog.map(asRule))
+      val entry = withPlan(SegmentCatalogEntry(id, name, s"segment_output_$id", Nil, Nil, None,
+        schedule = schedule, isActive = isActive), plan)
+      (catalog :+ entry, (id, plan))
     }
-    store.saveCatalog(catalog :+ entry)
-    (id, plan)
-  }
 
   /** List cataloged rules, paginated like the reference's
     * `GET /api/v1/rules` (reference rules.py:83-107; 1-based pages).
@@ -84,7 +88,8 @@ final class SegmentRunner(
     * [[runAll]]/[[runDue]] but stay in the catalog and keep their data.
     */
   def setActive(ruleId: Long, active: Boolean): Unit =
-    store.updateCatalog(ruleId)(_.copy(isActive = active))
+    store.modifyCatalog(catalog => (catalog.map(e =>
+      if (e.ruleId == ruleId) e.copy(isActive = active) else e), ()))
 
   /** Delete a rule: catalog row + materialized segment dir
     * (`DELETE /rules/<id>`, reference rules.py:128-151).
@@ -97,59 +102,35 @@ final class SegmentRunner(
     * reference's behavior.
     */
   def deleteRule(ruleId: Long, force: Boolean = false): Unit = {
-    val catalog = store.loadCatalog()
-    require(catalog.exists(_.ruleId == ruleId), s"rule $ruleId not in catalog")
-    val dependents = catalog.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
-    require(force || dependents.isEmpty,
-      s"rule $ruleId has dependents ${dependents.mkString(",")}; " +
-        "re-plan or delete them first (or pass force = true)")
-    store.removeFromCatalog(ruleId)
+    store.modifyCatalog { catalog =>
+      require(catalog.exists(_.ruleId == ruleId), s"rule $ruleId not in catalog")
+      val dependents = catalog.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
+      require(force || dependents.isEmpty,
+        s"rule $ruleId has dependents ${dependents.mkString(",")}; " +
+          "re-plan or delete them first (or pass force = true)")
+      (catalog.filterNot(_.ruleId == ruleId), ())
+    }
     store.delete(ruleId)
   }
 
   /** Update a rule's conditions: re-runs dependency detection excluding the
     * rule itself (reference rules.py:154-225, R7).
     */
-  def updateRule(ruleId: Long, conditions: Seq[Condition]): SegmentPlan = {
-    val catalog = store.loadCatalog()
-    val existing = catalog.filter(_.ruleId != ruleId).map(asRule)
-    val plan = DependencyFinder.findBestDependency(
-        conditions, existing, excludeRuleId = Some(ruleId)) match {
-      case Some(d) => SegmentPlan.Compound(d.dependencyRuleIds, d.operation, d.remaining)
-      case None    => SegmentPlan.Base(conditions)
+  def updateRule(ruleId: Long, conditions: Seq[Condition]): SegmentPlan =
+    store.modifyCatalog { catalog =>
+      val plan = Planner.planNew(conditions, catalog.filter(_.ruleId != ruleId).map(asRule))
+      (catalog.map(e => if (e.ruleId == ruleId) withPlan(e, plan) else e), plan)
     }
-    val updated = catalog.map { e =>
-      if (e.ruleId != ruleId) e
-      else plan match {
-        case SegmentPlan.Base(cs) =>
-          e.copy(conditions = cs, dependsOn = Nil, operation = None,
-            sqlQuery = Some(ReferenceSql.generateSegmentSql(cs)))
-        case SegmentPlan.Compound(parents, op, residual) =>
-          e.copy(conditions = residual, dependsOn = parents,
-            operation = Some(op.toString.toLowerCase),
-            sqlQuery = compoundSentinel(op))
-      }
-    }
-    store.saveCatalog(updated)
-    plan
-  }
 
   /** Materialize one rule into the store; returns the row count written.
     * Parents must already be materialized (like the reference, which loads
     * `segment_output_<id>` tables and aborts when fewer than two exist).
     */
   def run(ruleId: Long, refreshedAt: String): Long = {
-    val entry = store.loadCatalog().find(_.ruleId == ruleId)
-      .getOrElse(throw new NoSuchElementException(s"rule $ruleId not in catalog"))
-    val plan = Planner.planStored(asRule(entry))
-    val result = Planner.evaluate(plan, tx(), store.read, keyed, residualMode, mode)
-    // write() handles the empty case (canonical-schema empty parquet, Q9);
-    // probing emptiness first would execute the whole DAG twice.
-    val n = store.write(ruleId, result)
-    store.updateMetadata(ruleId, n, refreshedAt)
-    // growth-over-runs observability (the catalog keeps only the latest)
-    store.appendRunHistory(ruleId, refreshedAt, n)
-    n
+    val catalog = store.loadCatalog()
+    if (!catalog.exists(_.ruleId == ruleId))
+      throw new NoSuchElementException(s"rule $ruleId not in catalog")
+    refresh(catalog, Seq(ruleId), refreshedAt, rearm = false)(ruleId)
   }
 
   /** Materialize every ACTIVE cataloged rule, parents before dependents
@@ -160,19 +141,21 @@ final class SegmentRunner(
     */
   def runAll(refreshedAt: String): Map[Long, Long] = {
     val catalog = store.loadCatalog()
-    val active = catalog.filter(_.isActive).map(_.ruleId).toSet
-    val runnable = materializableSubset(catalog, topoOrder(catalog).filter(active))
-    runnable.map(id => id -> run(id, refreshedAt)).toMap
+    refresh(catalog, runnable(catalog)(_.isActive), refreshedAt, rearm = false)
   }
 
   /** Scheduler tick: run every active rule whose `nextRunAt` has arrived
     * (never-armed rules are due immediately, like the reference's init
     * snap-to-now), then re-arm it per its cadence —
     * `Schedule.calculateNextRun` (see the deviation note there: the
-    * reference computes cadence but never re-arms after a run). All
-    * re-arms land in ONE catalog write after the tick, so a mid-tick
-    * crash never leaves a rule refreshed-but-armed-twice and the
-    * control-plane I/O stays O(rules), not O(rules²).
+    * reference computes cadence but never re-arms after a run). The
+    * refreshed rules' row counts, refresh stamps and re-arms land in ONE
+    * catalog transaction after the tick, and their history rows in one
+    * append, so the control-plane I/O stays O(rules), not O(rules²). A
+    * crash mid-batch leaves the segments rewritten so far with their
+    * previous `rowCount` and not re-armed (still due), so the next tick
+    * re-runs them idempotently; a rule that throws still commits the rules
+    * refreshed before it, then the exception propagates.
     *
     * Pass `faithfulSchedule = true` to reproduce the reference scheduler
     * EXACTLY (backend/app/core/scheduler.py:62-133): `execute_rule`
@@ -187,34 +170,57 @@ final class SegmentRunner(
   def runDue(now: String, faithfulSchedule: Boolean = false): Map[Long, Long] = {
     java.time.Instant.parse(now) // validate once, fail fast with a clear cause
     val catalog = store.loadCatalog()
-    val due = catalog
-      .filter(e => e.isActive && Schedule.isDue(e.nextRunAt, now))
-      .map(_.ruleId).toSet
-    val runnable = materializableSubset(catalog, topoOrder(catalog).filter(due))
-    val counts = runnable.map(id => id -> run(id, now)).toMap
-    if (counts.nonEmpty && !faithfulSchedule) {
-      val bySchedule = catalog.map(e => e.ruleId -> e.schedule).toMap
-      store.saveCatalog(store.loadCatalog().map(e =>
-        if (counts.contains(e.ruleId))
-          e.copy(nextRunAt = Some(Schedule.calculateNextRun(bySchedule(e.ruleId), now)))
-        else e))
-    }
-    counts
+    refresh(catalog, runnable(catalog)(e => e.isActive && Schedule.isDue(e.nextRunAt, now)),
+      now, rearm = !faithfulSchedule)
   }
 
-  /** Drop rules whose parents were never materialized (inactive/not-due
-    * parents keep serving their LAST stored parquet, but a parent with no
-    * store at all cannot be read — the reference logs that rule's failure
-    * and continues; aborting the whole batch mid-way would strand the
-    * rules already refreshed). A rule runnable this tick counts as
-    * materialized for its dependents.
+  /** Evaluate and write each rule of `ids` (in order, planned from
+    * `catalog`), then [[commit]] the batch — also when a rule throws, so the
+    * rules refreshed before it are kept.
     */
-  private def materializableSubset(catalog: Seq[SegmentCatalogEntry],
-      order: Seq[Long]): Seq[Long] = {
+  private def refresh(catalog: Seq[SegmentCatalogEntry], ids: Seq[Long],
+      at: String, rearm: Boolean): Map[Long, Long] = {
+    val byId = catalog.map(e => e.ruleId -> e).toMap
+    var done = Vector.empty[(Long, Long)]
+    try ids.foreach { id =>
+      val plan = Planner.planStored(asRule(byId(id)))
+      // write() handles the empty case (canonical-schema empty parquet, Q9);
+      // probing emptiness first would execute the whole DAG twice.
+      done :+= id -> store.write(id,
+        Planner.evaluate(plan, tx(), store.read, keyed, residualMode, mode))
+    } finally commit(done, at, rearm)
+    done.toMap
+  }
+
+  /** One catalog transaction sets each refreshed rule's row count (S7),
+    * refresh stamp and, when `rearm`, next arm time on the catalog as it is
+    * under the lock; one history append records the whole batch.
+    */
+  private def commit(counts: Seq[(Long, Long)], at: String, rearm: Boolean): Unit =
+    if (counts.nonEmpty) {
+      val rows = counts.toMap
+      store.modifyCatalog(catalog => (catalog.map(e => rows.get(e.ruleId).fold(e)(n =>
+        e.copy(rowCount = n, lastRefreshedAt = Some(at),
+          nextRunAt = if (rearm) Some(Schedule.calculateNextRun(e.schedule, at))
+                      else e.nextRunAt))), ()))
+      // growth-over-runs observability (the catalog keeps only the latest)
+      store.appendRunHistory(counts.map { case (id, n) => RunHistoryEntry(id, at, n) })
+    }
+
+  /** Rules picked by `pick`, parents before dependents, minus those whose
+    * parents were never materialized (inactive/not-due parents keep serving
+    * their LAST stored parquet, but a parent with no store at all cannot be
+    * read — the reference logs that rule's failure and continues; aborting
+    * the whole batch mid-way would strand the rules already refreshed). A
+    * rule runnable this batch counts as materialized for its dependents.
+    */
+  private def runnable(catalog: Seq[SegmentCatalogEntry])(
+      pick: SegmentCatalogEntry => Boolean): Seq[Long] = {
     val byId = catalog.map(e => e.ruleId -> e).toMap
     val available = collection.mutable.Set.empty[Long]
-    order.filter { id =>
-      val ok = byId(id).dependsOn.forall(p => available(p) || store.exists(p))
+    topoOrder(catalog).filter { id =>
+      val ok = pick(byId(id)) &&
+        byId(id).dependsOn.forall(p => available(p) || store.exists(p))
       if (ok) available += id
       ok
     }

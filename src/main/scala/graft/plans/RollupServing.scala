@@ -34,7 +34,7 @@ object RollupServing {
     val path = s"${store.warehousePath}/rollup_$name"
     // same crash-safe swap as segments/catalog: a reader never sees a
     // half-written rollup, and a crashed refresh leaves the previous one
-    store.replaceDir(path) { staging =>
+    store.swapIn(path) { staging =>
       Rollups.userWindows(tx, periods)
         .write.mode(SaveMode.Overwrite).parquet(staging)
     }
@@ -50,9 +50,9 @@ object RollupServing {
     */
   def userWindowTotals(spark: SparkSession, store: SegmentStore,
       tx: => DataFrame, periodDays: Int): DataFrame =
-    store.loadRollups().find(_.periods.contains(periodDays)) match {
+    store.loadRollupsUnlocked().find(_.periods.contains(periodDays)) match {
       case Some(e) =>
-        store.recoverDir(e.path) // heal a crashed refresh before reading
+        store.recoverSwap(e.path) // heal a crashed refresh before reading
         spark.read.parquet(e.path)
           .filter(col("period_days") === periodDays)
       case None =>
@@ -73,8 +73,8 @@ object RollupServing {
     // aggregated without them cannot serve the request. Malformed/skipped
     // conditions don't block: the base path skips them identically (Q10).
     if (compiled.where.nonEmpty) None
-    else store.loadRollups().find(_.periods.contains(periodDays)).map { e =>
-      store.recoverDir(e.path)
+    else store.loadRollupsUnlocked().find(_.periods.contains(periodDays)).map { e =>
+      store.recoverSwap(e.path)
       val base = spark.read.parquet(e.path)
         .filter(col("period_days") === periodDays)
         .select(col("user_id"), col("total_transactions"),

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet-backed store for materialized segments + catalog metadata,
@@ -32,21 +32,15 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   }
 
   /** Write a segment, returning its row count (recorded in the catalog like
-    * the reference's `row_count` update, S7). Null/empty-safe (Q9).
+    * the reference's `row_count` update, S7). Null/empty-safe: an empty
+    * result stores a zero-row file with the canonical schema (Q9).
     *
     * The count rides the write itself via an `observe` metric — one pass,
     * no re-read of what was just written (at 100 TB the old
     * write-then-count-the-parquet shape doubled the I/O per refresh).
     */
-  def write(ruleId: Long, df: DataFrame): Long = {
-    // Align to the canonical schema: names select columns, casts pin types.
-    val aligned = df.select(Schemas.segmentOutput.fields.map(f =>
-      col(f.name).cast(f.dataType)).toSeq: _*)
-    val obs = org.apache.spark.sql.Observation(s"seg_write_$ruleId")
-    aligned.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(path(ruleId))
-    obs.get("n").asInstanceOf[Long]
-  }
+  def write(ruleId: Long, df: DataFrame): Long =
+    writeCounted(df, s"seg_write_$ruleId", path(ruleId))
 
   /** Replace a segment whose NEW content may derive from its CURRENT
     * stored content (the streaming upsert shape: read → merge → rewrite).
@@ -59,45 +53,49 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     * are atomic on HDFS/local; on object stores (s3a) they are
     * copy-based — pair with a manifest commit protocol there.
     */
-  def replace(ruleId: Long, df: DataFrame): Long = {
-    val aligned = df.select(Schemas.segmentOutput.fields.map(f =>
-      col(f.name).cast(f.dataType)).toSeq: _*)
-    val obs = org.apache.spark.sql.Observation(
-      s"seg_replace_${ruleId}_${System.nanoTime()}")
-    swapIn(path(ruleId)) { staging =>
-      aligned.observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(staging)
-    }
+  def replace(ruleId: Long, df: DataFrame): Long =
+    swapIn(path(ruleId))(writeCounted(df, s"seg_replace_${ruleId}_${System.nanoTime()}", _))
+
+  /** Align `df` to the canonical segment schema (names select columns,
+    * casts pin types) and write it to `dir`, counting rows on the way.
+    */
+  private def writeCounted(df: DataFrame, name: String, dir: String): Long = {
+    val obs = org.apache.spark.sql.Observation(name)
+    df.select(Schemas.segmentOutput.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+      .observe(obs, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(dir)
     obs.get("n").asInstanceOf[Long]
   }
 
-  /** Staging + two-rename swap shared by `replace` and `saveCatalog`:
-    * `writeStaging` materializes the new content beside the target, then the
-    * old data is moved aside and the staging directory renamed in. At no
-    * point is the target's previous state deleted before its replacement is
-    * fully written, so a crash at any step leaves a recoverable directory
-    * (see `recoverSwap` for the read-side repair of the mid-swap window).
+  /** Crash-safe replacement of a warehouse directory, shared by segment
+    * `replace`, the catalog, the rollup registry and rollup data:
+    * `writeStaging` materializes the new content beside the target (its
+    * result is returned), then the old data is moved aside and the staging
+    * directory renamed in. At no point is the target's previous state
+    * deleted before its replacement is fully written, so a crash at any step
+    * leaves a recoverable directory (pair reads with [[recoverSwap]]).
     */
-  private def swapIn(target: String)(writeStaging: String => Unit): Unit = {
+  def swapIn[A](target: String)(writeStaging: String => A): A = {
     val (fsys, tgt) = fs(target)
     val staging = new org.apache.hadoop.fs.Path(s"${target}__staging")
     val old = new org.apache.hadoop.fs.Path(s"${target}__old")
     fsys.delete(staging, true) // leftover from a previous crash, superseded
-    writeStaging(staging.toString)
+    val result = writeStaging(staging.toString)
     fsys.delete(old, true)
     if (fsys.exists(tgt))
       require(fsys.rename(tgt, old), s"rename $tgt -> $old failed")
     require(fsys.rename(staging, tgt), s"rename $staging -> $tgt failed")
     fsys.delete(old, true)
+    result
   }
 
-  /** Repair the target of an interrupted `swapIn`. Only the window between
+  /** Repair the target of an interrupted [[swapIn]]. Only the window between
     * the two renames leaves the target missing; recovery rolls FORWARD to
     * the fully-written staging copy when its `_SUCCESS` commit marker is
     * present, else rolls BACK to the preserved previous state. A no-op
     * whenever the target exists.
     */
-  private def recoverSwap(target: String): Unit = {
+  def recoverSwap(target: String): Unit = {
     val (fsys, tgt) = fs(target)
     if (fsys.exists(tgt)) return
     val staging = new org.apache.hadoop.fs.Path(s"${target}__staging")
@@ -111,11 +109,19 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     }
   }
 
-  /** Empty-segment sink: canonical 4-col schema, zero rows (S6/Q9). */
-  def writeEmpty(ruleId: Long): Long = {
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.segmentOutput)
-      .write.mode(SaveMode.Overwrite).parquet(path(ruleId))
-    0L
+  /** Small control-plane tables (`_catalog`, `_rollups`): one parquet file,
+    * replaced whole through [[swapIn]].
+    */
+  private def saveSmallTable(target: String, ds: Dataset[_]): Unit =
+    swapIn(target)(staging => ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging))
+
+  /** Read a small table after self-healing an interrupted save; None when
+    * it was never written.
+    */
+  private def loadSmallTable(target: String): Option[DataFrame] = {
+    recoverSwap(target)
+    val (f, p) = fs(target)
+    if (f.exists(p)) Some(spark.read.parquet(target)) else None
   }
 
   def read(ruleId: Long): DataFrame = spark.read.parquet(path(ruleId))
@@ -136,32 +142,38 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   // The catalog is the control plane's only source of truth (the reference
   // gets crash-safety for free from SQLite's transactionality,
   // backend/app/models/rule_engine.py:45-95). Here:
+  //  - `modifyCatalog` is the ONE mutator: it loads, applies a function and
+  //    saves, all under the catalog lock, so every read-modify-write is a
+  //    transaction and no concurrent writer's update is lost. A caller makes
+  //    one call per operation, so each operation rewrites the catalog O(1)
+  //    times (a whole refresh batch included);
   //  - every save goes through the same staging + two-rename swap as segment
   //    data, so no crash window deletes the previous catalog before its
   //    replacement is durable, and loadCatalog self-heals the mid-swap state;
-  //  - read-modify-write mutators serialize through a create-exclusive lock
-  //    file (atomic on HDFS and local FS; on object stores without atomic
-  //    create-no-overwrite, e.g. raw S3, deploy with a single catalog writer
-  //    instead — the data plane is unaffected either way).
+  //  - the lock is a create-exclusive lock file (atomic on HDFS and local FS;
+  //    on object stores without atomic create-no-overwrite, e.g. raw S3,
+  //    deploy with a single catalog writer instead — the data plane is
+  //    unaffected either way).
 
   private val catalogPath = s"$warehouse/_catalog"
 
-  def saveCatalog(entries: Seq[SegmentCatalogEntry]): Unit =
-    withCatalogLock(saveCatalogLocked(entries))
-
-  private def saveCatalogLocked(entries: Seq[SegmentCatalogEntry]): Unit = {
-    import spark.implicits._
-    val ds = entries.map(e => FlatEntry(
-      e.ruleId, e.segmentName, e.tableName,
-      ConditionCodec.encodeAll(e.conditions),
-      e.dependsOn, e.operation.getOrElse(""),
-      e.rowCount, e.lastRefreshedAt.getOrElse(""),
-      e.schedule, e.isActive, e.nextRunAt.getOrElse(""),
-      e.sqlQuery.getOrElse(""))).toDS()
-    swapIn(catalogPath) { staging =>
-      ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging)
+  /** Transactionally rewrite the catalog: `f` receives the entries loaded
+    * under the lock and returns the entries to save plus a result. If `f`
+    * throws, nothing is saved.
+    */
+  def modifyCatalog[A](f: Seq[SegmentCatalogEntry] => (Seq[SegmentCatalogEntry], A)): A =
+    withCatalogLock {
+      import spark.implicits._
+      val (next, result) = f(loadCatalog())
+      saveSmallTable(catalogPath, next.map(e => FlatEntry(
+        e.ruleId, e.segmentName, e.tableName,
+        ConditionCodec.encodeAll(e.conditions),
+        e.dependsOn, e.operation.getOrElse(""),
+        e.rowCount, e.lastRefreshedAt.getOrElse(""),
+        e.schedule, e.isActive, e.nextRunAt.getOrElse(""),
+        e.sqlQuery.getOrElse(""))).toDS())
+      result
     }
-  }
 
   /** Serialize catalog mutations across processes. Acquisition is an atomic
     * create-no-overwrite of `_catalog.lock`; a lock older than
@@ -214,59 +226,39 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
 
   def loadCatalog(): Seq[SegmentCatalogEntry] = {
     import spark.implicits._
-    recoverSwap(catalogPath) // self-heal an interrupted save (mid-swap crash)
-    val (f, p) = fs(catalogPath)
-    if (!f.exists(p)) Nil
-    else catalogDefaults.foldLeft(spark.read.parquet(catalogPath)) {
-      case (df, (c, d)) =>
-        if (df.columns.contains(c)) df else df.withColumn(c, d)
-    }.as[FlatEntry].collect().toSeq
-      .map(f => SegmentCatalogEntry(
-        f.ruleId, f.segmentName, f.tableName,
-        ConditionCodec.decodeAll(f.conditions),
-        f.dependsOn, Option(f.operation).filter(_.nonEmpty),
-        f.rowCount, Option(f.lastRefreshedAt).filter(_.nonEmpty),
-        f.schedule, f.isActive, Option(f.nextRunAt).filter(_.nonEmpty),
-        Option(f.sqlQuery).filter(_.nonEmpty)))
-      .sortBy(_.ruleId)
+    loadSmallTable(catalogPath).fold(Seq.empty[SegmentCatalogEntry]) { raw =>
+      catalogDefaults.foldLeft(raw) {
+        case (df, (c, d)) =>
+          if (df.columns.contains(c)) df else df.withColumn(c, d)
+      }.as[FlatEntry].collect().toSeq
+        .map(f => SegmentCatalogEntry(
+          f.ruleId, f.segmentName, f.tableName,
+          ConditionCodec.decodeAll(f.conditions),
+          f.dependsOn, Option(f.operation).filter(_.nonEmpty),
+          f.rowCount, Option(f.lastRefreshedAt).filter(_.nonEmpty),
+          f.schedule, f.isActive, Option(f.nextRunAt).filter(_.nonEmpty),
+          Option(f.sqlQuery).filter(_.nonEmpty)))
+        .sortBy(_.ruleId)
+    }
   }
-
-  /** Post-materialization metadata update (S7): row_count + refresh stamp. */
-  def updateMetadata(ruleId: Long, rowCount: Long, refreshedAt: String): Unit =
-    updateCatalog(ruleId)(_.copy(
-      rowCount = rowCount, lastRefreshedAt = Some(refreshedAt)))
-
-  /** Point update of one catalog row (schedule re-arm, activation flips).
-    * The lock spans the whole read-modify-write — without it, two
-    * concurrent runners each read the same snapshot and the second save
-    * silently drops the first one's update.
-    */
-  def updateCatalog(ruleId: Long)(f: SegmentCatalogEntry => SegmentCatalogEntry): Unit =
-    withCatalogLock(saveCatalogLocked(
-      loadCatalog().map(e => if (e.ruleId == ruleId) f(e) else e)))
-
-  /** Drop a rule's catalog row (rule DELETE). */
-  def removeFromCatalog(ruleId: Long): Unit =
-    withCatalogLock(saveCatalogLocked(
-      loadCatalog().filterNot(_.ruleId == ruleId)))
 
   // ---- run history -----------------------------------------------------------
   //
   // Beyond-parity observability: every materialization appends one
   // (rule_id, refreshed_at, row_count) row, so segment GROWTH over runs is
   // a queryable table instead of a lost log line (the reference's catalog
-  // keeps only the latest row_count). Append-only parquet: each run writes
-  // a fresh file, so no catalog lock is needed — concurrent runners never
-  // touch each other's files, and readers only see committed files. At
-  // production run rates the directory accretes small files; that is the
-  // standard table-maintenance story ([[Tables.compact]] on a cadence).
+  // keeps only the latest row_count). Append-only parquet: each refresh
+  // batch writes one fresh file holding all of its rows, so no catalog lock
+  // is needed — concurrent runners never touch each other's files, and
+  // readers only see committed files. At production run rates the directory
+  // accretes small files; that is the standard table-maintenance story
+  // ([[Tables.compact]] on a cadence).
 
   private val historyPath = s"$warehouse/_history"
 
-  def appendRunHistory(ruleId: Long, refreshedAt: String, rowCount: Long): Unit = {
+  def appendRunHistory(entries: Seq[RunHistoryEntry]): Unit = {
     import spark.implicits._
-    Seq(RunHistoryEntry(ruleId, refreshedAt, rowCount)).toDS()
-      .coalesce(1).write.mode(SaveMode.Append).parquet(historyPath)
+    entries.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(historyPath)
   }
 
   /** All recorded runs (empty frame with the canonical schema when no run
@@ -294,33 +286,15 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   def registerRollup(name: String, path: String, periods: Seq[Int]): Unit =
     withCatalogLock {
       import spark.implicits._
-      val next = loadRollupsUnlocked().filterNot(_.name == name) :+
-        RollupEntry(name, path, periods)
-      val ds = next.toDS()
-      swapIn(rollupsPath) { staging =>
-        ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging)
-      }
+      saveSmallTable(rollupsPath, (loadRollupsUnlocked().filterNot(_.name == name) :+
+        RollupEntry(name, path, periods)).toDS())
     }
 
-  def loadRollups(): Seq[RollupEntry] = loadRollupsUnlocked()
-
-  /** Crash-safe replacement of an arbitrary warehouse directory — the same
-    * staging+two-rename swap the segment data and catalog use, for derived
-    * artifacts (rollups). Pair reads with [[recoverDir]].
-    */
-  def replaceDir(path: String)(write: String => Unit): Unit =
-    swapIn(path)(write)
-
-  /** Self-heal a directory left mid-swap by a crashed [[replaceDir]]. */
-  def recoverDir(path: String): Unit = recoverSwap(path)
-
-  private def loadRollupsUnlocked(): Seq[RollupEntry] = {
+  /** Registered rollups, read without taking the catalog lock. */
+  def loadRollupsUnlocked(): Seq[RollupEntry] = {
     import spark.implicits._
-    recoverSwap(rollupsPath)
-    val (f, p) = fs(rollupsPath)
-    if (!f.exists(p)) Nil
-    else spark.read.parquet(rollupsPath).as[RollupEntry].collect().toSeq
-      .sortBy(_.name)
+    loadSmallTable(rollupsPath).fold(Seq.empty[RollupEntry])(
+      _.as[RollupEntry].collect().toSeq.sortBy(_.name))
   }
 
   /** Lineage DAG for a rule: nodes + edges via recursive parent walk with a

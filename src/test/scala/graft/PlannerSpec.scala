@@ -117,15 +117,16 @@ class PlannerSpec extends SparkSpec {
       "user_id", "total_transactions", "total_spent", "transaction_types")
     assert(store.write(7, seg) == 1L)
     assert(store.read(7).schema == Schemas.segmentOutput)
-    assert(store.writeEmpty(8) == 0L)
+    assert(store.write(8, seg.limit(0)) == 0L)
     assert(store.read(8).count() == 0 && store.read(8).schema == Schemas.segmentOutput)
 
     val entries = Seq(
       SegmentCatalogEntry(1, "s1", "segment_output_1", Seq(cAmount), Nil, None),
       SegmentCatalogEntry(4, "s4", "segment_output_4", Nil, Seq(1, 3), Some("intersection")),
       SegmentCatalogEntry(3, "s3", "segment_output_3", Seq(cDate, cHaving), Seq(1), Some("intersection")))
-    store.saveCatalog(entries)
-    store.updateMetadata(4, rowCount = 42, refreshedAt = "2026-08-12T00:00:00")
+    store.modifyCatalog(_ => (entries, ()))
+    store.modifyCatalog(cat => (cat.map(e => if (e.ruleId != 4) e else
+      e.copy(rowCount = 42, lastRefreshedAt = Some("2026-08-12T00:00:00"))), ()))
     val loaded = store.loadCatalog()
     assert(loaded.map(_.ruleId) == Seq(1, 3, 4))
     assert(loaded.find(_.ruleId == 4).get.rowCount == 42L)
@@ -144,7 +145,7 @@ class PlannerSpec extends SparkSpec {
     val store = new SegmentStore(spark, dir)
     val tx = Tables.transactions(spark, sf)
     RollupServing.materialize(store, tx, Seq(7, 14))
-    assert(store.loadRollups().map(_.periods) == Seq(Seq(7, 14)))
+    assert(store.loadRollupsUnlocked().map(_.periods) == Seq(Seq(7, 14)))
 
     // the REWRITE: the served plan reads only the rollup parquet — no raw
     // event scan, no JSON tier parse, no aggregation left to do

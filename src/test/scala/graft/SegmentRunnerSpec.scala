@@ -6,6 +6,7 @@ import graft.sources.SegmentStore
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end rule lifecycle: create → detect reuse → materialize → store. */
 class SegmentRunnerSpec extends SparkSpec {
@@ -291,6 +292,62 @@ class SegmentRunnerSpec extends SparkSpec {
       ("2026-08-12T00:00:00Z", 2L),
       ("2026-08-12T01:00:00Z", 2L),
       ("2026-08-12T02:00:00Z", 0L)))
+  }
+
+  test("concurrent createRule calls get distinct ids and all land in the catalog") {
+    val dir = Files.createTempDirectory("graft_runner_race").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val perThread = 4
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val threads = (1 to 2).map(t => new Thread(() =>
+      (1 to perThread).foreach { i =>
+        ids.add(runner.createRule(s"t$t-$i", Seq(cAmount))._1)
+      }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    val got = ids.asScala.toSeq
+    assert(got.size == 2 * perThread && got.distinct.size == got.size,
+      s"ids must be distinct, got $got")
+    assert(store.loadCatalog().map(_.ruleId).sorted == got.sorted,
+      "a rule created concurrently must not be lost from the catalog")
+  }
+
+  test("a rule throwing mid-batch rethrows; the rules refreshed before it stay committed") {
+    val dir = Files.createTempDirectory("graft_runner_fail").toString
+    val store = new SegmentStore(spark, dir)
+    var calls = 0
+    val failing: () => DataFrame = () => {
+      calls += 1
+      if (calls == 2) throw new IllegalStateException("source down")
+      tx()
+    }
+    val runner = new SegmentRunner(store, failing)
+    val (id1, _) = runner.createRule("first", Seq(cAmount))
+    val (id2, _) = runner.createRule("second", Seq(cTier))
+    val at = "2026-08-12T00:00:00Z"
+    intercept[IllegalStateException](runner.runAll(at))
+    val cat = store.loadCatalog()
+    val first = cat.find(_.ruleId == id1).get
+    assert(first.rowCount == 2L && first.lastRefreshedAt.contains(at))
+    assert(cat.find(_.ruleId == id2).get.rowCount == -1L, "the failed rule stays unrefreshed")
+    val h = store.runHistory().collect()
+      .map(r => (r.getAs[Long]("rule_id"), r.getAs[String]("refreshed_at"), r.getAs[Long]("row_count")))
+    assert(h.toSeq == Seq((id1, at, 2L)))
+  }
+
+  test("runAll commits the batch's run history as one file") {
+    val dir = Files.createTempDirectory("graft_runner_hist_batch").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    runner.createRule("r1", Seq(cAmount))
+    runner.createRule("r2", Seq(cTier))
+    runner.createRule("r3", Seq(Condition("transaction_amount", ">", "99999")))
+    def historyFiles(): Int =
+      Option(new java.io.File(dir, "_history").list()).fold(0)(_.count(_.endsWith(".parquet")))
+    val before = historyFiles()
+    assert(runner.runAll("2026-08-12T00:00:00Z").size == 3)
+    assert(historyFiles() - before == 1)
+    assert(store.runHistory().count() == 3L)
   }
 
   test("updateRule re-detects excluding self (R7)") {

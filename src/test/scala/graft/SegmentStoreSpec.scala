@@ -87,19 +87,22 @@ class SegmentStoreSpec extends SparkSpec {
     SegmentCatalogEntry(id, name, s"segment_output_$id",
       Seq(Condition("transaction_amount", ">", "500")), Nil, None, rows, None)
 
+  private def save(store: SegmentStore, entries: Seq[SegmentCatalogEntry]): Unit =
+    store.modifyCatalog(_ => (entries, ()))
+
   private def hfs(dir: String) = new org.apache.hadoop.fs.Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("catalog save survives a crash between the two swap renames (roll forward)") {
     val dir = Files.createTempDirectory("graft_crash_fwd").toString
     val store = new SegmentStore(spark, dir)
-    store.saveCatalog(Seq(entry(1L, "v1")))
+    save(store, Seq(entry(1L, "v1")))
 
     // Reconstruct the exact mid-swap crash state: the NEW catalog fully
     // written (with its _SUCCESS commit marker) under __staging, the OLD one
     // moved aside to __old, the target directory missing.
     val other = Files.createTempDirectory("graft_crash_src").toString
-    new SegmentStore(spark, other).saveCatalog(Seq(entry(1L, "v2", rows = 9L)))
+    save(new SegmentStore(spark, other), Seq(entry(1L, "v2", rows = 9L)))
     val fsys = hfs(dir)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     assert(fsys.rename(p(s"$other/_catalog"), p(s"$dir/_catalog__staging")))
@@ -110,14 +113,14 @@ class SegmentStoreSpec extends SparkSpec {
       "a committed staging copy must win (the save had finished writing)")
     assert(fsys.exists(p(s"$dir/_catalog")) && !fsys.exists(p(s"$dir/_catalog__old")),
       "recovery must leave a clean swapped-in state")
-    store.saveCatalog(Seq(entry(2L, "v3"))) // subsequent saves still work
+    save(store, Seq(entry(2L, "v3"))) // subsequent saves still work
     assert(store.loadCatalog().map(_.ruleId) == Seq(2L))
   }
 
   test("catalog save crash before the staging write committed rolls back") {
     val dir = Files.createTempDirectory("graft_crash_back").toString
     val store = new SegmentStore(spark, dir)
-    store.saveCatalog(Seq(entry(1L, "v1", rows = 3L)))
+    save(store, Seq(entry(1L, "v1", rows = 3L)))
 
     // Crash state: target moved aside, staging absent/uncommitted.
     val fsys = hfs(dir)
@@ -137,19 +140,20 @@ class SegmentStoreSpec extends SparkSpec {
     Files.writeString(lock, "pid=0\n")
     Files.setLastModifiedTime(lock,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 11 * 60 * 1000))
-    store.saveCatalog(Seq(entry(1L, "after-stale")))
+    save(store, Seq(entry(1L, "after-stale")))
     assert(store.loadCatalog().map(_.segmentName) == Seq("after-stale"))
     assert(!Files.exists(lock), "lock must be released after the save")
   }
 
-  test("concurrent updateCatalog calls do not lose updates (lock spans read-modify-write)") {
+  test("concurrent modifyCatalog calls do not lose updates (lock spans read-modify-write)") {
     val dir = Files.createTempDirectory("graft_cat_race").toString
     val store = new SegmentStore(spark, dir)
-    store.saveCatalog(Seq(entry(1L, "counter", rows = 0L)))
+    save(store, Seq(entry(1L, "counter", rows = 0L)))
     val perThread = 6
     val threads = Seq.fill(2)(new Thread(() =>
       (1 to perThread).foreach { _ =>
-        store.updateCatalog(1L)(e => e.copy(rowCount = e.rowCount + 1))
+        store.modifyCatalog(cat => (cat.map(e =>
+          if (e.ruleId == 1L) e.copy(rowCount = e.rowCount + 1) else e), ()))
       }))
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(store.loadCatalog().head.rowCount == 2L * perThread,
