@@ -946,7 +946,7 @@ object SparkEntry {
         "FROM s GROUP BY 1, 2 ORDER BY user_id, session_id")),
 
     // Rollup SERVING under the hash gate: materialize the windowed rollup
-    // into a scratch warehouse, register it, and answer the 14-day request
+    // into a scratch warehouse and answer the 14-day request
     // through the planner rewrite — the served plan reads only the rollup
     // parquet, while the oracle computes from RAW events. Hash equality is
     // the proof that serving substitutes plans, not approximations.

@@ -93,9 +93,10 @@ object Planner {
       case SegmentPlan.Compound(parents, op, residual) =>
         val parentDfs = parents.map(loadParent)
         val inputs = residualMode match {
-          case ApplyResidual if residual.nonEmpty &&
-              !ConditionCompiler.compile(residual, mode).isVacuous =>
-            parentDfs :+ SegmentEngine.materializeBase(tx, residual, mode)
+          case ApplyResidual if residual.nonEmpty =>
+            val compiled = ConditionCompiler.compile(residual, mode)
+            if (compiled.isVacuous) parentDfs
+            else parentDfs :+ SegmentEngine.materializeCompiled(tx, compiled)
           case _ => parentDfs
         }
         // A single resolved input (rule exactly covered by one existing

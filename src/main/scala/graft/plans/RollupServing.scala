@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.model.Condition
 import graft.operators.{ConditionCompiler, Rollups}
-import graft.sources.{RollupEntry, SegmentStore}
+import graft.sources.SegmentStore
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,38 +26,48 @@ import org.apache.spark.sql.functions._
   */
 object RollupServing {
 
-  /** Build the user-windows rollup, write it under the store's warehouse,
-    * and register it in the rollup catalog. Returns the registration.
+  /** The rollup lives beside the segments, one `period_days=<p>` directory
+    * per materialized window; a window is served iff its directory exists.
     */
-  def materialize(store: SegmentStore, tx: DataFrame, periods: Seq[Int],
-      name: String = "user_windows"): RollupEntry = {
-    val path = s"${store.warehousePath}/rollup_$name"
-    // same crash-safe swap as segments/catalog: a reader never sees a
-    // half-written rollup, and a crashed refresh leaves the previous one
-    store.swapIn(path) { staging =>
+  private def rollupPath(store: SegmentStore): String =
+    s"${store.warehousePath}/rollup_user_windows"
+
+  /** Build the user-windows rollup and swap it in under the store's
+    * warehouse (the same [[SegmentStore.swapIn]] as segments and the
+    * catalog): a reader never sees a half-written rollup, and a failed
+    * build leaves the previous one. A crash between the swap's renames
+    * leaves no rollup, so reads fall back to the raw scan until the next
+    * `materialize` publishes it again.
+    */
+  def materialize(store: SegmentStore, tx: DataFrame, periods: Seq[Int]): Unit =
+    store.swapIn(rollupPath(store)) { staging =>
       Rollups.userWindows(tx, periods)
-        .write.mode(SaveMode.Overwrite).parquet(staging)
+        .write.mode(SaveMode.Overwrite).partitionBy("period_days").parquet(staging)
     }
-    store.registerRollup(name, path, periods)
-    RollupEntry(name, path, periods)
+
+  /** The materialized rows of one window in [[Rollups.userWindows]]' column
+    * order, or None when no rollup holds that window. The plan scans only
+    * the rollup parquet; the period filter prunes it to one directory.
+    */
+  private def window(spark: SparkSession, store: SegmentStore,
+      periodDays: Int): Option[DataFrame] = {
+    val root = rollupPath(store)
+    val dir = new org.apache.hadoop.fs.Path(s"$root/period_days=$periodDays")
+    if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) None
+    else Some(spark.read.parquet(root)
+      .filter(col("period_days") === periodDays)
+      // partitionBy moved period_days last; restore the build's order
+      .select(Seq("user_id", "period_days", "total_transactions", "total_amount",
+        "last_transaction_date", "city_tier", "favorite_category").map(col): _*))
   }
 
   /** The rewrite: per-user totals for a trailing `periodDays` window are
-    * answered from a registered rollup iff one materializes that exact
-    * window; otherwise fall back to computing from the raw scan. The
-    * served plan reads ONLY the rollup parquet (period pruning pushes to
-    * the scan).
+    * answered from the rollup iff it materializes that exact window;
+    * otherwise computed from the raw scan.
     */
   def userWindowTotals(spark: SparkSession, store: SegmentStore,
       tx: => DataFrame, periodDays: Int): DataFrame =
-    store.loadRollupsUnlocked().find(_.periods.contains(periodDays)) match {
-      case Some(e) =>
-        store.recoverSwap(e.path) // heal a crashed refresh before reading
-        spark.read.parquet(e.path)
-          .filter(col("period_days") === periodDays)
-      case None =>
-        Rollups.userWindows(tx, Seq(periodDays))
-    }
+    window(spark, store, periodDays).getOrElse(Rollups.userWindows(tx, Seq(periodDays)))
 
   /** Serve a window-scoped segment rule — HAVING-style conditions over the
     * trailing-window totals (`total_spend`, `transaction_count`) — from the
@@ -73,12 +83,9 @@ object RollupServing {
     // aggregated without them cannot serve the request. Malformed/skipped
     // conditions don't block: the base path skips them identically (Q10).
     if (compiled.where.nonEmpty) None
-    else store.loadRollupsUnlocked().find(_.periods.contains(periodDays)).map { e =>
-      store.recoverSwap(e.path)
-      val base = spark.read.parquet(e.path)
-        .filter(col("period_days") === periodDays)
-        .select(col("user_id"), col("total_transactions"),
-          col("total_amount").as(ConditionCompiler.SpentCol))
+    else window(spark, store, periodDays).map { w =>
+      val base = w.select(col("user_id"), col("total_transactions"),
+        col("total_amount").as(ConditionCompiler.SpentCol))
       compiled.having.fold(base)(base.filter)
     }
   }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet-backed store for materialized segments + catalog metadata,
@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
   * update (reference: backend/app/processor/spark_processor.py:169-203 and
   * :139-167).
   *
-  * Layout: `$warehouse/segment_output_<ruleId>/` (one parquet dir per rule,
-  * overwritten on refresh) and `$warehouse/_catalog/` (tiny parquet of
-  * catalog entries). Parquet overwrite replaces the DROP TABLE + recreate
-  * dance; an empty result writes an empty file with the canonical 4-column
-  * schema so downstream readers never fail (S6, SURVEY Q9).
+  * Layout: `$warehouse/segment_output_<ruleId>/` (one parquet dir per rule)
+  * and `$warehouse/_catalog/` (tiny parquet of catalog entries). A refresh
+  * never overwrites a segment in place: the new content is written beside
+  * it and swapped in ([[swapIn]]), so a failed refresh leaves the previous
+  * segment readable, like the reference's transactional table replace. An
+  * empty result writes an empty file with the canonical 4-column schema so
+  * downstream readers never fail (S6, SURVEY Q9).
   */
 final class SegmentStore(spark: SparkSession, warehouse: String) {
 
@@ -35,50 +37,36 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     * the reference's `row_count` update, S7). Null/empty-safe: an empty
     * result stores a zero-row file with the canonical schema (Q9).
     *
-    * The count rides the write itself via an `observe` metric — one pass,
-    * no re-read of what was just written (at 100 TB the old
-    * write-then-count-the-parquet shape doubled the I/O per refresh).
+    * The segment is swapped in, so `df` may read the segment it replaces
+    * (the streaming upsert reads, merges and rewrites it). The count rides
+    * the write itself via an `observe` metric — one pass, no re-read of
+    * what was just written.
     */
   def write(ruleId: Long, df: DataFrame): Long =
-    writeCounted(df, s"seg_write_$ruleId", path(ruleId))
+    swapIn(path(ruleId)) { dir =>
+      val obs = org.apache.spark.sql.Observation(s"seg_write_$ruleId")
+      // names select the canonical columns, casts pin their types
+      df.select(Schemas.segmentOutput.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+        .observe(obs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(dir)
+      obs.get("n").asInstanceOf[Long]
+    }
 
-  /** Replace a segment whose NEW content may derive from its CURRENT
-    * stored content (the streaming upsert shape: read → merge → rewrite).
-    * `write`'s in-place overwrite can't serve that caller: it deletes the
-    * directory the plan still has to read, and a crash mid-write loses
-    * the previous state entirely. Here the new content is written to a
-    * staging directory first (the old data stays readable throughout),
-    * then swapped in with two renames; a crash between them leaves the
-    * previous state recoverable under `__old`, never nothing. Renames
-    * are atomic on HDFS/local; on object stores (s3a) they are
-    * copy-based — pair with a manifest commit protocol there.
-    */
-  def replace(ruleId: Long, df: DataFrame): Long =
-    swapIn(path(ruleId))(writeCounted(df, s"seg_replace_${ruleId}_${System.nanoTime()}", _))
-
-  /** Align `df` to the canonical segment schema (names select columns,
-    * casts pin types) and write it to `dir`, counting rows on the way.
-    */
-  private def writeCounted(df: DataFrame, name: String, dir: String): Long = {
-    val obs = org.apache.spark.sql.Observation(name)
-    df.select(Schemas.segmentOutput.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(dir)
-    obs.get("n").asInstanceOf[Long]
-  }
-
-  /** Crash-safe replacement of a warehouse directory, shared by segment
-    * `replace`, the catalog, the rollup registry and rollup data:
+  /** Crash-safe replacement of a warehouse directory, the one way one is
+    * published. Its three users are segment [[write]]s, the catalog
+    * ([[modifyCatalog]]) and `RollupServing.materialize`.
     * `writeStaging` materializes the new content beside the target (its
     * result is returned), then the old data is moved aside and the staging
-    * directory renamed in. At no point is the target's previous state
-    * deleted before its replacement is fully written, so a crash at any step
-    * leaves a recoverable directory (pair reads with [[recoverSwap]]).
+    * directory renamed in. If `writeStaging` throws, the target is
+    * untouched. At no point is the target's previous state deleted before
+    * its replacement is fully written; a crash between the two renames
+    * leaves the target missing until the next swap publishes it (only the
+    * catalog is repaired on read, by the lock holder: [[recoverSwap]]).
+    * Renames are atomic on HDFS/local; on object stores (s3a) they copy.
     */
   def swapIn[A](target: String)(writeStaging: String => A): A = {
     val (fsys, tgt) = fs(target)
-    val staging = new org.apache.hadoop.fs.Path(s"${target}__staging")
-    val old = new org.apache.hadoop.fs.Path(s"${target}__old")
+    val (staging, old) = swapSiblings(tgt)
     fsys.delete(staging, true) // leftover from a previous crash, superseded
     val result = writeStaging(staging.toString)
     fsys.delete(old, true)
@@ -89,17 +77,21 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     result
   }
 
+  /** The `__staging` and `__old` directories [[swapIn]] moves a target through. */
+  private def swapSiblings(target: org.apache.hadoop.fs.Path) =
+    (target.suffix("__staging"), target.suffix("__old"))
+
   /** Repair the target of an interrupted [[swapIn]]. Only the window between
     * the two renames leaves the target missing; recovery rolls FORWARD to
     * the fully-written staging copy when its `_SUCCESS` commit marker is
     * present, else rolls BACK to the preserved previous state. A no-op
-    * whenever the target exists.
+    * whenever the target exists. Runs only under the catalog lock: an
+    * unlocked repair could rename `__staging` between a writer's renames.
     */
-  def recoverSwap(target: String): Unit = {
+  private def recoverSwap(target: String): Unit = {
     val (fsys, tgt) = fs(target)
     if (fsys.exists(tgt)) return
-    val staging = new org.apache.hadoop.fs.Path(s"${target}__staging")
-    val old = new org.apache.hadoop.fs.Path(s"${target}__old")
+    val (staging, old) = swapSiblings(tgt)
     if (fsys.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))) {
       require(fsys.rename(staging, tgt), s"recovery rename $staging -> $tgt failed")
       fsys.delete(old, true)
@@ -109,21 +101,6 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     }
   }
 
-  /** Small control-plane tables (`_catalog`, `_rollups`): one parquet file,
-    * replaced whole through [[swapIn]].
-    */
-  private def saveSmallTable(target: String, ds: Dataset[_]): Unit =
-    swapIn(target)(staging => ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging))
-
-  /** Read a small table after self-healing an interrupted save; None when
-    * it was never written.
-    */
-  private def loadSmallTable(target: String): Option[DataFrame] = {
-    recoverSwap(target)
-    val (f, p) = fs(target)
-    if (f.exists(p)) Some(spark.read.parquet(target)) else None
-  }
-
   def read(ruleId: Long): DataFrame = spark.read.parquet(path(ruleId))
 
   def exists(ruleId: Long): Boolean = {
@@ -131,10 +108,14 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   }
 
   /** Remove a segment's materialized parquet (rule DELETE, see
-    * SegmentRunner.deleteRule). No-op when nothing was materialized.
+    * SegmentRunner.deleteRule), with the `__staging`/`__old` siblings a
+    * failed or crashed swap can leave. False when nothing was materialized.
     */
   def delete(ruleId: Long): Boolean = {
-    val (f, p) = fs(path(ruleId)); f.delete(p, true)
+    val (f, p) = fs(path(ruleId))
+    val (staging, old) = swapSiblings(p)
+    Seq(staging, old).foreach(f.delete(_, true))
+    f.delete(p, true)
   }
 
   // ---- catalog --------------------------------------------------------------
@@ -147,9 +128,13 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   //    transaction and no concurrent writer's update is lost. A caller makes
   //    one call per operation, so each operation rewrites the catalog O(1)
   //    times (a whole refresh batch included);
+  //  - readers take the same lock (`loadCatalog`), so a read never sees the
+  //    catalog mid-swap and the lock holder is the only one that repairs an
+  //    interrupted swap (readers and writers serialize; a versioned catalog
+  //    pointer is the route if concurrent readers ever dominate);
   //  - every save goes through the same staging + two-rename swap as segment
   //    data, so no crash window deletes the previous catalog before its
-  //    replacement is durable, and loadCatalog self-heals the mid-swap state;
+  //    replacement is durable;
   //  - the lock is a create-exclusive lock file (atomic on HDFS and local FS;
   //    on object stores without atomic create-no-overwrite, e.g. raw S3,
   //    deploy with a single catalog writer instead — the data plane is
@@ -164,16 +149,22 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   def modifyCatalog[A](f: Seq[SegmentCatalogEntry] => (Seq[SegmentCatalogEntry], A)): A =
     withCatalogLock {
       import spark.implicits._
-      val (next, result) = f(loadCatalog())
-      saveSmallTable(catalogPath, next.map(e => FlatEntry(
+      val (next, result) = f(loadCatalogLocked())
+      val flat = next.map(e => FlatEntry(
         e.ruleId, e.segmentName, e.tableName,
         ConditionCodec.encodeAll(e.conditions),
         e.dependsOn, e.operation.getOrElse(""),
         e.rowCount, e.lastRefreshedAt.getOrElse(""),
         e.schedule, e.isActive, e.nextRunAt.getOrElse(""),
-        e.sqlQuery.getOrElse(""))).toDS())
+        e.sqlQuery.getOrElse(""))).toDS()
+      swapIn(catalogPath)(flat.coalesce(1).write.mode(SaveMode.Overwrite).parquet(_))
       result
     }
+
+  /** The catalog as of the last committed [[modifyCatalog]], read under the
+    * catalog lock so it never meets a save mid-swap.
+    */
+  def loadCatalog(): Seq[SegmentCatalogEntry] = withCatalogLock(loadCatalogLocked())
 
   /** Serialize catalog mutations across processes. Acquisition is an atomic
     * create-no-overwrite of `_catalog.lock`; a lock older than
@@ -224,10 +215,16 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     "schedule" -> lit("DAILY"), "isActive" -> lit(true), "nextRunAt" -> lit(""),
     "sqlQuery" -> lit(""))
 
-  def loadCatalog(): Seq[SegmentCatalogEntry] = {
+  /** Read the catalog, first repairing an interrupted save. Callers hold
+    * the catalog lock.
+    */
+  private def loadCatalogLocked(): Seq[SegmentCatalogEntry] = {
     import spark.implicits._
-    loadSmallTable(catalogPath).fold(Seq.empty[SegmentCatalogEntry]) { raw =>
-      catalogDefaults.foldLeft(raw) {
+    recoverSwap(catalogPath)
+    val (f, p) = fs(catalogPath)
+    if (!f.exists(p)) Seq.empty
+    else {
+      catalogDefaults.foldLeft(spark.read.parquet(catalogPath)) {
         case (df, (c, d)) =>
           if (df.columns.contains(c)) df else df.withColumn(c, d)
       }.as[FlatEntry].collect().toSeq
@@ -272,31 +269,6 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     else spark.read.parquet(historyPath)
   }
 
-  // ---- rollup registry -------------------------------------------------------
-  //
-  // Materialized rollups (Rollups.userWindows output) registered so the
-  // planner can SERVE window-scoped reads from them instead of rescanning
-  // raw events (the reference materializes aggregate tables for exactly
-  // this, backend/create_aggregates.py:19-104). Same crash-safe swap and
-  // lock discipline as the rule catalog.
-
-  private val rollupsPath = s"$warehouse/_rollups"
-
-  /** Register (or re-register) a materialized rollup under `name`. */
-  def registerRollup(name: String, path: String, periods: Seq[Int]): Unit =
-    withCatalogLock {
-      import spark.implicits._
-      saveSmallTable(rollupsPath, (loadRollupsUnlocked().filterNot(_.name == name) :+
-        RollupEntry(name, path, periods)).toDS())
-    }
-
-  /** Registered rollups, read without taking the catalog lock. */
-  def loadRollupsUnlocked(): Seq[RollupEntry] = {
-    import spark.implicits._
-    loadSmallTable(rollupsPath).fold(Seq.empty[RollupEntry])(
-      _.as[RollupEntry].collect().toSeq.sortBy(_.name))
-  }
-
   /** Lineage DAG for a rule: nodes + edges via recursive parent walk with a
     * cycle guard (reference: backend/app/api/segments.py:127-157, R6).
     */
@@ -323,11 +295,6 @@ object SegmentStore {
   private def jvmLock(warehouse: String): Object =
     jvmLocks.computeIfAbsent(warehouse, _ => new Object)
 }
-
-/** One registered rollup: where its parquet lives and which trailing
-  * windows (period_days values) it materializes.
-  */
-case class RollupEntry(name: String, path: String, periods: Seq[Int])
 
 /** One recorded materialization (run-history row). Top-level so Spark can
   * derive an Encoder for it.

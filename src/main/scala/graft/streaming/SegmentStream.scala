@@ -100,12 +100,11 @@ object SegmentStream {
     * revisions delete it (the retraction path a non-monotone HAVING
     * needs). Plain parquet has no MERGE, so the upsert is
     * read-existing → anti-join the batch's users → union the batch's
-    * members → `SegmentStore.replace`: the merged content is written to a
+    * members → `SegmentStore.write`, which writes the merged content to a
     * staging directory while the old data stays readable (the plan READS
-    * the directory being replaced), then swapped in by rename — a crash
-    * leaves the previous state recoverable, never an empty store, and a
-    * restart that replays the batch re-derives the same merge
-    * (idempotent). Per-user state lives in the streaming checkpoint.
+    * the directory being replaced) and swaps it in by rename — a failed
+    * batch leaves the previous state, never an empty store, and a restart
+    * that replays the batch re-derives the same merge (idempotent). Per-user state lives in the streaming checkpoint.
     * Empty micro-batches (restart replays, no-data triggers) skip the
     * rewrite entirely. Returns the configured writer — caller sets
     * `option("checkpointLocation", ...)` and `.start()`s it.
@@ -126,7 +125,7 @@ object SegmentStream {
           val next = existing
             .join(broadcast(touched), Seq("user_id"), "left_anti")
             .unionByName(batch.filter(col("in_segment")).drop("in_segment"))
-          store.replace(ruleId, next)
+          store.write(ruleId, next)
           ()
         }
       }

@@ -145,7 +145,9 @@ class PlannerSpec extends SparkSpec {
     val store = new SegmentStore(spark, dir)
     val tx = Tables.transactions(spark, sf)
     RollupServing.materialize(store, tx, Seq(7, 14))
-    assert(store.loadRollupsUnlocked().map(_.periods) == Seq(Seq(7, 14)))
+    assert(RollupServing.serveSegment(spark, store, 7, Nil).nonEmpty)
+    assert(RollupServing.serveSegment(spark, store, 14, Nil).nonEmpty)
+    assert(RollupServing.serveSegment(spark, store, 21, Nil).isEmpty)
 
     // the REWRITE: the served plan reads only the rollup parquet — no raw
     // event scan, no JSON tier parse, no aggregation left to do
@@ -194,6 +196,30 @@ class PlannerSpec extends SparkSpec {
       conds :+ Condition("transaction_amount", ">", "10")).isEmpty)
     // unmaterialized window: refuse, caller takes the base path
     assert(RollupServing.serveSegment(spark, store, 21, conds).isEmpty)
+  }
+
+  test("rollup crash window: a swapped-out rollup falls back to raw until the next materialize") {
+    import graft.plans.RollupServing
+    import graft.sources.Tables
+    val dir = Files.createTempDirectory("graft_rollup_crash").toString
+    val store = new SegmentStore(spark, dir)
+    val tx = Tables.transactions(spark, sf)
+    RollupServing.materialize(store, tx, Seq(14))
+
+    // the state a crash between the swap's two renames leaves behind
+    val fsys = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
+    assert(fsys.rename(p("rollup_user_windows"), p("rollup_user_windows__old")))
+
+    assert(RollupServing.serveSegment(spark, store, 14, Nil).isEmpty)
+    val plan = RollupServing.userWindowTotals(spark, store, tx, 14)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("events") && !plan.contains("rollup_user_windows"),
+      s"must plan the raw scan:\n$plan")
+
+    RollupServing.materialize(store, tx, Seq(14))
+    assert(RollupServing.serveSegment(spark, store, 14, Nil).nonEmpty)
+    assert(!fsys.exists(p("rollup_user_windows__old")))
   }
 
   test("condition codec round-trips scalars, lists, value2") {

@@ -196,8 +196,11 @@ class SegmentRunnerSpec extends SparkSpec {
     intercept[IllegalArgumentException](runner.deleteRule(id1))
     assert(store.exists(id1))
 
+    // a crashed swap's leftover goes with the segment
+    val staging = java.nio.file.Paths.get(dir, s"segment_output_${id3}__staging")
+    Files.createDirectories(staging)
     runner.deleteRule(id3)
-    assert(runner.getRule(id3).isEmpty && !store.exists(id3))
+    assert(runner.getRule(id3).isEmpty && !store.exists(id3) && !Files.exists(staging))
     runner.deleteRule(id1) // dependent gone ⇒ delete proceeds
     assert(runner.getRule(id1).isEmpty && !store.exists(id1))
     assert(runner.listRules().map(_.ruleId) == Seq(id2))
@@ -333,6 +336,53 @@ class SegmentRunnerSpec extends SparkSpec {
     val h = store.runHistory().collect()
       .map(r => (r.getAs[Long]("rule_id"), r.getAs[String]("refreshed_at"), r.getAs[Long]("row_count")))
     assert(h.toSeq == Seq((id1, at, 2L)))
+  }
+
+  test("a refresh failing mid-write keeps the previous segment and its row count") {
+    val dir = Files.createTempDirectory("graft_runner_keep").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val (id, _) = runner.createRule("kept", Seq(cAmount))
+    assert(runner.run(id, "2026-08-12T00:00:00Z") == 2L)
+    val before = store.read(id).orderBy("user_id").collect().toSeq
+
+    // Clustered by user_id, the rule's aggregate needs no further shuffle,
+    // so the UDF throws inside the write's own stage, after an in-place
+    // overwrite would already have deleted the old files.
+    val boom = udf((a: Double) => if (a >= 0) throw new IllegalStateException("source down") else a)
+      .asNondeterministic()
+    val failing = new SegmentRunner(store,
+      () => tx().repartition($"user_id").withColumn("amount", boom($"amount")))
+    intercept[org.apache.spark.SparkException](failing.run(id, "2026-08-12T01:00:00Z"))
+    assert(store.read(id).orderBy("user_id").collect().toSeq == before)
+    assert(store.loadCatalog().find(_.ruleId == id).get.rowCount == 2L)
+  }
+
+  test("concurrent readers see a whole catalog while rules are created") {
+    val dir = Files.createTempDirectory("graft_runner_readers").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def guarded(body: => Unit): Thread = new Thread(() =>
+      try body catch { case t: Throwable => errors.add(t) })
+    val writer = guarded(try (1 to 8).foreach(i =>
+      runner.createRule(s"r$i", Seq(Condition("transaction_amount", ">", s"${i * 100}"))))
+      finally done.set(true))
+    val listings = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = guarded {
+      var last = false
+      while (!last) {
+        last = done.get()
+        val ids = runner.listRules(1, 100).map(_.ruleId)
+        assert(ids == (1L to ids.size.toLong), s"listing $ids")
+        ids.lastOption.foreach(id => assert(runner.getRule(id).exists(_.ruleId == id)))
+        listings.incrementAndGet()
+      }
+    }
+    Seq(writer, reader).foreach(_.start()); Seq(writer, reader).foreach(_.join())
+    assert(errors.isEmpty, errors.asScala.mkString("\n"))
+    assert(listings.get() >= 1 && runner.listRules(1, 100).map(_.ruleId) == (1L to 8L))
   }
 
   test("runAll commits the batch's run history as one file") {
