@@ -50,13 +50,13 @@ object Snapshot {
   //
   // Directory layout: base/v=N/ (one immutable parquet dir per published
   // version) + a tiny _LATEST pointer file. A version becomes visible ONLY
-  // when the pointer lands (SegmentStore's move-aside rename pattern, with
-  // a __old fallback so a crash mid-swap still resolves), so readers never
-  // observe a half-written corpus. `v=N` is deliberately partition syntax:
-  // `spark.read.parquet(base)` reads ALL versions with a `v` column for
-  // cross-version queries, while underscore-prefixed pointer files stay
-  // invisible to the scanner. Single-writer cadence (like any OPTIMIZE /
-  // publish job); readers need no lock at any scale.
+  // when the pointer lands (published by SegmentStore.swapIn; readers fall
+  // back to its `__old` sibling, so a crash mid-swap still resolves), so
+  // readers never observe a half-written corpus. `v=N` is deliberately
+  // partition syntax: `spark.read.parquet(base)` reads ALL versions with a
+  // `v` column for cross-version queries, while underscore-prefixed pointer
+  // files stay invisible to the scanner. Single-writer cadence (like any
+  // OPTIMIZE / publish job); readers need no lock at any scale.
 
   private val Ptr = "_LATEST"
   private val Log = "_VERSIONS"
@@ -87,21 +87,17 @@ object Snapshot {
       p: org.apache.hadoop.fs.Path): Option[Long] =
     readSmall(fsys, p).map(_.toLong)
 
-  /** Move-aside atomic swap for a small metadata file (pointer/log): write
-    * `content` to `name__tmp`, shuffle the live file aside, rename in.
+  /** Publish a small metadata file (pointer/log) through
+    * [[graft.sources.SegmentStore.swapIn]]: `content` lands in
+    * `name__staging`, the live file moves aside to `name__old`, and the
+    * staging file is renamed in.
     */
   private def swapSmall(fsys: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path, name: String, content: String): Unit = {
-    val (tmp, live, old) = (new org.apache.hadoop.fs.Path(base, name + "__tmp"),
-      new org.apache.hadoop.fs.Path(base, name),
-      new org.apache.hadoop.fs.Path(base, name + "__old"))
-    val out = fsys.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    fsys.delete(old, false) // superseded crash leftover
-    if (fsys.exists(live)) require(fsys.rename(live, old), s"move-aside $live failed")
-    require(fsys.rename(tmp, live), s"swap-in $live failed")
-    fsys.delete(old, false)
-  }
+      base: org.apache.hadoop.fs.Path, name: String, content: String): Unit =
+    graft.sources.SegmentStore.swapIn(fsys, new org.apache.hadoop.fs.Path(base, name)) { tmp =>
+      val out = fsys.create(tmp, true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
 
   /** Every version that was ever POINTER TARGET: the `_VERSIONS` log (one
     * line per publish), unioned with the live pointer — the log write

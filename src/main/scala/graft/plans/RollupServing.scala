@@ -39,11 +39,14 @@ object RollupServing {
     * leaves no rollup, so reads fall back to the raw scan until the next
     * `materialize` publishes it again.
     */
-  def materialize(store: SegmentStore, tx: DataFrame, periods: Seq[Int]): Unit =
-    store.swapIn(rollupPath(store)) { staging =>
+  def materialize(store: SegmentStore, tx: DataFrame, periods: Seq[Int]): Unit = {
+    val target = new org.apache.hadoop.fs.Path(rollupPath(store))
+    SegmentStore.swapIn(target.getFileSystem(tx.sparkSession.sparkContext.hadoopConfiguration),
+        target) { staging =>
       Rollups.userWindows(tx, periods)
-        .write.mode(SaveMode.Overwrite).partitionBy("period_days").parquet(staging)
+        .write.mode(SaveMode.Overwrite).partitionBy("period_days").parquet(staging.toString)
     }
+  }
 
   /** The materialized rows of one window in [[Rollups.userWindows]]' column
     * order, or None when no rollup holds that window. The plan scans only

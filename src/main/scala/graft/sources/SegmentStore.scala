@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.model._
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,12 +11,13 @@ import org.apache.spark.sql.functions._
   * :139-167).
   *
   * Layout: `$warehouse/segment_output_<ruleId>/` (one parquet dir per rule)
-  * and `$warehouse/_catalog/` (tiny parquet of catalog entries). A refresh
-  * never overwrites a segment in place: the new content is written beside
-  * it and swapped in ([[swapIn]]), so a failed refresh leaves the previous
-  * segment readable, like the reference's transactional table replace. An
-  * empty result writes an empty file with the canonical 4-column schema so
-  * downstream readers never fail (S6, SURVEY Q9).
+  * and `$warehouse/_catalog.json` (one JSON document of catalog entries,
+  * read and written on the driver, never by a Spark job). A refresh never
+  * overwrites a segment in place: the new content is written beside it and
+  * swapped in ([[SegmentStore.swapIn]]), so a failed refresh leaves the
+  * previous segment readable, like the reference's transactional table
+  * replace. An empty result writes an empty file with the canonical
+  * 4-column schema so downstream readers never fail (S6, SURVEY Q9).
   */
 final class SegmentStore(spark: SparkSession, warehouse: String) {
 
@@ -28,8 +30,8 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     * s3a://, ...), unlike `java.io.File`, which silently only ever works on
     * the local filesystem.
     */
-  private def fs(p: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
+  private def fs(p: String): (FileSystem, Path) = {
+    val hp = new Path(p)
     (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
   }
 
@@ -42,62 +44,15 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     * the write itself via an `observe` metric — one pass, no re-read of
     * what was just written.
     */
-  def write(ruleId: Long, df: DataFrame): Long =
-    swapIn(path(ruleId)) { dir =>
+  def write(ruleId: Long, df: DataFrame): Long = {
+    val (fsys, p) = fs(path(ruleId))
+    SegmentStore.swapIn(fsys, p) { dir =>
       val obs = org.apache.spark.sql.Observation(s"seg_write_$ruleId")
       // names select the canonical columns, casts pin their types
       df.select(Schemas.segmentOutput.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
         .observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+        .write.mode(SaveMode.Overwrite).parquet(dir.toString)
       obs.get("n").asInstanceOf[Long]
-    }
-
-  /** Crash-safe replacement of a warehouse directory, the one way one is
-    * published. Its three users are segment [[write]]s, the catalog
-    * ([[modifyCatalog]]) and `RollupServing.materialize`.
-    * `writeStaging` materializes the new content beside the target (its
-    * result is returned), then the old data is moved aside and the staging
-    * directory renamed in. If `writeStaging` throws, the target is
-    * untouched. At no point is the target's previous state deleted before
-    * its replacement is fully written; a crash between the two renames
-    * leaves the target missing until the next swap publishes it (only the
-    * catalog is repaired on read, by the lock holder: [[recoverSwap]]).
-    * Renames are atomic on HDFS/local; on object stores (s3a) they copy.
-    */
-  def swapIn[A](target: String)(writeStaging: String => A): A = {
-    val (fsys, tgt) = fs(target)
-    val (staging, old) = swapSiblings(tgt)
-    fsys.delete(staging, true) // leftover from a previous crash, superseded
-    val result = writeStaging(staging.toString)
-    fsys.delete(old, true)
-    if (fsys.exists(tgt))
-      require(fsys.rename(tgt, old), s"rename $tgt -> $old failed")
-    require(fsys.rename(staging, tgt), s"rename $staging -> $tgt failed")
-    fsys.delete(old, true)
-    result
-  }
-
-  /** The `__staging` and `__old` directories [[swapIn]] moves a target through. */
-  private def swapSiblings(target: org.apache.hadoop.fs.Path) =
-    (target.suffix("__staging"), target.suffix("__old"))
-
-  /** Repair the target of an interrupted [[swapIn]]. Only the window between
-    * the two renames leaves the target missing; recovery rolls FORWARD to
-    * the fully-written staging copy when its `_SUCCESS` commit marker is
-    * present, else rolls BACK to the preserved previous state. A no-op
-    * whenever the target exists. Runs only under the catalog lock: an
-    * unlocked repair could rename `__staging` between a writer's renames.
-    */
-  private def recoverSwap(target: String): Unit = {
-    val (fsys, tgt) = fs(target)
-    if (fsys.exists(tgt)) return
-    val (staging, old) = swapSiblings(tgt)
-    if (fsys.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))) {
-      require(fsys.rename(staging, tgt), s"recovery rename $staging -> $tgt failed")
-      fsys.delete(old, true)
-    } else if (fsys.exists(old)) {
-      require(fsys.rename(old, tgt), s"recovery rename $old -> $tgt failed")
-      fsys.delete(staging, true)
     }
   }
 
@@ -113,7 +68,7 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     */
   def delete(ruleId: Long): Boolean = {
     val (f, p) = fs(path(ruleId))
-    val (staging, old) = swapSiblings(p)
+    val (staging, old) = SegmentStore.swapSiblings(p)
     Seq(staging, old).foreach(f.delete(_, true))
     f.delete(p, true)
   }
@@ -121,26 +76,31 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   // ---- catalog --------------------------------------------------------------
   //
   // The catalog is the control plane's only source of truth (the reference
-  // gets crash-safety for free from SQLite's transactionality,
-  // backend/app/models/rule_engine.py:45-95). Here:
+  // keeps it in SQLite, each rule's conditions a JSON list of
+  // `{field, operator, value, value2?}` objects,
+  // backend/app/models/rule_engine.py:45-95). Here it is one JSON document,
+  // `_catalog.json`, that the driver reads and writes through the Hadoop
+  // FileSystem API — no Spark job touches it:
   //  - `modifyCatalog` is the ONE mutator: it loads, applies a function and
   //    saves, all under the catalog lock, so every read-modify-write is a
   //    transaction and no concurrent writer's update is lost. A caller makes
   //    one call per operation, so each operation rewrites the catalog O(1)
   //    times (a whole refresh batch included);
-  //  - readers take the same lock (`loadCatalog`), so a read never sees the
-  //    catalog mid-swap and the lock holder is the only one that repairs an
-  //    interrupted swap (readers and writers serialize; a versioned catalog
-  //    pointer is the route if concurrent readers ever dominate);
+  //  - readers take the same lock (`loadCatalog`), so a read never meets a
+  //    save mid-swap. The lock covers only driver-side file I/O and the
+  //    caller's in-memory update (milliseconds), so readers and writers
+  //    serialize cheaply;
   //  - every save goes through the same staging + two-rename swap as segment
   //    data, so no crash window deletes the previous catalog before its
-  //    replacement is durable;
+  //    replacement is durable. Reads never rename: a read that finds the
+  //    swap interrupted reads the newest complete file, and the next save
+  //    publishes cleanly;
   //  - the lock is a create-exclusive lock file (atomic on HDFS and local FS;
   //    on object stores without atomic create-no-overwrite, e.g. raw S3,
   //    deploy with a single catalog writer instead — the data plane is
   //    unaffected either way).
 
-  private val catalogPath = s"$warehouse/_catalog"
+  private val catalogPath = s"$warehouse/_catalog.json"
 
   /** Transactionally rewrite the catalog: `f` receives the entries loaded
     * under the lock and returns the entries to save plus a result. If `f`
@@ -148,16 +108,12 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     */
   def modifyCatalog[A](f: Seq[SegmentCatalogEntry] => (Seq[SegmentCatalogEntry], A)): A =
     withCatalogLock {
-      import spark.implicits._
       val (next, result) = f(loadCatalogLocked())
-      val flat = next.map(e => FlatEntry(
-        e.ruleId, e.segmentName, e.tableName,
-        ConditionCodec.encodeAll(e.conditions),
-        e.dependsOn, e.operation.getOrElse(""),
-        e.rowCount, e.lastRefreshedAt.getOrElse(""),
-        e.schedule, e.isActive, e.nextRunAt.getOrElse(""),
-        e.sqlQuery.getOrElse(""))).toDS()
-      swapIn(catalogPath)(flat.coalesce(1).write.mode(SaveMode.Overwrite).parquet(_))
+      val (fsys, p) = fs(catalogPath)
+      SegmentStore.swapIn(fsys, p) { staging =>
+        val out = fsys.create(staging, true)
+        try out.write(SegmentStore.encodeCatalog(next)) finally out.close()
+      }
       result
     }
 
@@ -206,36 +162,31 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     try body finally fsys.delete(lock, false)
   }
 
-  /** Columns added to the catalog after its first release, with the value
-    * an old row means: pre-scheduling catalogs are daily-active-unarmed.
-    * Read-side defaults keep warehouses written by older engine versions
-    * loadable (schema evolution without a migration pass).
-    */
-  private val catalogDefaults: Seq[(String, org.apache.spark.sql.Column)] = Seq(
-    "schedule" -> lit("DAILY"), "isActive" -> lit(true), "nextRunAt" -> lit(""),
-    "sqlQuery" -> lit(""))
-
-  /** Read the catalog, first repairing an interrupted save. Callers hold
-    * the catalog lock.
+  /** Read the catalog. Callers hold the catalog lock. A missing
+    * `_catalog.json` beside its `__old` sibling means a save crashed
+    * between its two renames: its staging file, closed before the first
+    * rename, is the newest catalog, else `__old` is. A parquet `_catalog/`
+    * written by an earlier engine version is refused, never read as empty
+    * (an empty read would reassign rule ids over existing segments).
     */
   private def loadCatalogLocked(): Seq[SegmentCatalogEntry] = {
-    import spark.implicits._
-    recoverSwap(catalogPath)
-    val (f, p) = fs(catalogPath)
-    if (!f.exists(p)) Seq.empty
-    else {
-      catalogDefaults.foldLeft(spark.read.parquet(catalogPath)) {
-        case (df, (c, d)) =>
-          if (df.columns.contains(c)) df else df.withColumn(c, d)
-      }.as[FlatEntry].collect().toSeq
-        .map(f => SegmentCatalogEntry(
-          f.ruleId, f.segmentName, f.tableName,
-          ConditionCodec.decodeAll(f.conditions),
-          f.dependsOn, Option(f.operation).filter(_.nonEmpty),
-          f.rowCount, Option(f.lastRefreshedAt).filter(_.nonEmpty),
-          f.schedule, f.isActive, Option(f.nextRunAt).filter(_.nonEmpty),
-          Option(f.sqlQuery).filter(_.nonEmpty)))
-        .sortBy(_.ruleId)
+    val (fsys, p) = fs(catalogPath)
+    val (staging, old) = SegmentStore.swapSiblings(p)
+    val file =
+      if (fsys.exists(p)) Some(p)
+      else if (fsys.exists(old)) Some(if (fsys.exists(staging)) staging else old)
+      else None
+    file match {
+      case Some(f) =>
+        val in = fsys.open(f)
+        try SegmentStore.decodeCatalog(in.readAllBytes()).sortBy(_.ruleId)
+        finally in.close()
+      case None =>
+        val legacy = new Path(s"$warehouse/_catalog")
+        if (fsys.exists(legacy)) throw new IllegalStateException(
+          s"$legacy is a parquet catalog; the catalog format changed to " +
+            s"$p and parquet catalogs are not read. Recreate the warehouse.")
+        Seq.empty
     }
   }
 
@@ -294,91 +245,84 @@ object SegmentStore {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def jvmLock(warehouse: String): Object =
     jvmLocks.computeIfAbsent(warehouse, _ => new Object)
+
+  /** Crash-safe replacement of a file or directory, the one way one is
+    * published. Its five callers are segment writes, the catalog
+    * ([[SegmentStore.modifyCatalog]]), `RollupServing.materialize`,
+    * `Tables.compact` and `Snapshot`'s pointer files. `writeStaging`
+    * materializes the new content beside the target (its result is
+    * returned), then the old data is moved aside to `<target>__old` and the
+    * staging copy renamed in. If `writeStaging` throws, the target is
+    * untouched. At no point is the target's previous state deleted before
+    * its replacement is fully written; a crash between the two renames
+    * leaves the target missing beside its complete staging copy, which the
+    * next swap publishes before writing its own (readers of the catalog
+    * and of `Snapshot` pointers resolve that state themselves). Renames are
+    * atomic on HDFS/local; on object stores (s3a) they copy.
+    */
+  def swapIn[A](fsys: FileSystem, target: Path)(writeStaging: Path => A): A = {
+    val (staging, old) = swapSiblings(target)
+    if (!fsys.exists(target) && fsys.exists(old) && fsys.exists(staging))
+      require(fsys.rename(staging, target), s"rename $staging -> $target failed")
+    fsys.delete(staging, true) // leftover from a failed write, superseded
+    val result = writeStaging(staging)
+    fsys.delete(old, true)
+    if (fsys.exists(target))
+      require(fsys.rename(target, old), s"rename $target -> $old failed")
+    require(fsys.rename(staging, target), s"rename $staging -> $target failed")
+    fsys.delete(old, true)
+    result
+  }
+
+  /** The `__staging` and `__old` siblings [[swapIn]] moves a target through. */
+  private def swapSiblings(target: Path): (Path, Path) =
+    (target.suffix("__staging"), target.suffix("__old"))
+
+  /** The catalog's JSON codec. A condition keeps the reference's own shape:
+    * `value` is a string, or a list for IN / NOT IN, and `value2` appears
+    * only when present. An entry missing a field written by a later engine
+    * version (e.g. `schedule`) takes its [[SegmentCatalogEntry]] default.
+    */
+  private implicit val catalogFormats: org.json4s.Formats =
+    org.json4s.DefaultFormats + ConditionSerializer
+
+  private object ConditionSerializer extends org.json4s.CustomSerializer[Condition](_ => {
+    import org.json4s._
+    def str(s: String): JValue = if (s == null) JNull else JString(s)
+    def unstr(v: JValue): String = v match {
+      case JString(s) => s
+      case JNull      => null
+      case other      => throw new MappingException(s"condition string expected, got $other")
+    }
+    ({
+      case JObject(fields) =>
+        val m = fields.toMap
+        Condition(unstr(m("field")), unstr(m("operator")),
+          m("value") match {
+            case JArray(vs) => CondValue.Many(vs.map(unstr).toVector)
+            case v          => CondValue.One(unstr(v))
+          },
+          m.get("value2").map(unstr))
+    }, {
+      case c: Condition =>
+        val value = c.value match {
+          case CondValue.One(v)   => str(v)
+          case CondValue.Many(vs) => JArray(vs.map(str).toList)
+        }
+        JObject(List("field" -> str(c.field), "operator" -> str(c.operator),
+          "value" -> value) ++ c.value2.map("value2" -> str(_)))
+    })
+  })
+
+  private[graft] def encodeCatalog(entries: Seq[SegmentCatalogEntry]): Array[Byte] =
+    org.json4s.jackson.Serialization.write(entries).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  private[graft] def decodeCatalog(bytes: Array[Byte]): Seq[SegmentCatalogEntry] =
+    org.json4s.jackson.Serialization.read[List[SegmentCatalogEntry]](
+      new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
 }
 
 /** One recorded materialization (run-history row). Top-level so Spark can
   * derive an Encoder for it.
   */
 case class RunHistoryEntry(rule_id: Long, refreshed_at: String, row_count: Long)
-
-/** Catalog row flattened for parquet; conditions round-trip through a
-  * compact escaped encoding (ConditionCodec). Top-level so Spark can derive
-  * an Encoder for it.
-  */
-private[sources] case class FlatEntry(
-    ruleId: Long, segmentName: String, tableName: String,
-    conditions: String, dependsOn: Seq[Long], operation: String,
-    rowCount: Long, lastRefreshedAt: String,
-    schedule: String, isActive: Boolean, nextRunAt: String,
-    sqlQuery: String)
-
-/** Compact string codec for condition lists so catalog metadata stays a
-  * flat parquet table. Control-plane only — never touches data rows.
-  *
-  * Every user-supplied string is percent-escaped before the printable
-  * separators are applied, so arbitrary payload characters (including the
-  * separators themselves) round-trip; `value2` absence is a structural
-  * flag, not a sentinel value.
-  */
-object ConditionCodec {
-  private val F = "|"  // field separator
-  private val V = ","  // list-element separator
-  private val C = ";"  // condition separator
-
-  private def esc(s: String): String =
-    s.flatMap {
-      case '%' => "%25"
-      case '|' => "%7c"
-      case ',' => "%2c"
-      case ';' => "%3b"
-      case ch  => ch.toString
-    }
-  private def unesc(s: String): String = {
-    val out = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '%' && i + 3 <= s.length) {
-        out.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { out.append(s.charAt(i)); i += 1 }
-    }
-    out.toString
-  }
-
-  def encodeAll(cs: Seq[Condition]): String = cs.map(encode).mkString(C)
-  private def encode(c: Condition): String = {
-    val vs = c.value match {
-      case CondValue.One(v) => "S" + esc(v)
-      // each element carries a 'v' prefix so the empty list ("M") stays
-      // distinct from a single empty string ("Mv")
-      case CondValue.Many(vs) => "M" + vs.map("v" + esc(_)).mkString(V)
-    }
-    val v2 = c.value2 match {
-      case Some(v) => "S" + esc(v)
-      case None    => "N"
-    }
-    Seq(esc(c.field), esc(c.operator), vs, v2).mkString(F)
-  }
-
-  def decodeAll(s: String): Seq[Condition] =
-    if (s == null || s.isEmpty) Nil
-    else s.split(C(0)).toSeq.filter(_.nonEmpty).map(decode)
-  private def decode(s: String): Condition = {
-    val parts = s.split(F(0))
-    require(parts.length == 4 && parts(2).nonEmpty && parts(3).nonEmpty,
-      s"unrecognized condition encoding '$s' — catalog written by an " +
-        "incompatible codec version?")
-    val value = parts(2).charAt(0) match {
-      case 'S' => CondValue.One(unesc(parts(2).drop(1)))
-      case 'M' =>
-        val rest = parts(2).drop(1)
-        if (rest.isEmpty) CondValue.Many(Vector.empty)
-        else CondValue.Many(rest.split(V, -1).map(p => unesc(p.drop(1))).toVector)
-    }
-    val value2 = parts(3).charAt(0) match {
-      case 'S' => Some(unesc(parts(3).drop(1)))
-      case _   => None
-    }
-    Condition(unesc(parts(0)), unesc(parts(1)), value, value2)
-  }
-}

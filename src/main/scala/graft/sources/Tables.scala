@@ -167,12 +167,13 @@ object Tables {
     * small ingests fragment a directory into thousands of tiny files,
     * and at scale the scan's file-listing + per-file open cost comes to
     * dominate the read — periodic compaction is standard table
-    * maintenance. Writes to a sibling temp directory first (the original
-    * stays intact and readable throughout), then swaps with two renames —
-    * a crash mid-swap leaves the previous data recoverable under
-    * `__compact_old`, never nothing. Renames are atomic on HDFS and
-    * local filesystems; on object stores (s3a) rename is a copy-based
-    * client operation — use a manifest-committing table format there.
+    * maintenance. Publishes through [[SegmentStore.swapIn]]: the rewrite
+    * lands in a sibling `__staging` directory first (the original stays
+    * intact and readable throughout), then swaps in with two renames — a
+    * crash mid-swap leaves the previous data under `__old`, never nothing.
+    * Renames are atomic on HDFS and local filesystems; on object stores
+    * (s3a) rename is a copy-based client operation — use a
+    * manifest-committing table format there.
     * For a [[writePartitionedByDay]] layout, compact each day's directory
     * individually — rewriting the root would flatten the partitioning.
     * Returns the number of files written (0 = empty directory, no-op).
@@ -184,16 +185,10 @@ object Tables {
     val bytes = fsys.getContentSummary(hPath).getLength
     if (bytes == 0L) return 0
     val nFiles = math.max(1L, math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
-    val tmp = new org.apache.hadoop.fs.Path(
-      hPath.getParent, hPath.getName + "__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(
-      hPath.getParent, hPath.getName + "__compact_old")
-    spark.read.parquet(dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    fsys.delete(old, true) // leftover from a previous crash, superseded
-    require(fsys.rename(hPath, old), s"rename $hPath -> $old failed")
-    require(fsys.rename(tmp, hPath), s"rename $tmp -> $hPath failed")
-    fsys.delete(old, true)
+    SegmentStore.swapIn(fsys, hPath) { staging =>
+      spark.read.parquet(dir).repartition(nFiles)
+        .write.mode("overwrite").parquet(staging.toString)
+    }
     nFiles
   }
 

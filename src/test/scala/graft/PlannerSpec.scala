@@ -2,7 +2,7 @@ package graft
 
 import graft.model._
 import graft.plans.{DependencyFinder, Planner}
-import graft.sources.{ConditionCodec, SegmentStore}
+import graft.sources.SegmentStore
 import java.nio.file.Files
 
 /** Control plane: greedy subset cover, plan precedence, store round-trip. */
@@ -225,7 +225,12 @@ class PlannerSpec extends SparkSpec {
   test("condition codec round-trips scalars, lists, value2") {
     val cs = Seq(cAmount, cDate, Condition.in("city_tier", Seq("1", "2")),
       Condition("transaction_amount", ">", ""))
-    assert(ConditionCodec.decodeAll(ConditionCodec.encodeAll(cs)) == cs)
-    assert(ConditionCodec.decodeAll("") == Nil)
+    val entry = SegmentCatalogEntry(1L, "r", "segment_output_1", cs, Nil, None)
+    val json = new String(SegmentStore.encodeCatalog(Seq(entry)), "UTF-8")
+    assert(SegmentStore.decodeCatalog(json.getBytes("UTF-8")) == Seq(entry))
+    assert(SegmentStore.decodeCatalog(SegmentStore.encodeCatalog(Nil)) == Nil)
+    // the reference's condition shape: a list value for IN, value2 only when present
+    assert(json.contains("""{"field":"city_tier","operator":"IN","value":["1","2"]}"""))
+    assert(json.contains(""""value":"2025-06-01","value2":"2025-06-30"}"""))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import graft.functions.{NGrams, SimHash, VectorOps}
 import graft.model._
 import graft.plans.DependencyFinder
-import graft.sources.ConditionCodec
+import graft.sources.SegmentStore
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
@@ -57,10 +57,24 @@ object ConditionProps extends Properties("ConditionLanguage") {
         SetOp.parse(op.toString.toLowerCase).contains(op)
     }
 
+  // Any valid Unicode text (an unpaired UTF-16 surrogate has no UTF-8
+  // encoding), weighted toward separators, escapes, quotes and newlines.
+  private val genText: Gen[String] = Gen.listOf(Gen.frequency(
+    3 -> Gen.oneOf("|", ",", ";", "%", "%7c", "\"", "'", "\\", "\n", "\r\n", "\t", "\u0000",
+      "é", "日本", "\uD83D\uDE00", "null", "[", "{"),
+    1 -> Gen.choose(0, Character.MAX_CODE_POINT)
+      .filter(cp => cp < Character.MIN_SURROGATE || cp > Character.MAX_SURROGATE)
+      .map(cp => new String(Character.toChars(cp))))).map(_.mkString)
+  private val genAnyCond: Gen[Condition] = for {
+    f <- Gen.option(genText); o <- Gen.option(genText)
+    v <- Gen.oneOf(genText.map(CondValue.One), Gen.listOf(genText).map(vs => CondValue.Many(vs.toVector)))
+    v2 <- Gen.option(genText)
+  } yield Condition(f.orNull, o.orNull, v, v2) // None ⇒ a null field/operator
+
   property("codec round-trips arbitrary condition lists") =
-    forAll(Gen.listOf(genCond)) { cs =>
-      // codec reserves -; generator values never contain them
-      ConditionCodec.decodeAll(ConditionCodec.encodeAll(cs)) == cs
+    forAll(Gen.listOf(genAnyCond), genText) { (cs, name) =>
+      val entry = SegmentCatalogEntry(1L, name, "segment_output_1", cs, Nil, None)
+      SegmentStore.decodeCatalog(SegmentStore.encodeCatalog(Seq(entry))) == Seq(entry)
     }
 }
 

@@ -385,6 +385,39 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(listings.get() >= 1 && runner.listRules(1, 100).map(_.ruleId) == (1L to 8L))
   }
 
+  test("catalog calls on rules that never ran launch no Spark job") {
+    val dir = Files.createTempDirectory("graft_runner_nojob").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val sc = spark.sparkContext
+    val group = s"catalog-only-${System.nanoTime()}"
+    sc.setJobGroup(group, "catalog calls")
+    try {
+      val (id1, _) = runner.createRule("r1", Seq(cAmount))
+      val (id2, plan) = runner.createRule("r2", Seq(cAmount, cTier))
+      assert(plan == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cTier)))
+      runner.updateRule(id2, Seq(cAmount, cTier, Condition("transaction_amount", "<", "900")))
+      runner.setActive(id1, active = false)
+      assert(runner.listRules().map(_.ruleId) == Seq(id1, id2))
+      assert(runner.getRule(id1).exists(!_.isActive))
+      assert(store.lineage(id2) == (Seq(id2, id1), Seq((id1, id2))))
+      runner.deleteRule(id2)
+      runner.deleteRule(id1)
+      assert(runner.listRules().isEmpty)
+    } finally sc.clearJobGroup()
+    // job events reach the status tracker asynchronously but in order: once
+    // a later marker job shows up, every earlier job in `group` would too
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "catalog reads and writes must stay on the driver")
+  }
+
   test("runAll commits the batch's run history as one file") {
     val dir = Files.createTempDirectory("graft_runner_hist_batch").toString
     val store = new SegmentStore(spark, dir)

@@ -70,17 +70,32 @@ class SegmentStoreSpec extends SparkSpec {
 
   test("loadCatalog reads catalogs written before the scheduling columns existed") {
     val dir = Files.createTempDirectory("graft_oldcat").toString
-    // simulate a pre-r4 catalog: same layout minus schedule/isActive/nextRunAt
-    Seq((1L, "old-rule", "segment_output_1", "transaction_amount|>|S500|N",
-        Seq.empty[Long], "", 42L, "2026-01-01T00:00:00Z"))
-      .toDF("ruleId", "segmentName", "tableName", "conditions",
-        "dependsOn", "operation", "rowCount", "lastRefreshedAt")
-      .coalesce(1).write.parquet(s"$dir/_catalog")
+    // an entry written before schedule/isActive/nextRunAt/sqlQuery existed
+    Files.writeString(java.nio.file.Paths.get(dir, "_catalog.json"),
+      """[{"ruleId":1,"segmentName":"old-rule","tableName":"segment_output_1",
+        |"conditions":[{"field":"transaction_amount","operator":">","value":"500"}],
+        |"dependsOn":[],"rowCount":42,"lastRefreshedAt":"2026-01-01T00:00:00Z"}]""".stripMargin)
     val store = new SegmentStore(spark, dir)
     val cat = store.loadCatalog()
     assert(cat.map(_.ruleId) == Seq(1L) && cat.head.rowCount == 42L)
+    assert(cat.head.conditions == Seq(Condition("transaction_amount", ">", "500")))
     assert(cat.head.schedule == "DAILY" && cat.head.isActive && cat.head.nextRunAt.isEmpty,
-      "missing columns must read as daily-active-unarmed defaults")
+      "missing fields must read as daily-active-unarmed defaults")
+    assert(cat.head.sqlQuery.isEmpty && cat.head.operation.isEmpty)
+  }
+
+  test("a warehouse holding a parquet catalog is refused, never read as empty") {
+    val dir = Files.createTempDirectory("graft_parquetcat").toString
+    Seq((1L, "old-rule")).toDF("ruleId", "segmentName").write.parquet(s"$dir/_catalog")
+    def listing() = new java.io.File(dir).list().toSeq.sorted
+    val before = listing()
+    val store = new SegmentStore(spark, dir)
+    for (call <- Seq[() => Any](() => store.loadCatalog(),
+        () => store.modifyCatalog(cat => (cat :+ entry(cat.size + 1L, "new"), ())))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("_catalog.json") && e.getMessage.contains("parquet"))
+    }
+    assert(listing() == before && before == Seq("_catalog"), "nothing may be written")
   }
 
   private def entry(id: Long, name: String, rows: Long = 0L) =
@@ -99,21 +114,22 @@ class SegmentStoreSpec extends SparkSpec {
     save(store, Seq(entry(1L, "v1")))
 
     // Reconstruct the exact mid-swap crash state: the NEW catalog fully
-    // written (with its _SUCCESS commit marker) under __staging, the OLD one
-    // moved aside to __old, the target directory missing.
+    // written (and closed) as the staging file, the OLD one moved aside to
+    // __old, the target file missing.
     val other = Files.createTempDirectory("graft_crash_src").toString
     save(new SegmentStore(spark, other), Seq(entry(1L, "v2", rows = 9L)))
     val fsys = hfs(dir)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    assert(fsys.rename(p(s"$other/_catalog"), p(s"$dir/_catalog__staging")))
-    assert(fsys.rename(p(s"$dir/_catalog"), p(s"$dir/_catalog__old")))
+    assert(fsys.rename(p(s"$other/_catalog.json"), p(s"$dir/_catalog.json__staging")))
+    assert(fsys.rename(p(s"$dir/_catalog.json"), p(s"$dir/_catalog.json__old")))
 
     val cat = store.loadCatalog()
     assert(cat.map(_.segmentName) == Seq("v2") && cat.head.rowCount == 9L,
-      "a committed staging copy must win (the save had finished writing)")
-    assert(fsys.exists(p(s"$dir/_catalog")) && !fsys.exists(p(s"$dir/_catalog__old")),
-      "recovery must leave a clean swapped-in state")
+      "a complete staging file must win (the save had finished writing)")
     save(store, Seq(entry(2L, "v3"))) // subsequent saves still work
+    assert(fsys.exists(p(s"$dir/_catalog.json")) && !fsys.exists(p(s"$dir/_catalog.json__old")) &&
+      !fsys.exists(p(s"$dir/_catalog.json__staging")),
+      "the next save must leave a clean swapped-in state")
     assert(store.loadCatalog().map(_.ruleId) == Seq(2L))
   }
 
@@ -122,15 +138,33 @@ class SegmentStoreSpec extends SparkSpec {
     val store = new SegmentStore(spark, dir)
     save(store, Seq(entry(1L, "v1", rows = 3L)))
 
-    // Crash state: target moved aside, staging absent/uncommitted.
+    // Crash state: target moved aside, no staging file.
     val fsys = hfs(dir)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
-    assert(fsys.rename(p("_catalog"), p("_catalog__old")))
-    fsys.mkdirs(p("_catalog__staging")) // torn write: directory, no _SUCCESS
+    assert(fsys.rename(p("_catalog.json"), p("_catalog.json__old")))
 
     val cat = store.loadCatalog()
     assert(cat.map(_.segmentName) == Seq("v1") && cat.head.rowCount == 3L,
-      "without a commit marker the previous catalog must be restored")
+      "without a staging file the previous catalog must be read")
+  }
+
+  test("a swap that fails after a crashed swap publishes the crashed swap's complete copy") {
+    val dir = Files.createTempDirectory("graft_crash_twice").toString
+    val store = new SegmentStore(spark, dir)
+    save(store, Seq(entry(1L, "v1")))
+    val other = Files.createTempDirectory("graft_crash_twice_src").toString
+    save(new SegmentStore(spark, other), Seq(entry(1L, "v2")))
+    val fsys = hfs(dir)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    assert(fsys.rename(p(s"$other/_catalog.json"), p(s"$dir/_catalog.json__staging")))
+    assert(fsys.rename(p(s"$dir/_catalog.json"), p(s"$dir/_catalog.json__old")))
+
+    // the next save dies while writing its own staging file
+    intercept[RuntimeException](SegmentStore.swapIn(fsys, p(s"$dir/_catalog.json")) { _ =>
+      throw new RuntimeException("crash while writing")
+    })
+    assert(fsys.exists(p(s"$dir/_catalog.json")))
+    assert(store.loadCatalog().map(_.segmentName) == Seq("v2"))
   }
 
   test("a stale catalog lock from a dead writer is broken, a fresh save proceeds") {
