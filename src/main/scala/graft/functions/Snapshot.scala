@@ -50,13 +50,13 @@ object Snapshot {
   //
   // Directory layout: base/v=N/ (one immutable parquet dir per published
   // version) + a tiny _LATEST pointer file. A version becomes visible ONLY
-  // when the pointer lands (published by SegmentStore.swapIn; readers fall
-  // back to its `__old` sibling, so a crash mid-swap still resolves), so
-  // readers never observe a half-written corpus. `v=N` is deliberately
-  // partition syntax: `spark.read.parquet(base)` reads ALL versions with a
-  // `v` column for cross-version queries, while underscore-prefixed pointer
-  // files stay invisible to the scanner. Single-writer cadence (like any
-  // OPTIMIZE / publish job); readers need no lock at any scale.
+  // when the pointer lands (published by SegmentStore.swapIn; a crashed
+  // swap rolls back to the previous pointer), so readers never observe a
+  // half-written corpus. `v=N` is deliberately partition syntax:
+  // `spark.read.parquet(base)` reads ALL versions with a `v` column for
+  // cross-version queries, while underscore-prefixed pointer files stay
+  // invisible to the scanner. Single-writer cadence (like any OPTIMIZE /
+  // publish job); readers need no lock at any scale.
 
   private val Ptr = "_LATEST"
   private val Log = "_VERSIONS"
@@ -75,22 +75,11 @@ object Snapshot {
 
   private def readSmall(fsys: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fsys.exists(p)) None
-    else {
-      val in = fsys.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-      finally in.close()
-    }
-
-  private def readPtr(fsys: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[Long] =
-    readSmall(fsys, p).map(_.toLong)
+    graft.sources.SegmentStore.readPublished(fsys, p).map(new String(_, "UTF-8").trim)
 
   /** Publish a small metadata file (pointer/log) through
-    * [[graft.sources.SegmentStore.swapIn]]: `content` lands in
-    * `name__staging`, the live file moves aside to `name__old`, and the
-    * staging file is renamed in.
+    * [[graft.sources.SegmentStore.swapIn]]: `content` lands in a staging
+    * sibling, the live file moves aside, and the staging file is renamed in.
     */
   private def swapSmall(fsys: org.apache.hadoop.fs.FileSystem,
       base: org.apache.hadoop.fs.Path, name: String, content: String): Unit =
@@ -107,10 +96,8 @@ object Snapshot {
     */
   private def publishedVersions(fsys: org.apache.hadoop.fs.FileSystem,
       base: org.apache.hadoop.fs.Path, latest: Option[Long]): Set[Long] =
-    (readSmall(fsys, new org.apache.hadoop.fs.Path(base, Log))
-      .orElse(readSmall(fsys, new org.apache.hadoop.fs.Path(base, Log + "__old")))
-      .toSeq.flatMap(_.split("\\s+")).filter(_.nonEmpty).map(_.toLong)
-      ++ latest).toSet
+    (readSmall(fsys, new org.apache.hadoop.fs.Path(base, Log)).toSeq
+      .flatMap(_.split("\\s+")).filter(_.nonEmpty).map(_.toLong) ++ latest).toSet
 
   /** Publish `df` as the next snapshot version; returns the version. The
     * data lands fully before the pointer swap, and the next version number
@@ -131,14 +118,13 @@ object Snapshot {
     next
   }
 
-  /** The published version readers resolve: the pointer, falling back to
-    * the moved-aside pointer if a publish crashed between its two renames.
+  /** The published version readers resolve: the pointer, or the previous
+    * pointer if a publish crashed between its two renames.
     */
   def latestVersion(spark: org.apache.spark.sql.SparkSession,
       base: String): Option[Long] = {
     val (fsys, b) = fsOf(spark, base)
-    readPtr(fsys, new org.apache.hadoop.fs.Path(b, Ptr))
-      .orElse(readPtr(fsys, new org.apache.hadoop.fs.Path(b, Ptr + "__old")))
+    readSmall(fsys, new org.apache.hadoop.fs.Path(b, Ptr)).map(_.toLong)
   }
 
   /** Read a snapshot: the published latest, or `version` for time travel. */

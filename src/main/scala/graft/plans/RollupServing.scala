@@ -35,9 +35,9 @@ object RollupServing {
   /** Build the user-windows rollup and swap it in under the store's
     * warehouse (the same [[SegmentStore.swapIn]] as segments and the
     * catalog): a reader never sees a half-written rollup, and a failed
-    * build leaves the previous one. A crash between the swap's renames
-    * leaves no rollup, so reads fall back to the raw scan until the next
-    * `materialize` publishes it again.
+    * build leaves the previous one. A crashed build rolls back: reads
+    * keep serving the previous rollup ([[SegmentStore.resolve]]) until the
+    * next `materialize` lands.
     */
   def materialize(store: SegmentStore, tx: DataFrame, periods: Seq[Int]): Unit = {
     val target = new org.apache.hadoop.fs.Path(rollupPath(store))
@@ -54,14 +54,15 @@ object RollupServing {
     */
   private def window(spark: SparkSession, store: SegmentStore,
       periodDays: Int): Option[DataFrame] = {
-    val root = rollupPath(store)
-    val dir = new org.apache.hadoop.fs.Path(s"$root/period_days=$periodDays")
-    if (!dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)) None
-    else Some(spark.read.parquet(root)
-      .filter(col("period_days") === periodDays)
-      // partitionBy moved period_days last; restore the build's order
-      .select(Seq("user_id", "period_days", "total_transactions", "total_amount",
-        "last_transaction_date", "city_tier", "favorite_category").map(col): _*))
+    val target = new org.apache.hadoop.fs.Path(rollupPath(store))
+    val fsys = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SegmentStore.resolve(fsys, target)
+      .filter(root => fsys.exists(new org.apache.hadoop.fs.Path(root, s"period_days=$periodDays")))
+      .map(root => spark.read.parquet(root.toString)
+        .filter(col("period_days") === periodDays)
+        // partitionBy moved period_days last; restore the build's order
+        .select(Seq("user_id", "period_days", "total_transactions", "total_amount",
+          "last_transaction_date", "city_tier", "favorite_category").map(col): _*))
   }
 
   /** The rewrite: per-user totals for a trailing `periodDays` window are

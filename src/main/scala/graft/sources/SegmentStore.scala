@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * overwrites a segment in place: the new content is written beside it and
   * swapped in ([[SegmentStore.swapIn]]), so a failed refresh leaves the
   * previous segment readable, like the reference's transactional table
-  * replace. An empty result writes an empty file with the canonical
-  * 4-column schema so downstream readers never fail (S6, SURVEY Q9).
+  * replace; a crashed swap rolls back ([[SegmentStore.resolve]]). An
+  * empty result writes an empty file with the canonical 4-column schema so
+  * downstream readers never fail (S6, SURVEY Q9).
   */
 final class SegmentStore(spark: SparkSession, warehouse: String) {
 
@@ -56,21 +57,24 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     }
   }
 
-  def read(ruleId: Long): DataFrame = spark.read.parquet(path(ruleId))
+  /** The published segment; one never published fails as a missing path. */
+  def read(ruleId: Long): DataFrame = {
+    val (f, p) = fs(path(ruleId))
+    spark.read.parquet(SegmentStore.resolve(f, p).getOrElse(p).toString)
+  }
 
   def exists(ruleId: Long): Boolean = {
-    val (f, p) = fs(path(ruleId)); f.exists(p)
+    val (f, p) = fs(path(ruleId)); SegmentStore.resolve(f, p).nonEmpty
   }
 
   /** Remove a segment's materialized parquet (rule DELETE, see
-    * SegmentRunner.deleteRule), with the `__staging`/`__old` siblings a
-    * failed or crashed swap can leave. False when nothing was materialized.
+    * SegmentRunner.deleteRule), with the swap siblings a failed or crashed
+    * swap can leave. False when nothing was materialized.
     */
   def delete(ruleId: Long): Boolean = {
     val (f, p) = fs(path(ruleId))
     val (staging, old) = SegmentStore.swapSiblings(p)
-    Seq(staging, old).foreach(f.delete(_, true))
-    f.delete(p, true)
+    SegmentStore.jvmLock(f, p).synchronized(Seq(staging, old, p).map(f.delete(_, true)).last)
   }
 
   // ---- catalog --------------------------------------------------------------
@@ -92,9 +96,9 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   //    serialize cheaply;
   //  - every save goes through the same staging + two-rename swap as segment
   //    data, so no crash window deletes the previous catalog before its
-  //    replacement is durable. Reads never rename: a read that finds the
-  //    swap interrupted reads the newest complete file, and the next save
-  //    publishes cleanly;
+  //    replacement is durable. A save that crashed rolls back: reads resolve
+  //    the moved-aside previous catalog ([[SegmentStore.resolve]]) until the
+  //    next save lands, and never rename;
   //  - the lock is a create-exclusive lock file (atomic on HDFS and local FS;
   //    on object stores without atomic create-no-overwrite, e.g. raw S3,
   //    deploy with a single catalog writer instead — the data plane is
@@ -128,13 +132,15 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     * (the swap itself is crash-safe, so breaking a dead writer's lock never
     * observes a torn catalog).
     */
-  private def withCatalogLock[A](body: => A): A =
-    // Two layers: threads inside one driver JVM serialize on a per-warehouse
-    // monitor (Hadoop's LocalFileSystem create-exclusive is check-then-create,
-    // not atomic, so the file alone can't exclude same-process threads);
-    // separate driver processes serialize on the lock file, whose exclusive
-    // create IS atomic on HDFS namenodes and POSIX local mounts.
-    SegmentStore.jvmLock(warehouse).synchronized(withCatalogFileLock(body))
+  private def withCatalogLock[A](body: => A): A = {
+    // Two layers: threads inside one driver JVM serialize on the catalog's
+    // swap monitor, which the save's swapIn re-enters (Hadoop's local
+    // create-exclusive is check-then-create, not atomic); driver processes
+    // serialize on the lock file, whose exclusive create IS atomic on HDFS
+    // namenodes and POSIX local mounts.
+    val (fsys, p) = fs(catalogPath)
+    SegmentStore.jvmLock(fsys, p).synchronized(withCatalogFileLock(body))
+  }
 
   private def withCatalogFileLock[A](body: => A): A = {
     val (fsys, lock) = fs(s"$warehouse/_catalog.lock")
@@ -162,25 +168,15 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     try body finally fsys.delete(lock, false)
   }
 
-  /** Read the catalog. Callers hold the catalog lock. A missing
-    * `_catalog.json` beside its `__old` sibling means a save crashed
-    * between its two renames: its staging file, closed before the first
-    * rename, is the newest catalog, else `__old` is. A parquet `_catalog/`
-    * written by an earlier engine version is refused, never read as empty
-    * (an empty read would reassign rule ids over existing segments).
+  /** Read the catalog, as published ([[SegmentStore.readPublished]]).
+    * Callers hold the catalog lock. A parquet `_catalog/` written by an
+    * earlier engine version is refused, never read as empty (an empty read
+    * would reassign rule ids over existing segments).
     */
   private def loadCatalogLocked(): Seq[SegmentCatalogEntry] = {
     val (fsys, p) = fs(catalogPath)
-    val (staging, old) = SegmentStore.swapSiblings(p)
-    val file =
-      if (fsys.exists(p)) Some(p)
-      else if (fsys.exists(old)) Some(if (fsys.exists(staging)) staging else old)
-      else None
-    file match {
-      case Some(f) =>
-        val in = fsys.open(f)
-        try SegmentStore.decodeCatalog(in.readAllBytes()).sortBy(_.ruleId)
-        finally in.close()
+    SegmentStore.readPublished(fsys, p) match {
+      case Some(bytes) => SegmentStore.decodeCatalog(bytes).sortBy(_.ruleId)
       case None =>
         val legacy = new Path(s"$warehouse/_catalog")
         if (fsys.exists(legacy)) throw new IllegalStateException(
@@ -243,36 +239,50 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
 object SegmentStore {
   private val jvmLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def jvmLock(warehouse: String): Object =
-    jvmLocks.computeIfAbsent(warehouse, _ => new Object)
+  private def jvmLock(fsys: FileSystem, target: Path): Object =
+    jvmLocks.computeIfAbsent(fsys.makeQualified(target).toString, _ => new Object)
 
   /** Crash-safe replacement of a file or directory, the one way one is
     * published. Its five callers are segment writes, the catalog
     * ([[SegmentStore.modifyCatalog]]), `RollupServing.materialize`,
     * `Tables.compact` and `Snapshot`'s pointer files. `writeStaging`
-    * materializes the new content beside the target (its result is
-    * returned), then the old data is moved aside to `<target>__old` and the
+    * materializes the new content into `<target>__staging` (its result is
+    * returned), then the target is moved aside to `<target>__old` and the
     * staging copy renamed in. If `writeStaging` throws, the target is
-    * untouched. At no point is the target's previous state deleted before
-    * its replacement is fully written; a crash between the two renames
-    * leaves the target missing beside its complete staging copy, which the
-    * next swap publishes before writing its own (readers of the catalog
-    * and of `Snapshot` pointers resolve that state themselves). Renames are
-    * atomic on HDFS/local; on object stores (s3a) they copy.
+    * untouched. A crashed swap rolls back: `__old` stays published
+    * ([[resolve]]) until a target exists again, and a staging copy is
+    * scratch. (Rolling it forward would pull files from under a lazy plan
+    * that resolved `__old`, e.g. the streaming upsert's read.) Swaps of one
+    * target serialize inside a JVM, not across driver processes (the
+    * catalog adds its lock file). Renames are atomic on HDFS/local; on
+    * object stores (s3a) they copy.
     */
-  def swapIn[A](fsys: FileSystem, target: Path)(writeStaging: Path => A): A = {
-    val (staging, old) = swapSiblings(target)
-    if (!fsys.exists(target) && fsys.exists(old) && fsys.exists(staging))
+  def swapIn[A](fsys: FileSystem, target: Path)(writeStaging: Path => A): A =
+    jvmLock(fsys, target).synchronized {
+      val (staging, old) = swapSiblings(target)
+      fsys.delete(staging, true) // scratch of a failed or crashed write
+      val result = writeStaging(staging)
+      if (fsys.exists(target)) {
+        fsys.delete(old, true)
+        require(fsys.rename(target, old), s"rename $target -> $old failed")
+      }
       require(fsys.rename(staging, target), s"rename $staging -> $target failed")
-    fsys.delete(staging, true) // leftover from a failed write, superseded
-    val result = writeStaging(staging)
-    fsys.delete(old, true)
-    if (fsys.exists(target))
-      require(fsys.rename(target, old), s"rename $target -> $old failed")
-    require(fsys.rename(staging, target), s"rename $staging -> $target failed")
-    fsys.delete(old, true)
-    result
-  }
+      fsys.delete(old, true)
+      result
+    }
+
+  /** What a reader of a swapped target sees: the target, else the `__old`
+    * copy a crashed swap moved aside, else None. `__staging` is never read.
+    */
+  private[graft] def resolve(fsys: FileSystem, target: Path): Option[Path] =
+    Seq(target, swapSiblings(target)._2).find(fsys.exists)
+
+  /** The bytes of a small published file ([[resolve]]), or None. */
+  private[graft] def readPublished(fsys: FileSystem, target: Path): Option[Array[Byte]] =
+    resolve(fsys, target).map { f =>
+      val in = fsys.open(f)
+      try in.readAllBytes() finally in.close()
+    }
 
   /** The `__staging` and `__old` siblings [[swapIn]] moves a target through. */
   private def swapSiblings(target: Path): (Path, Path) =

@@ -168,9 +168,9 @@ object Tables {
     * and at scale the scan's file-listing + per-file open cost comes to
     * dominate the read — periodic compaction is standard table
     * maintenance. Publishes through [[SegmentStore.swapIn]]: the rewrite
-    * lands in a sibling `__staging` directory first (the original stays
-    * intact and readable throughout), then swaps in with two renames — a
-    * crash mid-swap leaves the previous data under `__old`, never nothing.
+    * lands in a staging sibling first (the original stays intact and
+    * readable throughout), then swaps in with two renames — a crash
+    * mid-swap leaves the previous data ([[SegmentStore.resolve]]).
     * Renames are atomic on HDFS and local filesystems; on object stores
     * (s3a) rename is a copy-based client operation — use a
     * manifest-committing table format there.

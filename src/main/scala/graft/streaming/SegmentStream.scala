@@ -104,7 +104,9 @@ object SegmentStream {
     * staging directory while the old data stays readable (the plan READS
     * the directory being replaced) and swaps it in by rename — a failed
     * batch leaves the previous state, never an empty store, and a restart
-    * that replays the batch re-derives the same merge (idempotent). Per-user state lives in the streaming checkpoint.
+    * that replays the batch re-derives the same merge (idempotent); a
+    * crashed swap rolls back, so the read keeps every earlier member.
+    * Per-user state lives in the streaming checkpoint.
     * Empty micro-batches (restart replays, no-data triggers) skip the
     * rewrite entirely. Returns the configured writer — caller sets
     * `option("checkpointLocation", ...)` and `.start()`s it.
@@ -115,16 +117,12 @@ object SegmentStream {
       .outputMode(SegmentOutputMode)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val existing =
-            if (store.exists(ruleId)) store.read(ruleId)
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              batch.drop("in_segment").schema)
-          val touched = batch.select("user_id").distinct()
-          val next = existing
-            .join(broadcast(touched), Seq("user_id"), "left_anti")
-            .unionByName(batch.filter(col("in_segment")).drop("in_segment"))
+          val members = batch.filter(col("in_segment")).drop("in_segment")
+          val next =
+            if (!store.exists(ruleId)) members
+            else store.read(ruleId)
+              .join(broadcast(batch.select("user_id").distinct()), Seq("user_id"), "left_anti")
+              .unionByName(members)
           store.write(ruleId, next)
           ()
         }

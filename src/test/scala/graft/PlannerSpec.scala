@@ -198,27 +198,30 @@ class PlannerSpec extends SparkSpec {
     assert(RollupServing.serveSegment(spark, store, 21, conds).isEmpty)
   }
 
-  test("rollup crash window: a swapped-out rollup falls back to raw until the next materialize") {
+  test("rollup crash window: a swapped-out rollup is served until the next materialize") {
     import graft.plans.RollupServing
     import graft.sources.Tables
     val dir = Files.createTempDirectory("graft_rollup_crash").toString
     val store = new SegmentStore(spark, dir)
     val tx = Tables.transactions(spark, sf)
     RollupServing.materialize(store, tx, Seq(14))
+    def served() = RollupServing.serveSegment(spark, store, 14, Nil).get
+      .collect().toSeq.sortBy(_.getLong(0))
+    val before = served()
 
     // the state a crash between the swap's two renames leaves behind
     val fsys = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
     assert(fsys.rename(p("rollup_user_windows"), p("rollup_user_windows__old")))
 
-    assert(RollupServing.serveSegment(spark, store, 14, Nil).isEmpty)
+    assert(served() == before, "the moved-aside rollup must be served (roll back)")
     val plan = RollupServing.userWindowTotals(spark, store, tx, 14)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("events") && !plan.contains("rollup_user_windows"),
-      s"must plan the raw scan:\n$plan")
+    assert(!plan.contains("events") && plan.contains("rollup_user_windows"),
+      s"must plan the rollup scan:\n$plan")
 
     RollupServing.materialize(store, tx, Seq(14))
-    assert(RollupServing.serveSegment(spark, store, 14, Nil).nonEmpty)
+    assert(served() == before)
     assert(!fsys.exists(p("rollup_user_windows__old")))
   }
 

@@ -177,6 +177,26 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(counts2.keySet == Set(idC) && counts2(idC) > 0)
   }
 
+  test("a dependent of an inactive parent caught mid-swap runs on the parent's rows") {
+    val dir = Files.createTempDirectory("graft_runner_midswap").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val (idP, _) = runner.createRule("parent", Seq(cAmount), isActive = false)
+    val (idC, plan) = runner.createRule("child", Seq(cAmount, cTier))
+    assert(plan.isInstanceOf[SegmentPlan.Compound])
+    runner.run(idP, "2026-08-12T00:00:00Z")
+    val counts = runner.runAll("2026-08-12T01:00:00Z")
+    assert(counts.keySet == Set(idC))
+    val rows = store.read(idC).orderBy("user_id").collect().toSeq
+
+    // a crash between the parent's two swap renames moved it aside
+    Files.move(java.nio.file.Paths.get(dir, s"segment_output_$idP"),
+      java.nio.file.Paths.get(dir, s"segment_output_${idP}__old"))
+    assert(runner.runAll("2026-08-12T02:00:00Z") == counts,
+      "the dependent must run against the moved-aside parent")
+    assert(store.read(idC).orderBy("user_id").collect().toSeq == rows)
+  }
+
   test("rule lifecycle: list/get/delete with dependent guard") {
     val dir = Files.createTempDirectory("graft_runner6").toString
     val store = new SegmentStore(spark, dir)
@@ -313,6 +333,31 @@ class SegmentRunnerSpec extends SparkSpec {
       s"ids must be distinct, got $got")
     assert(store.loadCatalog().map(_.ruleId).sorted == got.sorted,
       "a rule created concurrently must not be lost from the catalog")
+  }
+
+  test("concurrent refreshes of one rule never throw and leave one refresh's rows") {
+    val dir = Files.createTempDirectory("graft_runner_run_race").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val (id, _) = runner.createRule("raced", Seq(cAmount))
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to 2).map(t => new Thread(() =>
+      (1 to 6).foreach { i =>
+        try runner.run(id, s"2026-08-12T0$i:0$t:00Z")
+        catch { case e: Throwable => errors.add(e) }
+      }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, s"${errors.size} of 12 refreshes threw:\n" +
+      errors.asScala.map(_.toString).mkString("\n"))
+
+    val once = Files.createTempDirectory("graft_runner_run_once").toString
+    val single = new SegmentStore(spark, once)
+    val singleRunner = new SegmentRunner(single, tx)
+    singleRunner.run(singleRunner.createRule("raced", Seq(cAmount))._1, "2026-08-12T00:00:00Z")
+    assert(store.read(id).orderBy("user_id").collect().toSeq ==
+      single.read(id).orderBy("user_id").collect().toSeq)
+    val left = new java.io.File(dir).list().filter(n => n.endsWith("__staging") || n.endsWith("__old"))
+    assert(left.isEmpty, s"swap leftovers: ${left.mkString(", ")}")
   }
 
   test("a rule throwing mid-batch rethrows; the rules refreshed before it stay committed") {

@@ -2,9 +2,12 @@ package graft
 
 import graft.model._
 import graft.operators.SegmentRunner
+import graft.plans.RollupServing
 import graft.sources.SegmentStore
+import graft.streaming.SegmentStream
 import java.net.URI
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,6 +19,37 @@ import org.apache.spark.sql.functions._
 class MockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "mockfs"
   override def getUri: URI = URI.create("mockfs:///")
+}
+
+/** MockFs under its own scheme that crashes the process at the k-th
+  * rename or delete of a swap target or of its `__staging`/`__old`
+  * sibling ([[CrashFs.arm]]): that operation and every later one on a swap
+  * path throw, as if the process had died. `_catalog.lock` is exempt (a
+  * stale lock has its own test); other files are untouched.
+  */
+class CrashFs extends MockFs {
+  override def getScheme: String = "crashfs"
+  override def getUri: URI = URI.create("crashfs:///")
+  override def rename(src: Path, dst: Path): Boolean = {
+    CrashFs.step(src, dst); super.rename(src, dst)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    CrashFs.step(p); super.delete(p, recursive)
+  }
+}
+
+object CrashFs {
+  private val SwapPath = """(segment_output_\d+|_catalog\.json|rollup_user_windows)(__staging|__old)?""".r
+  private val ops = new java.util.concurrent.atomic.AtomicLong(0)
+  @volatile private var crashAt = Long.MaxValue
+
+  /** Count swap-path operations from 0 and crash at the `k`-th. */
+  def arm(k: Long): Unit = { ops.set(0); crashAt = k }
+  def count: Long = ops.get()
+
+  private def step(ps: Path*): Unit =
+    if (ps.exists(p => SwapPath.matches(p.getName)) && ops.incrementAndGet() >= crashAt)
+      throw new java.io.IOException(s"crashed at swap operation $crashAt on ${ps.mkString(" -> ")}")
 }
 
 class SegmentStoreSpec extends SparkSpec {
@@ -108,7 +142,7 @@ class SegmentStoreSpec extends SparkSpec {
   private def hfs(dir: String) = new org.apache.hadoop.fs.Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  test("catalog save survives a crash between the two swap renames (roll forward)") {
+  test("catalog save survives a crash between the two swap renames (roll back)") {
     val dir = Files.createTempDirectory("graft_crash_fwd").toString
     val store = new SegmentStore(spark, dir)
     save(store, Seq(entry(1L, "v1")))
@@ -124,8 +158,8 @@ class SegmentStoreSpec extends SparkSpec {
     assert(fsys.rename(p(s"$dir/_catalog.json"), p(s"$dir/_catalog.json__old")))
 
     val cat = store.loadCatalog()
-    assert(cat.map(_.segmentName) == Seq("v2") && cat.head.rowCount == 9L,
-      "a complete staging file must win (the save had finished writing)")
+    assert(cat.map(_.segmentName) == Seq("v1") && cat.head.rowCount == 0L,
+      "a crashed save rolls back: __old stays published, __staging is scratch")
     save(store, Seq(entry(2L, "v3"))) // subsequent saves still work
     assert(fsys.exists(p(s"$dir/_catalog.json")) && !fsys.exists(p(s"$dir/_catalog.json__old")) &&
       !fsys.exists(p(s"$dir/_catalog.json__staging")),
@@ -148,7 +182,7 @@ class SegmentStoreSpec extends SparkSpec {
       "without a staging file the previous catalog must be read")
   }
 
-  test("a swap that fails after a crashed swap publishes the crashed swap's complete copy") {
+  test("a swap failing after a crashed swap keeps __old published") {
     val dir = Files.createTempDirectory("graft_crash_twice").toString
     val store = new SegmentStore(spark, dir)
     save(store, Seq(entry(1L, "v1")))
@@ -163,8 +197,8 @@ class SegmentStoreSpec extends SparkSpec {
     intercept[RuntimeException](SegmentStore.swapIn(fsys, p(s"$dir/_catalog.json")) { _ =>
       throw new RuntimeException("crash while writing")
     })
-    assert(fsys.exists(p(s"$dir/_catalog.json")))
-    assert(store.loadCatalog().map(_.segmentName) == Seq("v2"))
+    assert(fsys.exists(p(s"$dir/_catalog.json__old")) && !fsys.exists(p(s"$dir/_catalog.json")))
+    assert(store.loadCatalog().map(_.segmentName) == Seq("v1"))
   }
 
   test("a stale catalog lock from a dead writer is broken, a fresh save proceeds") {
@@ -203,5 +237,115 @@ class SegmentStoreSpec extends SparkSpec {
     assert(store.write(7L, seg) == 2L)
     assert(store.write(8L, seg.filter($"user_id" < 0)) == 0L, "empty write counts 0")
     assert(store.read(7L).count() == 2L)
+  }
+
+  // ---- crash points -------------------------------------------------------
+  //
+  // Every rename/delete a publish makes on a swap path is a crash point
+  // (Pillai et al., OSDI 2014). Each case replays one call against a copy of
+  // one warehouse, crashing at operation k for every k the call makes, then
+  // opens a fresh store on the plain scheme: every published item must read
+  // as exactly its previous or its new content. `rowCount` may trail a
+  // swapped segment (see SegmentRunner.runDue), so it is not compared.
+
+  private val crashRule = Condition("transaction_amount", ">", "500")
+  private val streamId = 42L
+
+  /** `tx()` plus a third user, so every item's new content differs. */
+  private def txNew(): DataFrame = tx().unionByName(
+    Seq((3L, 900.0, "2024-01-09 10:00:00", "Travel", 2)).toDF("user_id", "amount", "ts_s", "category", "city_tier")
+      .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s").withColumn("transaction_type", lit("UPI")))
+
+  private def crashStore(dir: String): SegmentStore = {
+    spark.sparkContext.hadoopConfiguration
+      .setClass("fs.crashfs.impl", classOf[CrashFs], classOf[org.apache.hadoop.fs.FileSystem])
+    new SegmentStore(spark, s"crashfs://$dir")
+  }
+
+  /** Rule 1 materialized, the 14-day rollup, and a streaming segment. Built
+    * through CrashFs (unarmed) so no checksum sidecar outlives a rename.
+    */
+  private lazy val crashTemplate: String = {
+    val dir = Files.createTempDirectory("graft_crash_tmpl").toString
+    CrashFs.arm(Long.MaxValue)
+    val store = crashStore(dir)
+    val runner = new SegmentRunner(store, tx)
+    val (id, _) = runner.createRule("r1", Seq(crashRule))
+    runner.run(id, "2026-08-12T00:00:00Z")
+    RollupServing.materialize(store, tx(), Seq(14))
+    store.write(streamId, Seq((10L, 1L, 5.0, "UPI"), (11L, 2L, 7.0, "CC"))
+      .toDF("user_id", "total_transactions", "total_spent", "transaction_types"))
+    dir
+  }
+
+  private def copyOf(src: String): String = {
+    val dst = Files.createTempDirectory("graft_crash_run")
+    val from = java.nio.file.Paths.get(src)
+    val walk = Files.walk(from)
+    try walk.forEach { f =>
+      val to = dst.resolve(from.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+    } finally walk.close()
+    dst.toString
+  }
+
+  /** What a fresh store on the plain scheme reads: catalog ids and names,
+    * rule 1's segment, the served 14-day window, the streaming segment.
+    */
+  private def published(dir: String): Seq[Any] = {
+    val store = new SegmentStore(spark, dir)
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
+    Seq(store.loadCatalog().map(e => (e.ruleId, e.segmentName)), rows(store.read(1L)),
+      RollupServing.serveSegment(spark, store, 14, Nil).map(rows), rows(store.read(streamId)))
+  }
+
+  private def replayCrashPoints(call: SegmentStore => Unit): Unit = {
+    val before = published(crashTemplate)
+    val clean = copyOf(crashTemplate)
+    CrashFs.arm(Long.MaxValue)
+    call(crashStore(clean))
+    val ops = CrashFs.count
+    val after = published(clean)
+    assert(ops > 0 && after != before, "the call must publish something")
+    info(s"$ops crash points")
+    for (k <- 1L to ops) {
+      val dir = copyOf(crashTemplate)
+      CrashFs.arm(k)
+      try scala.util.Try(call(crashStore(dir))) finally CrashFs.arm(Long.MaxValue)
+      val got = published(dir)
+      Seq("catalog", "rule 1's segment", "served window", "streaming segment").zipWithIndex.foreach {
+        case (item, i) => assert(got(i) == before(i) || got(i) == after(i),
+          s"crash at operation $k of $ops: the $item reads ${got(i)}, " +
+            s"neither previous ${before(i)} nor new ${after(i)}")
+      }
+      val store = new SegmentStore(spark, dir)
+      val (id, _) = new SegmentRunner(store, tx).createRule("probe", Seq(crashRule))
+      assert(!store.exists(id), s"crash at operation $k of $ops: id $id reused over a segment")
+    }
+  }
+
+  test("crash point: createRule's catalog save") {
+    replayCrashPoints(store => new SegmentRunner(store, txNew).createRule("r2", Seq(crashRule)))
+  }
+
+  test("crash point: run's segment swap and catalog commit") {
+    replayCrashPoints(store => new SegmentRunner(store, txNew).run(1L, "2026-08-12T01:00:00Z"))
+  }
+
+  test("crash point: RollupServing.materialize") {
+    replayCrashPoints(store => RollupServing.materialize(store, txNew(), Seq(14)))
+  }
+
+  test("crash point: one sinkToStore batch keeps the earlier members") {
+    implicit val sqlCtx = spark.sqlContext
+    replayCrashPoints { store =>
+      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Double, String)]
+      val seg = SegmentStream.continuousSegment(in.toDF().toDF("user_id", "amount", "transaction_type"),
+        Seq(Condition("total_spend", "<", "100")))
+      val q = SegmentStream.sinkToStore(seg, store, streamId)
+        .option("checkpointLocation", Files.createTempDirectory("graft_crash_ckpt").toString)
+        .start()
+      try { in.addData((12L, 50.0, "UPI")); q.processAllAvailable() } finally q.stop()
+    }
   }
 }

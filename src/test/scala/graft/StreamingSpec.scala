@@ -678,6 +678,47 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("store sink after a crashed swap keeps the earlier members (roll back)") {
+    import graft.model.Condition
+    import graft.streaming.SegmentStream
+    import java.nio.file.{Files, Path}
+    implicit val sqlCtx = spark.sqlContext
+    val wh = Files.createTempDirectory("graft_sink_crash")
+    val ckpt = Files.createTempDirectory("graft_sink_crash_ckpt")
+    val store = new graft.sources.SegmentStore(spark, wh.toString)
+    val in = MemoryStream[(Long, Double, String)]
+    val seg = SegmentStream.continuousSegment(
+      in.toDF().toDF("user_id", "amount", "transaction_type"),
+      Seq(Condition("total_spend", "<", "100")))
+    val q = SegmentStream.sinkToStore(seg, store, ruleId = 42L)
+      .option("checkpointLocation", ckpt.toString)
+      .start()
+    def copyTree(from: Path, to: Path): Unit = {
+      val walk = Files.walk(from)
+      try walk.forEach(f => Files.copy(f, to.resolve(from.relativize(f).toString)))
+      finally walk.close()
+    }
+    try {
+      in.addData((1L, 60.0, "UPI"))
+      q.processAllAvailable()
+      // a crash between the swap's two renames: the segment moved aside,
+      // the crashed swap's complete copy still in staging
+      Files.move(wh.resolve("segment_output_42"), wh.resolve("segment_output_42__old"))
+      copyTree(wh.resolve("segment_output_42__old"), wh.resolve("segment_output_42__staging"))
+      in.addData((2L, 50.0, "CC"))
+      q.processAllAvailable()
+      assert(store.read(42L).select("user_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L),
+        "batch 1's member must survive the crashed swap")
+      assert(wh.toFile.list().filter(_.startsWith("segment_output_42")).toSeq == Seq("segment_output_42"),
+        "the next swap discards the staging copy and the moved-aside segment")
+    } finally {
+      q.stop()
+      import scala.reflect.io.Directory
+      new Directory(wh.toFile).deleteRecursively()
+      new Directory(ckpt.toFile).deleteRecursively()
+    }
+  }
+
   test("streaming near-dup gate: stream kept set == batch minhashNearDups keep rule") {
     import graft.streaming.DocsStream
     import graft.functions.{Dedup, MinhashIndex}
