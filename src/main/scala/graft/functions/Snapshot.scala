@@ -78,15 +78,12 @@ object Snapshot {
     graft.sources.SegmentStore.readPublished(fsys, p).map(new String(_, "UTF-8").trim)
 
   /** Publish a small metadata file (pointer/log) through
-    * [[graft.sources.SegmentStore.swapIn]]: `content` lands in a staging
-    * sibling, the live file moves aside, and the staging file is renamed in.
+    * [[graft.sources.SegmentStore.swapIn]].
     */
   private def swapSmall(fsys: org.apache.hadoop.fs.FileSystem,
       base: org.apache.hadoop.fs.Path, name: String, content: String): Unit =
-    graft.sources.SegmentStore.swapIn(fsys, new org.apache.hadoop.fs.Path(base, name)) { tmp =>
-      val out = fsys.create(tmp, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
+    graft.sources.SegmentStore.publishBytes(fsys, new org.apache.hadoop.fs.Path(base, name),
+      content.getBytes("UTF-8"))
 
   /** Every version that was ever POINTER TARGET: the `_VERSIONS` log (one
     * line per publish), unioned with the live pointer — the log write

@@ -23,24 +23,13 @@ final class SegmentRunner(
     store: SegmentStore,
     tx: () => DataFrame,
     keyed: Boolean = true,
-    residualMode: Planner.ResidualMode = Planner.ApplyResidual,
-    mode: ConditionCompiler.Mode = ConditionCompiler.DefaultMode) {
+    residualMode: Planner.ResidualMode = Planner.ApplyResidual) {
 
   private def asRule(e: SegmentCatalogEntry): Rule =
     Rule(e.ruleId, e.segmentName, e.conditions,
       schedule = e.schedule, isActive = e.isActive,
       dependencies = e.dependsOn,
       operation = e.operation.flatMap(SetOp.parse))
-
-  /** The reference writes the literal string `COMPOUND_OPERATION:<op>` into
-    * the catalog's sql_query column for compound rules
-    * (reference: backend/app/api/rules.py:211) — a display sentinel, never
-    * consulted by dispatch (the structured depends_on/operation fields
-    * govern, Q5). Reproduced verbatim against our stored lowercase op so a
-    * catalog listing round-trips like the reference's.
-    */
-  private def compoundSentinel(op: SetOp): Option[String] =
-    Some(s"COMPOUND_OPERATION:${op.toString.toLowerCase}")
 
   /** The catalog fields a plan decides: stored conditions (the residual
     * for a compound rule), parents, operation and display SQL.
@@ -51,8 +40,11 @@ final class SegmentRunner(
         e.copy(conditions = cs, dependsOn = Nil, operation = None,
           sqlQuery = Some(ReferenceSql.generateSegmentSql(cs)))
       case SegmentPlan.Compound(parents, op, residual) =>
+        // sql_query holds the reference's display sentinel
+        // `COMPOUND_OPERATION:<op>` (rules.py:211); dispatch never reads it (Q5)
+        val name = op.toString.toLowerCase
         e.copy(conditions = residual, dependsOn = parents,
-          operation = Some(op.toString.toLowerCase), sqlQuery = compoundSentinel(op))
+          operation = Some(name), sqlQuery = Some(s"COMPOUND_OPERATION:$name"))
     }
 
   /** Create + catalog a rule. Returns its id and the plan that was bound.
@@ -114,10 +106,16 @@ final class SegmentRunner(
   }
 
   /** Update a rule's conditions: re-runs dependency detection excluding the
-    * rule itself (reference rules.py:154-225, R7).
+    * rule itself (reference rules.py:154-225, R7). Deviation: a rule with
+    * dependents is refused, like [[deleteRule]]'s guard (the reference
+    * updates it in place, which changes what its dependents mean and may
+    * bind it onto one of them: a cycle [[runAll]] throws on).
     */
   def updateRule(ruleId: Long, conditions: Seq[Condition]): SegmentPlan =
     store.modifyCatalog { catalog =>
+      val dependents = catalog.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
+      require(dependents.isEmpty, s"rule $ruleId has dependents ${dependents.mkString(",")}; " +
+        "re-plan or delete them first")
       val plan = Planner.planNew(conditions, catalog.filter(_.ruleId != ruleId).map(asRule))
       (catalog.map(e => if (e.ruleId == ruleId) withPlan(e, plan) else e), plan)
     }
@@ -151,7 +149,7 @@ final class SegmentRunner(
     * reference computes cadence but never re-arms after a run). The
     * refreshed rules' row counts, refresh stamps and re-arms land in ONE
     * catalog transaction after the tick, and their history rows in one
-    * append, so the control-plane I/O stays O(rules), not O(rules²). A
+    * file, so the control-plane I/O stays O(rules), not O(rules²). A
     * crash mid-batch leaves the segments rewritten so far with their
     * previous `rowCount` and not re-armed (still due), so the next tick
     * re-runs them idempotently; a rule that throws still commits the rules
@@ -187,14 +185,14 @@ final class SegmentRunner(
       // write() handles the empty case (canonical-schema empty parquet, Q9);
       // probing emptiness first would execute the whole DAG twice.
       done :+= id -> store.write(id,
-        Planner.evaluate(plan, tx(), store.read, keyed, residualMode, mode))
+        Planner.evaluate(plan, tx(), store.read, keyed, residualMode))
     } finally commit(done, at, rearm)
     done.toMap
   }
 
   /** One catalog transaction sets each refreshed rule's row count (S7),
     * refresh stamp and, when `rearm`, next arm time on the catalog as it is
-    * under the lock; one history append records the whole batch.
+    * under the lock; one driver-written history file records the batch.
     */
   private def commit(counts: Seq[(Long, Long)], at: String, rearm: Boolean): Unit =
     if (counts.nonEmpty) {

@@ -85,16 +85,15 @@ object Planner {
       loadParent: Long => DataFrame,
       keyed: Boolean = true,
       residualMode: ResidualMode = ApplyResidual,
-      mode: ConditionCompiler.Mode = ConditionCompiler.DefaultMode,
       faithfulParentGuard: Boolean = false): DataFrame =
     plan match {
       case SegmentPlan.Base(conds) =>
-        SegmentEngine.materializeBase(tx, conds, mode)
+        SegmentEngine.materializeBase(tx, conds)
       case SegmentPlan.Compound(parents, op, residual) =>
         val parentDfs = parents.map(loadParent)
         val inputs = residualMode match {
           case ApplyResidual if residual.nonEmpty =>
-            val compiled = ConditionCompiler.compile(residual, mode)
+            val compiled = ConditionCompiler.compile(residual)
             if (compiled.isVacuous) parentDfs
             else parentDfs :+ SegmentEngine.materializeCompiled(tx, compiled)
           case _ => parentDfs

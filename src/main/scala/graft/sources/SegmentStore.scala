@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * update (reference: backend/app/processor/spark_processor.py:169-203 and
   * :139-167).
   *
-  * Layout: `$warehouse/segment_output_<ruleId>/` (one parquet dir per rule)
-  * and `$warehouse/_catalog.json` (one JSON document of catalog entries,
-  * read and written on the driver, never by a Spark job). A refresh never
+  * Layout: `$warehouse/segment_output_<ruleId>/` (one parquet dir per rule),
+  * `$warehouse/_catalog.json` (one JSON document of catalog entries) and
+  * `$warehouse/_history/<uuid>.json` (one JSON array of run rows per batch),
+  * both read and written on the driver, never by a Spark job. A refresh never
   * overwrites a segment in place: the new content is written beside it and
   * swapped in ([[SegmentStore.swapIn]]), so a failed refresh leaves the
   * previous segment readable, like the reference's transactional table
@@ -114,10 +115,7 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     withCatalogLock {
       val (next, result) = f(loadCatalogLocked())
       val (fsys, p) = fs(catalogPath)
-      SegmentStore.swapIn(fsys, p) { staging =>
-        val out = fsys.create(staging, true)
-        try out.write(SegmentStore.encodeCatalog(next)) finally out.close()
-      }
+      SegmentStore.publishBytes(fsys, p, SegmentStore.toJson(next))
       result
     }
 
@@ -176,7 +174,7 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   private def loadCatalogLocked(): Seq[SegmentCatalogEntry] = {
     val (fsys, p) = fs(catalogPath)
     SegmentStore.readPublished(fsys, p) match {
-      case Some(bytes) => SegmentStore.decodeCatalog(bytes).sortBy(_.ruleId)
+      case Some(bytes) => SegmentStore.fromJson[List[SegmentCatalogEntry]](bytes).sortBy(_.ruleId)
       case None =>
         val legacy = new Path(s"$warehouse/_catalog")
         if (fsys.exists(legacy)) throw new IllegalStateException(
@@ -188,32 +186,34 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
 
   // ---- run history -----------------------------------------------------------
   //
-  // Beyond-parity observability: every materialization appends one
+  // Beyond-parity observability: every materialization records one
   // (rule_id, refreshed_at, row_count) row, so segment GROWTH over runs is
-  // a queryable table instead of a lost log line (the reference's catalog
-  // keeps only the latest row_count). Append-only parquet: each refresh
-  // batch writes one fresh file holding all of its rows, so no catalog lock
-  // is needed — concurrent runners never touch each other's files, and
-  // readers only see committed files. At production run rates the directory
-  // accretes small files; that is the standard table-maintenance story
-  // ([[Tables.compact]] on a cadence).
+  // queryable (the reference's catalog keeps only the latest row_count).
+  // Each refresh batch publishes one new driver-side file, `<uuid>.json`,
+  // in the catalog's codec through [[SegmentStore.swapIn]]: no Spark job,
+  // and no lock, as names are unique across processes. A crashed publish
+  // leaves only a `__staging` file, which readers never list. Files accrete
+  // one per batch; nothing folds them together.
 
   private val historyPath = s"$warehouse/_history"
 
   def appendRunHistory(entries: Seq[RunHistoryEntry]): Unit = {
-    import spark.implicits._
-    entries.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(historyPath)
+    val (fsys, p) = fs(s"$historyPath/${java.util.UUID.randomUUID()}.json")
+    SegmentStore.publishBytes(fsys, p, SegmentStore.toJson(entries))
   }
 
-  /** All recorded runs (empty frame with the canonical schema when no run
-    * has ever been recorded). Filter by rule_id / order by refreshed_at at
-    * the call site — it is a plain DataFrame.
+  /** All recorded runs, decoded on the driver into a local DataFrame (empty
+    * when none). Filter by rule_id / order by refreshed_at at the call site.
+    * A parquet `_history` from an earlier engine is refused, never read as empty.
     */
   def runHistory(): DataFrame = {
-    import spark.implicits._
-    val (f, p) = fs(historyPath)
-    if (!f.exists(p)) spark.emptyDataset[RunHistoryEntry].toDF()
-    else spark.read.parquet(historyPath)
+    val (fsys, dir) = fs(historyPath)
+    val files = fsys.globStatus(new Path(dir, "*")).toSeq.map(_.getPath) // none when no dir
+    files.find(_.getName.endsWith(".parquet")).foreach(f => throw new IllegalStateException(
+      s"$f is parquet run history; the history format changed to $dir/*.json and " +
+        "parquet history is not read. Move it aside or recreate the warehouse."))
+    spark.createDataFrame(files.filter(_.getName.endsWith(".json")).flatMap(f =>
+      SegmentStore.readPublished(fsys, f).toSeq.flatMap(SegmentStore.fromJson[List[RunHistoryEntry]])))
   }
 
   /** Lineage DAG for a rule: nodes + edges via recursive parent walk with a
@@ -243,8 +243,9 @@ object SegmentStore {
     jvmLocks.computeIfAbsent(fsys.makeQualified(target).toString, _ => new Object)
 
   /** Crash-safe replacement of a file or directory, the one way one is
-    * published. Its five callers are segment writes, the catalog
-    * ([[SegmentStore.modifyCatalog]]), `RollupServing.materialize`,
+    * published. Its six callers are segment writes, the catalog
+    * ([[SegmentStore.modifyCatalog]]), run-history files
+    * ([[SegmentStore.appendRunHistory]]), `RollupServing.materialize`,
     * `Tables.compact` and `Snapshot`'s pointer files. `writeStaging`
     * materializes the new content into `<target>__staging` (its result is
     * returned), then the target is moved aside to `<target>__old` and the
@@ -277,6 +278,13 @@ object SegmentStore {
   private[graft] def resolve(fsys: FileSystem, target: Path): Option[Path] =
     Seq(target, swapSiblings(target)._2).find(fsys.exists)
 
+  /** Publish `bytes` as the small file `target` ([[swapIn]]). */
+  private[graft] def publishBytes(fsys: FileSystem, target: Path, bytes: Array[Byte]): Unit =
+    swapIn(fsys, target) { staging =>
+      val out = fsys.create(staging, true)
+      try out.write(bytes) finally out.close()
+    }
+
   /** The bytes of a small published file ([[resolve]]), or None. */
   private[graft] def readPublished(fsys: FileSystem, target: Path): Option[Array[Byte]] =
     resolve(fsys, target).map { f =>
@@ -288,10 +296,11 @@ object SegmentStore {
   private def swapSiblings(target: Path): (Path, Path) =
     (target.suffix("__staging"), target.suffix("__old"))
 
-  /** The catalog's JSON codec. A condition keeps the reference's own shape:
-    * `value` is a string, or a list for IN / NOT IN, and `value2` appears
-    * only when present. An entry missing a field written by a later engine
-    * version (e.g. `schedule`) takes its [[SegmentCatalogEntry]] default.
+  /** The JSON codec of the catalog and the run history. A condition keeps
+    * the reference's own shape: `value` is a string, or a list for IN /
+    * NOT IN, and `value2` appears only when present. An entry missing a
+    * field written by a later engine version (e.g. `schedule`) takes its
+    * [[SegmentCatalogEntry]] default.
     */
   private implicit val catalogFormats: org.json4s.Formats =
     org.json4s.DefaultFormats + ConditionSerializer
@@ -324,15 +333,12 @@ object SegmentStore {
     })
   })
 
-  private[graft] def encodeCatalog(entries: Seq[SegmentCatalogEntry]): Array[Byte] =
-    org.json4s.jackson.Serialization.write(entries).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private[graft] def toJson(a: AnyRef): Array[Byte] =
+    org.json4s.jackson.Serialization.write(a).getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  private[graft] def decodeCatalog(bytes: Array[Byte]): Seq[SegmentCatalogEntry] =
-    org.json4s.jackson.Serialization.read[List[SegmentCatalogEntry]](
-      new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+  private[graft] def fromJson[A: Manifest](bytes: Array[Byte]): A =
+    org.json4s.jackson.Serialization.read[A](new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
 }
 
-/** One recorded materialization (run-history row). Top-level so Spark can
-  * derive an Encoder for it.
-  */
+/** One recorded materialization (run-history row), top-level so Spark derives its schema. */
 case class RunHistoryEntry(rule_id: Long, refreshed_at: String, row_count: Long)

@@ -57,11 +57,10 @@ object SegmentStream {
     * StreamingSpec, including a shrinking-membership case). Run with
     * `OutputMode.Update`.
     */
-  def continuousSegment(tx: DataFrame, conditions: Seq[Condition],
-      mode: ConditionCompiler.Mode = ConditionCompiler.DefaultMode): DataFrame = {
+  def continuousSegment(tx: DataFrame, conditions: Seq[Condition]): DataFrame = {
     val spark = tx.sparkSession
     import spark.implicits._
-    val compiled = ConditionCompiler.compile(conditions, mode)
+    val compiled = ConditionCompiler.compile(conditions)
     val filtered = compiled.where.map(tx.filter).getOrElse(tx)
       .filter(col("user_id").isNotNull)
     val typed = filtered.select(

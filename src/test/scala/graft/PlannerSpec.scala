@@ -229,9 +229,9 @@ class PlannerSpec extends SparkSpec {
     val cs = Seq(cAmount, cDate, Condition.in("city_tier", Seq("1", "2")),
       Condition("transaction_amount", ">", ""))
     val entry = SegmentCatalogEntry(1L, "r", "segment_output_1", cs, Nil, None)
-    val json = new String(SegmentStore.encodeCatalog(Seq(entry)), "UTF-8")
-    assert(SegmentStore.decodeCatalog(json.getBytes("UTF-8")) == Seq(entry))
-    assert(SegmentStore.decodeCatalog(SegmentStore.encodeCatalog(Nil)) == Nil)
+    val json = new String(SegmentStore.toJson(Seq(entry)), "UTF-8")
+    assert(SegmentStore.fromJson[List[SegmentCatalogEntry]](json.getBytes("UTF-8")) == Seq(entry))
+    assert(SegmentStore.fromJson[List[SegmentCatalogEntry]](SegmentStore.toJson(Nil)) == Nil)
     // the reference's condition shape: a list value for IN, value2 only when present
     assert(json.contains("""{"field":"city_tier","operator":"IN","value":["1","2"]}"""))
     assert(json.contains(""""value":"2025-06-01","value2":"2025-06-30"}"""))

@@ -74,7 +74,7 @@ object ConditionProps extends Properties("ConditionLanguage") {
   property("codec round-trips arbitrary condition lists") =
     forAll(Gen.listOf(genAnyCond), genText) { (cs, name) =>
       val entry = SegmentCatalogEntry(1L, name, "segment_output_1", cs, Nil, None)
-      SegmentStore.decodeCatalog(SegmentStore.encodeCatalog(Seq(entry))) == Seq(entry)
+      SegmentStore.fromJson[List[SegmentCatalogEntry]](SegmentStore.toJson(Seq(entry))) == Seq(entry)
     }
 }
 

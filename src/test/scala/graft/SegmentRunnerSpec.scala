@@ -2,7 +2,7 @@ package graft
 
 import graft.model._
 import graft.operators.SegmentRunner
-import graft.sources.SegmentStore
+import graft.sources.{RunHistoryEntry, SegmentStore}
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -430,14 +430,29 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(listings.get() >= 1 && runner.listRules(1, 100).map(_.ruleId) == (1L to 8L))
   }
 
+  /** The ids of the Spark jobs `body` launched on this thread. */
+  private def jobsLaunchedBy(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"driver-only-${System.nanoTime()}"
+    sc.setJobGroup(group, "driver-only calls")
+    try body finally sc.clearJobGroup()
+    // job events reach the status tracker asynchronously but in order: once
+    // a later marker job shows up, every earlier job in `group` would too
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
+    sc.statusTracker.getJobIdsForGroup(group).toSeq
+  }
+
   test("catalog calls on rules that never ran launch no Spark job") {
     val dir = Files.createTempDirectory("graft_runner_nojob").toString
     val store = new SegmentStore(spark, dir)
     val runner = new SegmentRunner(store, tx)
-    val sc = spark.sparkContext
-    val group = s"catalog-only-${System.nanoTime()}"
-    sc.setJobGroup(group, "catalog calls")
-    try {
+    val jobs = jobsLaunchedBy {
       val (id1, _) = runner.createRule("r1", Seq(cAmount))
       val (id2, plan) = runner.createRule("r2", Seq(cAmount, cTier))
       assert(plan == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cTier)))
@@ -449,18 +464,18 @@ class SegmentRunnerSpec extends SparkSpec {
       runner.deleteRule(id2)
       runner.deleteRule(id1)
       assert(runner.listRules().isEmpty)
-    } finally sc.clearJobGroup()
-    // job events reach the status tracker asynchronously but in order: once
-    // a later marker job shows up, every earlier job in `group` would too
-    val marker = s"$group-marker"
-    sc.setJobGroup(marker, "marker")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
-    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
-      "catalog reads and writes must stay on the driver")
+    }
+    assert(jobs.isEmpty, "catalog reads and writes must stay on the driver")
+  }
+
+  test("a refresh batch's history commit launches no Spark job") {
+    val dir = Files.createTempDirectory("graft_runner_hist_nojob").toString
+    val store = new SegmentStore(spark, dir)
+    val rows = Seq(RunHistoryEntry(1L, "2026-08-12T00:00:00Z", 2L),
+      RunHistoryEntry(2L, "2026-08-12T00:00:00Z", 0L))
+    assert(jobsLaunchedBy(store.appendRunHistory(rows)).isEmpty,
+      "the history commit must stay on the driver")
+    assert(store.runHistory().as[RunHistoryEntry].collect().toSeq.sortBy(_.rule_id) == rows)
   }
 
   test("runAll commits the batch's run history as one file") {
@@ -471,7 +486,7 @@ class SegmentRunnerSpec extends SparkSpec {
     runner.createRule("r2", Seq(cTier))
     runner.createRule("r3", Seq(Condition("transaction_amount", ">", "99999")))
     def historyFiles(): Int =
-      Option(new java.io.File(dir, "_history").list()).fold(0)(_.count(_.endsWith(".parquet")))
+      Option(new java.io.File(dir, "_history").list()).fold(0)(_.count(_.endsWith(".json")))
     val before = historyFiles()
     assert(runner.runAll("2026-08-12T00:00:00Z").size == 3)
     assert(historyFiles() - before == 1)
@@ -489,5 +504,21 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(plan == SegmentPlan.Compound(Seq(1L), SetOp.Intersection, Seq(cTier)))
     val entry = store.loadCatalog().find(_.ruleId == id2).get
     assert(entry.dependsOn == Seq(1L) && entry.conditions == Seq(cTier))
+  }
+
+  test("updateRule refuses a rule with dependents, so no update can bind a cycle") {
+    val dir = Files.createTempDirectory("graft_runner_update_cycle").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val (id1, _) = runner.createRule("r1", Seq(cAmount))
+    val (id2, p2) = runner.createRule("r2", Seq(cAmount, cTier))
+    assert(p2 == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cTier)))
+    val before = store.loadCatalog()
+    // re-planned against r2's residual {tier=1}, r1 would bind onto r2
+    val e = intercept[IllegalArgumentException](
+      runner.updateRule(id1, Seq(cTier, Condition("transaction_amount", "<", "900"))))
+    assert(e.getMessage.contains(s"rule $id1 has dependents $id2"))
+    assert(store.loadCatalog() == before, "a refused update must leave the catalog as it was")
+    assert(runner.runAll("2026-08-12T00:00:00Z").keySet == Set(id1, id2))
   }
 }

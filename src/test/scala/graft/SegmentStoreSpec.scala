@@ -3,7 +3,7 @@ package graft
 import graft.model._
 import graft.operators.SegmentRunner
 import graft.plans.RollupServing
-import graft.sources.SegmentStore
+import graft.sources.{RunHistoryEntry, SegmentStore}
 import graft.streaming.SegmentStream
 import java.net.URI
 import java.nio.file.Files
@@ -22,8 +22,9 @@ class MockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 
 /** MockFs under its own scheme that crashes the process at the k-th
-  * rename or delete of a swap target or of its `__staging`/`__old`
-  * sibling ([[CrashFs.arm]]): that operation and every later one on a swap
+  * rename or delete of a swap target (a segment, the catalog, the rollup or
+  * a `_history` log file) or of its `__staging`/`__old` sibling
+  * ([[CrashFs.arm]]): that operation and every later one on a swap
   * path throw, as if the process had died. `_catalog.lock` is exempt (a
   * stale lock has its own test); other files are untouched.
   */
@@ -39,7 +40,7 @@ class CrashFs extends MockFs {
 }
 
 object CrashFs {
-  private val SwapPath = """(segment_output_\d+|_catalog\.json|rollup_user_windows)(__staging|__old)?""".r
+  private val SwapPath = """(segment_output_\d+|_catalog\.json|rollup_user_windows|[0-9a-f-]{36}\.json)(__staging|__old)?""".r
   private val ops = new java.util.concurrent.atomic.AtomicLong(0)
   @volatile private var crashAt = Long.MaxValue
 
@@ -130,6 +131,13 @@ class SegmentStoreSpec extends SparkSpec {
       assert(e.getMessage.contains("_catalog.json") && e.getMessage.contains("parquet"))
     }
     assert(listing() == before && before == Seq("_catalog"), "nothing may be written")
+  }
+
+  test("a warehouse holding parquet run history is refused by name") {
+    val dir = Files.createTempDirectory("graft_parquethist").toString
+    Seq(RunHistoryEntry(1L, "2026-01-01T00:00:00Z", 3L)).toDF().write.parquet(s"$dir/_history")
+    val e = intercept[IllegalStateException](new SegmentStore(spark, dir).runHistory())
+    assert(e.getMessage.contains("_history") && e.getMessage.contains("parquet"))
   }
 
   private def entry(id: Long, name: String, rows: Long = 0L) =
@@ -290,13 +298,15 @@ class SegmentStoreSpec extends SparkSpec {
   }
 
   /** What a fresh store on the plain scheme reads: catalog ids and names,
-    * rule 1's segment, the served 14-day window, the streaming segment.
+    * rule 1's segment, the served 14-day window, the streaming segment and
+    * the run history.
     */
   private def published(dir: String): Seq[Any] = {
     val store = new SegmentStore(spark, dir)
     def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
     Seq(store.loadCatalog().map(e => (e.ruleId, e.segmentName)), rows(store.read(1L)),
-      RollupServing.serveSegment(spark, store, 14, Nil).map(rows), rows(store.read(streamId)))
+      RollupServing.serveSegment(spark, store, 14, Nil).map(rows), rows(store.read(streamId)),
+      store.runHistory().as[RunHistoryEntry].collect().toSeq.sortBy(h => (h.rule_id, h.refreshed_at)))
   }
 
   private def replayCrashPoints(call: SegmentStore => Unit): Unit = {
@@ -313,7 +323,8 @@ class SegmentStoreSpec extends SparkSpec {
       CrashFs.arm(k)
       try scala.util.Try(call(crashStore(dir))) finally CrashFs.arm(Long.MaxValue)
       val got = published(dir)
-      Seq("catalog", "rule 1's segment", "served window", "streaming segment").zipWithIndex.foreach {
+      val items = Seq("catalog", "rule 1's segment", "served window", "streaming segment", "run history")
+      items.zipWithIndex.foreach {
         case (item, i) => assert(got(i) == before(i) || got(i) == after(i),
           s"crash at operation $k of $ops: the $item reads ${got(i)}, " +
             s"neither previous ${before(i)} nor new ${after(i)}")
