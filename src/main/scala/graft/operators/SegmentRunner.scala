@@ -52,16 +52,19 @@ final class SegmentRunner(
     * cover did NOT consume (reference rules.py:40-50). `schedule` and
     * `isActive` govern scheduled execution ([[runAll]]/[[runDue]]). Id
     * assignment and dependency detection run inside the catalog
-    * transaction, so concurrent creates get distinct ids.
+    * transaction, so concurrent creates get distinct ids. Ids are never
+    * reused: a new rule takes one past the catalog's high-water mark, not
+    * past its current highest id, so a deleted rule's run history never
+    * passes to its successor.
     */
   def createRule(name: String, conditions: Seq[Condition],
       schedule: String = Schedule.Daily, isActive: Boolean = true): (Long, SegmentPlan) =
     store.modifyCatalog { catalog =>
-      val id = catalog.map(_.ruleId).maxOption.getOrElse(0L) + 1L
-      val plan = Planner.planNew(conditions, catalog.map(asRule))
+      val id = catalog.nextRuleId
+      val plan = Planner.planNew(conditions, catalog.rules.map(asRule))
       val entry = withPlan(SegmentCatalogEntry(id, name, s"segment_output_$id", Nil, Nil, None,
         schedule = schedule, isActive = isActive), plan)
-      (catalog :+ entry, (id, plan))
+      (catalog.rules :+ entry, (id, plan))
     }
 
   /** List cataloged rules, paginated like the reference's
@@ -80,7 +83,7 @@ final class SegmentRunner(
     * [[runAll]]/[[runDue]] but stay in the catalog and keep their data.
     */
   def setActive(ruleId: Long, active: Boolean): Unit =
-    store.modifyCatalog(catalog => (catalog.map(e =>
+    store.modifyCatalog(catalog => (catalog.rules.map(e =>
       if (e.ruleId == ruleId) e.copy(isActive = active) else e), ()))
 
   /** Delete a rule: catalog row + materialized segment dir
@@ -95,12 +98,12 @@ final class SegmentRunner(
     */
   def deleteRule(ruleId: Long, force: Boolean = false): Unit = {
     store.modifyCatalog { catalog =>
-      require(catalog.exists(_.ruleId == ruleId), s"rule $ruleId not in catalog")
-      val dependents = catalog.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
+      require(catalog.rules.exists(_.ruleId == ruleId), s"rule $ruleId not in catalog")
+      val dependents = catalog.rules.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
       require(force || dependents.isEmpty,
         s"rule $ruleId has dependents ${dependents.mkString(",")}; " +
           "re-plan or delete them first (or pass force = true)")
-      (catalog.filterNot(_.ruleId == ruleId), ())
+      (catalog.rules.filterNot(_.ruleId == ruleId), ())
     }
     store.delete(ruleId)
   }
@@ -113,11 +116,11 @@ final class SegmentRunner(
     */
   def updateRule(ruleId: Long, conditions: Seq[Condition]): SegmentPlan =
     store.modifyCatalog { catalog =>
-      val dependents = catalog.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
+      val dependents = catalog.rules.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
       require(dependents.isEmpty, s"rule $ruleId has dependents ${dependents.mkString(",")}; " +
         "re-plan or delete them first")
-      val plan = Planner.planNew(conditions, catalog.filter(_.ruleId != ruleId).map(asRule))
-      (catalog.map(e => if (e.ruleId == ruleId) withPlan(e, plan) else e), plan)
+      val plan = Planner.planNew(conditions, catalog.rules.filter(_.ruleId != ruleId).map(asRule))
+      (catalog.rules.map(e => if (e.ruleId == ruleId) withPlan(e, plan) else e), plan)
     }
 
   /** Materialize one rule into the store; returns the row count written.
@@ -197,7 +200,7 @@ final class SegmentRunner(
   private def commit(counts: Seq[(Long, Long)], at: String, rearm: Boolean): Unit =
     if (counts.nonEmpty) {
       val rows = counts.toMap
-      store.modifyCatalog(catalog => (catalog.map(e => rows.get(e.ruleId).fold(e)(n =>
+      store.modifyCatalog(catalog => (catalog.rules.map(e => rows.get(e.ruleId).fold(e)(n =>
         e.copy(rowCount = n, lastRefreshedAt = Some(at),
           nextRunAt = if (rearm) Some(Schedule.calculateNextRun(e.schedule, at))
                       else e.nextRunAt))), ()))

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * :139-167).
   *
   * Layout: `$warehouse/segment_output_<ruleId>/` (one parquet dir per rule),
-  * `$warehouse/_catalog.json` (one JSON document of catalog entries) and
+  * `$warehouse/_catalog.json` (one JSON document of catalog entries and
+  * the highest rule id ever assigned) and
   * `$warehouse/_history/<uuid>.json` (one JSON array of run rows per batch),
   * both read and written on the driver, never by a Spark job. A refresh never
   * overwrites a segment in place: the new content is written beside it and
@@ -75,7 +76,7 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   def delete(ruleId: Long): Boolean = {
     val (f, p) = fs(path(ruleId))
     val (staging, old) = SegmentStore.swapSiblings(p)
-    SegmentStore.jvmLock(f, p).synchronized(Seq(staging, old, p).map(f.delete(_, true)).last)
+    SegmentStore.withJvmLock(f, p)(Seq(staging, old, p).map(f.delete(_, true)).last)
   }
 
   // ---- catalog --------------------------------------------------------------
@@ -107,22 +108,25 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
 
   private val catalogPath = s"$warehouse/_catalog.json"
 
-  /** Transactionally rewrite the catalog: `f` receives the entries loaded
+  /** Transactionally rewrite the catalog: `f` receives the catalog loaded
     * under the lock and returns the entries to save plus a result. If `f`
-    * throws, nothing is saved.
+    * throws, nothing is saved. The saved high-water mark is the highest
+    * rule id ever saved, so a deleted rule's id is never handed out again.
     */
-  def modifyCatalog[A](f: Seq[SegmentCatalogEntry] => (Seq[SegmentCatalogEntry], A)): A =
+  def modifyCatalog[A](f: SegmentStore.Catalog => (Seq[SegmentCatalogEntry], A)): A =
     withCatalogLock {
-      val (next, result) = f(loadCatalogLocked())
+      val loaded = loadCatalogLocked()
+      val (next, result) = f(loaded)
       val (fsys, p) = fs(catalogPath)
-      SegmentStore.publishBytes(fsys, p, SegmentStore.toJson(next))
+      val highWater = (loaded.highWater +: next.map(_.ruleId)).max
+      SegmentStore.publishBytes(fsys, p, SegmentStore.toJson(SegmentStore.Catalog(next, highWater)))
       result
     }
 
   /** The catalog as of the last committed [[modifyCatalog]], read under the
     * catalog lock so it never meets a save mid-swap.
     */
-  def loadCatalog(): Seq[SegmentCatalogEntry] = withCatalogLock(loadCatalogLocked())
+  def loadCatalog(): Seq[SegmentCatalogEntry] = withCatalogLock(loadCatalogLocked().rules)
 
   /** Serialize catalog mutations across processes. Acquisition is an atomic
     * create-no-overwrite of `_catalog.lock`; a lock older than
@@ -137,7 +141,7 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     // serialize on the lock file, whose exclusive create IS atomic on HDFS
     // namenodes and POSIX local mounts.
     val (fsys, p) = fs(catalogPath)
-    SegmentStore.jvmLock(fsys, p).synchronized(withCatalogFileLock(body))
+    SegmentStore.withJvmLock(fsys, p)(withCatalogFileLock(body))
   }
 
   private def withCatalogFileLock[A](body: => A): A = {
@@ -171,16 +175,16 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     * earlier engine version is refused, never read as empty (an empty read
     * would reassign rule ids over existing segments).
     */
-  private def loadCatalogLocked(): Seq[SegmentCatalogEntry] = {
+  private def loadCatalogLocked(): SegmentStore.Catalog = {
     val (fsys, p) = fs(catalogPath)
     SegmentStore.readPublished(fsys, p) match {
-      case Some(bytes) => SegmentStore.fromJson[List[SegmentCatalogEntry]](bytes).sortBy(_.ruleId)
+      case Some(bytes) => SegmentStore.catalogFromJson(bytes)
       case None =>
         val legacy = new Path(s"$warehouse/_catalog")
         if (fsys.exists(legacy)) throw new IllegalStateException(
           s"$legacy is a parquet catalog; the catalog format changed to " +
             s"$p and parquet catalogs are not read. Recreate the warehouse.")
-        Seq.empty
+        SegmentStore.Catalog(Nil, 0L)
     }
   }
 
@@ -237,10 +241,33 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
 }
 
 object SegmentStore {
-  private val jvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def jvmLock(fsys: FileSystem, target: Path): Object =
-    jvmLocks.computeIfAbsent(fsys.makeQualified(target).toString, _ => new Object)
+
+  /** The catalog document: the rules, and the highest rule id ever saved. */
+  final case class Catalog(rules: Seq[SegmentCatalogEntry], highWater: Long) {
+    def nextRuleId: Long = highWater + 1L
+  }
+
+  /** One monitor per swap target while some thread holds or awaits it; its
+    * count of such threads is updated in `compute`, and the entry dropped
+    * at zero, so the map holds only targets with a swap in flight.
+    */
+  private final class Monitor { var users = 0 }
+  private val jvmLocks = new java.util.concurrent.ConcurrentHashMap[String, Monitor]()
+
+  /** Run `body` holding `target`'s monitor (re-entrant). */
+  private def withJvmLock[A](fsys: FileSystem, target: Path)(body: => A): A = {
+    val key = fsys.makeQualified(target).toString
+    val m = jvmLocks.compute(key, (_, m) => {
+      val held = if (m == null) new Monitor else m
+      held.users += 1
+      held
+    })
+    try m.synchronized(body)
+    finally jvmLocks.compute(key, (_, m) => { m.users -= 1; if (m.users == 0) null else m })
+  }
+
+  /** Swap targets with a monitor in the map (tests read its growth). */
+  private[graft] def jvmLockCount: Int = jvmLocks.size
 
   /** Crash-safe replacement of a file or directory, the one way one is
     * published. Its six callers are segment writes, the catalog
@@ -259,7 +286,7 @@ object SegmentStore {
     * object stores (s3a) they copy.
     */
   def swapIn[A](fsys: FileSystem, target: Path)(writeStaging: Path => A): A =
-    jvmLock(fsys, target).synchronized {
+    withJvmLock(fsys, target) {
       val (staging, old) = swapSiblings(target)
       fsys.delete(staging, true) // scratch of a failed or crashed write
       val result = writeStaging(staging)
@@ -332,6 +359,20 @@ object SegmentStore {
           "value" -> value) ++ c.value2.map("value2" -> str(_)))
     })
   })
+
+  /** A catalog document, its rules sorted by id; a bare list of entries
+    * (the format before the high-water mark) takes its highest id as the mark.
+    */
+  private def catalogFromJson(bytes: Array[Byte]): Catalog = {
+    val c = org.json4s.jackson.JsonMethods.parse(
+        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)) match {
+      case list: org.json4s.JArray =>
+        val rules = list.extract[List[SegmentCatalogEntry]]
+        Catalog(rules, rules.map(_.ruleId).maxOption.getOrElse(0L))
+      case doc => doc.extract[Catalog]
+    }
+    c.copy(rules = c.rules.sortBy(_.ruleId))
+  }
 
   private[graft] def toJson(a: AnyRef): Array[Byte] =
     org.json4s.jackson.Serialization.write(a).getBytes(java.nio.charset.StandardCharsets.UTF_8)

@@ -13,12 +13,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * and the segment updates per micro-batch with per-user keyed state.
   *
   * Exactness contract matches the batch engine bit-for-bit: amounts enter
-  * state as DECIMAL(·,6) unscaled longs (HALF_UP, the same rounding
-  * `cast(double as decimal(38,6))` applies), sums are exact integer adds
-  * (order-independent), and the emitted `total_spent` applies the same
-  * moneyOut convention (round to 2dp, surface as DOUBLE) — so a streaming
-  * segment row equals the batch row for the same data, which
-  * StreamingSpec asserts including the rounding boundaries.
+  * state as DECIMAL(18,6) unscaled longs (micro-units, HALF_UP, the same
+  * rounding `cast(double as decimal(18,6))` applies), sums are exact
+  * integer adds (order-independent), and the emitted `total_spent` applies
+  * the same moneyOut convention (round to 2dp, surface as DOUBLE) — so a
+  * streaming segment row equals the batch row for the same data, which
+  * StreamingSpec asserts including the rounding boundaries. Both share one
+  * domain: |amount| < 1e12 and a per-user total below about 9.2e12 (2^63
+  * micro-units); outside it both raise rather than round or wrap.
   *
   * State is bounded by the user key space (the product semantics — a
   * segment IS per-user running state), not by time; an eviction policy
@@ -32,10 +34,11 @@ object SegmentStream {
   final case class SegmentRow(user_id: Long, total_transactions: Long,
       total_spent: Double, transaction_types: String)
 
-  private def microsOf(amount: Double): Long =
-    java.math.BigDecimal.valueOf(amount)
-      .setScale(6, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
+  private def microsOf(amount: Double): Long = {
+    val d = java.math.BigDecimal.valueOf(amount).setScale(6, java.math.RoundingMode.HALF_UP)
+    if (d.precision > 18) throw new ArithmeticException(s"amount $amount is outside DECIMAL(18,6)")
+    d.unscaledValue().longValueExact()
+  }
 
   private def moneyOut(sumMicros: Long): Double =
     new java.math.BigDecimal(java.math.BigInteger.valueOf(sumMicros), 6)

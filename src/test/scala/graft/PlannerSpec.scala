@@ -125,7 +125,7 @@ class PlannerSpec extends SparkSpec {
       SegmentCatalogEntry(4, "s4", "segment_output_4", Nil, Seq(1, 3), Some("intersection")),
       SegmentCatalogEntry(3, "s3", "segment_output_3", Seq(cDate, cHaving), Seq(1), Some("intersection")))
     store.modifyCatalog(_ => (entries, ()))
-    store.modifyCatalog(cat => (cat.map(e => if (e.ruleId != 4) e else
+    store.modifyCatalog(cat => (cat.rules.map(e => if (e.ruleId != 4) e else
       e.copy(rowCount = 42, lastRefreshedAt = Some("2026-08-12T00:00:00"))), ()))
     val loaded = store.loadCatalog()
     assert(loaded.map(_.ruleId) == Seq(1, 3, 4))

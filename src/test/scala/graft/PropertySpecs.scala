@@ -338,3 +338,80 @@ object ClassifierProps extends Properties("ClassifierTrainer") {
       w.forall(_._2 == 0L) && b == 0L
     }
 }
+
+/** The segment kernel ([[graft.operators.SegmentEngine]]) against the
+  * expression it replaced, kept here as the reference: `count`, an exact
+  * `decimal(38,6)` sum and `sort_array(collect_set(...))`. Random frames
+  * cover null users, amounts and types, HALF_UP ties at the 7th decimal,
+  * amounts near 1e11 and names whose UTF-8 and UTF-16 orders differ, over
+  * the four ways a view can hold its type names.
+  */
+object SegmentKernelProps extends Properties("SegmentKernel") {
+  import graft.operators.SegmentEngine
+  import graft.sources.Tables
+  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.functions._
+
+  // each check runs about ten small Spark jobs
+  override def overrideParameters(p: org.scalacheck.Test.Parameters) = p.withMinSuccessfulTests(12)
+
+  private lazy val spark = {
+    val s = TestSession.spark
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
+  private def reference(view: DataFrame, where: Option[org.apache.spark.sql.Column]): DataFrame =
+    where.fold(view)(view.filter).groupBy(col("user_id")).agg(
+        count(col("user_id")).as("total_transactions"),
+        Tables.moneyOut(sum(col("amount").cast(Tables.MoneyExact))).as("total_spent"),
+        concat_ws(",", sort_array(collect_set(col("transaction_type")))).as("transaction_types"))
+      .filter(col("user_id").isNotNull)
+
+  private type Tx = (Option[Long], Option[Double], Option[String])
+  // "\uE000" and "Ａ" (U+FF21) sort after "😀" in UTF-16 code units but before
+  // it in UTF-8 bytes, the order sort_array uses; every other frame holds both
+  private val genNames: Gen[Seq[String]] = Gen.oneOf(
+    Gen.const(Seq("😀pay", "Ａpay", "\uE000", "UPI")),
+    Gen.choose(1, 5).flatMap(n => Gen.pick(n,
+      Seq("UPI", "CREDIT_CARD", "é-wallet", "日本", "😀pay", "Ａpay", "", "a,b")).map(_.toSeq)))
+  private val genAmount: Gen[Option[Double]] = Gen.frequency(
+    3 -> Gen.oneOf(0.0000005, -0.0000005, 55.5555555, -55.5555555, 61.505, 0.015,
+      1e11, -1e11, 99999999999.99998, 1234.5678915).map(Some(_)),
+    2 -> Gen.choose(-1e6, 1e6).map(Some(_)),
+    1 -> Gen.const(None))
+  private def genTx(names: Seq[String]): Gen[Tx] = for {
+    u <- Gen.frequency(6 -> Gen.choose(1L, 6L).map(Some(_)), 1 -> Gen.const(None))
+    a <- genAmount
+    t <- Gen.frequency(6 -> Gen.oneOf(names).map(Some(_)), 1 -> Gen.const(None))
+  } yield (u, a, t)
+  private val genFrame: Gen[(Seq[String], Seq[Tx])] = for {
+    names <- genNames
+    rows <- Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, genTx(names)))
+  } yield (names, rows)
+
+  property("kernel equals the decimal(38,6) sum and collect_set reference") =
+    forAll(genFrame, Gen.oneOf(None, Some("0"), Some("55.5555555"))) { case ((names, rows), over) =>
+      val s = spark
+      import s.implicits._
+      val local = rows.toDF("user_id", "amount", "transaction_type")
+      val dir = java.nio.file.Files.createTempDirectory("graft_kernel_props").toString
+      local.write.mode("overwrite").parquet(dir)
+      val parquet = spark.read.parquet(dir)
+      val tt = col("transaction_type")
+      val literal = parquet.withColumn("transaction_type", lit(names.head))
+      val union = (names.map(n => parquet.filter(tt === n).withColumn("transaction_type", lit(n))) :+
+        parquet.filter(tt.isNull).withColumn("transaction_type", lit(null).cast("string")))
+        .reduce(_ unionByName _)
+      val conds = over.toSeq.map(v => Condition("transaction_amount", ">", v))
+      val where = graft.operators.ConditionCompiler.compile(conds).where
+      def rowsOf(df: DataFrame): Seq[Row] = df.orderBy("user_id").collect().toSeq
+      val mismatches = Seq("literal" -> literal, "union" -> union, "local" -> local,
+          "parquet" -> parquet).flatMap { case (label, view) =>
+        val got = rowsOf(SegmentEngine.materializeBase(view, conds))
+        val want = rowsOf(reference(view, where))
+        if (got == want) None else Some(s"$label view: $got != $want")
+      }
+      Prop(mismatches.isEmpty) :| mismatches.mkString("\n")
+    }
+}

@@ -2,14 +2,18 @@ package graft
 
 import graft.model._
 import graft.operators._
+import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec,
+  SortAggregateExec}
 import org.apache.spark.sql.functions._
 
 /** Core segment pipeline, exercised with the reference's own boundary
   * fixture shape (reference: backend/scripts/seed_filter_test_data.py:20-58):
   * one user with rows above/below the amount threshold and in/out of tier.
   */
-class SegmentEngineSpec extends SparkSpec {
+class SegmentEngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def tx(rows: (Long, Double, String, String, Int, String)*): DataFrame =
@@ -93,5 +97,56 @@ class SegmentEngineSpec extends SparkSpec {
 
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("the segment aggregate plans a HashAggregate, and building it launches no job") {
+    val dir = Files.createTempDirectory("graft_engine_plan").toString
+    fixture.drop("transaction_type").write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    // shaped like Tables.transactions, and like the reference's UNION ALL
+    val literal = scan.withColumn("transaction_type", lit("EVENTS"))
+    def branch(tier: Int, name: String) =
+      scan.filter($"city_tier" === tier).withColumn("transaction_type", lit(name))
+    val union = branch(2, "UPI").unionByName(branch(1, "CREDIT_CARD"))
+    for ((view, types) <- Seq(literal -> Set("EVENTS"), union -> Set("CREDIT_CARD,UPI"))) {
+      var seg: DataFrame = null
+      assert(jobsLaunchedBy {
+        seg = SegmentEngine.materializeBase(view, Seq(Condition("transaction_amount", ">", "100")))
+      }.isEmpty, "a literal discriminator needs no job to find its names")
+      assert(seg.collect().map(_.getAs[String]("transaction_types")).toSet == types)
+      val plan = seg.queryExecution.executedPlan // final once executed
+      assert(plan.toString.contains("isFinalPlan=true"), plan)
+      assert(collect(plan) { case a: HashAggregateExec => a }.nonEmpty, plan)
+      assert(collect(plan) { case a: ObjectHashAggregateExec => a }.isEmpty, plan)
+      assert(collect(plan) { case a: SortAggregateExec => a }.isEmpty, plan)
+    }
+  }
+
+  /** `body` with `spark.sql.ansi.enabled` set to `on`, restored after. */
+  private def withAnsi[A](on: Boolean)(body: => A): A = {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("amounts and totals outside the micro-unit domain raise, ANSI on or off") {
+    def amounts(as: (Long, Double)*): DataFrame =
+      as.map { case (u, a) => (u, a, "UPI") }.toDF("user_id", "amount", "transaction_type")
+    def raises(view: DataFrame, error: String): Unit = {
+      val e = intercept[Exception](SegmentEngine.materializeBase(view, Nil).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains(error)), e)
+    }
+    for (ansi <- Seq(true, false)) withAnsi(ansi) {
+      raises(amounts(1L -> 1e12), "NUMERIC_VALUE_OUT_OF_RANGE")
+      raises(amounts(1L -> -1e12), "NUMERIC_VALUE_OUT_OF_RANGE")
+      raises(amounts(Seq.fill(10)(1L -> 9.3e11): _*), "ARITHMETIC_OVERFLOW") // 9.3e12 in all
+      // just inside both limits
+      val edge = SegmentEngine.materializeBase(
+        amounts(Seq.fill(10)(1L -> 9.2e11) :+ (2L -> 999999999999.999): _*), Nil)
+      assert(edge.orderBy("user_id").select("total_spent").as[Double].collect().toSeq ==
+        Seq(9.2e12, 1e12))
+    }
   }
 }

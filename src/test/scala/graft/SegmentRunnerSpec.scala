@@ -430,24 +430,6 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(listings.get() >= 1 && runner.listRules(1, 100).map(_.ruleId) == (1L to 8L))
   }
 
-  /** The ids of the Spark jobs `body` launched on this thread. */
-  private def jobsLaunchedBy(body: => Unit): Seq[Int] = {
-    val sc = spark.sparkContext
-    val group = s"driver-only-${System.nanoTime()}"
-    sc.setJobGroup(group, "driver-only calls")
-    try body finally sc.clearJobGroup()
-    // job events reach the status tracker asynchronously but in order: once
-    // a later marker job shows up, every earlier job in `group` would too
-    val marker = s"$group-marker"
-    sc.setJobGroup(marker, "marker")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
-    sc.statusTracker.getJobIdsForGroup(group).toSeq
-  }
-
   test("catalog calls on rules that never ran launch no Spark job") {
     val dir = Files.createTempDirectory("graft_runner_nojob").toString
     val store = new SegmentStore(spark, dir)
@@ -491,6 +473,28 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(runner.runAll("2026-08-12T00:00:00Z").size == 3)
     assert(historyFiles() - before == 1)
     assert(store.runHistory().count() == 3L)
+  }
+
+  test("a deleted rule's id is never reused, so its history stays its own") {
+    val dir = Files.createTempDirectory("graft_runner_ids").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val (id1, _) = runner.createRule("first", Seq(cAmount))
+    assert(id1 == 1L && runner.run(id1, "2026-08-12T00:00:00Z") == 2L)
+    runner.deleteRule(id1)
+    val (id2, _) = runner.createRule("second", Seq(cTier))
+    assert(id2 == 2L, "the new rule must not take the deleted rule's id")
+    assert(runner.run(id2, "2026-08-13T00:00:00Z") == 3L)
+    val own = store.runHistory().filter($"rule_id" === id2).as[RunHistoryEntry].collect().toSeq
+    assert(own == Seq(RunHistoryEntry(id2, "2026-08-13T00:00:00Z", 3L)))
+
+    // a catalog saved as a bare list of entries takes its highest id as the mark
+    val legacy = Files.createTempDirectory("graft_runner_ids_legacy").toString
+    Files.writeString(java.nio.file.Paths.get(legacy, "_catalog.json"),
+      """[{"ruleId":3,"segmentName":"old","tableName":"segment_output_3","conditions":[],
+        |"dependsOn":[],"rowCount":-1}]""".stripMargin)
+    assert(new SegmentRunner(new SegmentStore(spark, legacy), tx)
+      .createRule("next", Seq(cAmount))._1 == 4L)
   }
 
   test("updateRule re-detects excluding self (R7)") {

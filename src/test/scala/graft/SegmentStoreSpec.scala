@@ -126,7 +126,7 @@ class SegmentStoreSpec extends SparkSpec {
     val before = listing()
     val store = new SegmentStore(spark, dir)
     for (call <- Seq[() => Any](() => store.loadCatalog(),
-        () => store.modifyCatalog(cat => (cat :+ entry(cat.size + 1L, "new"), ())))) {
+        () => store.modifyCatalog(cat => (cat.rules :+ entry(cat.nextRuleId, "new"), ())))) {
       val e = intercept[IllegalStateException](call())
       assert(e.getMessage.contains("_catalog.json") && e.getMessage.contains("parquet"))
     }
@@ -228,12 +228,26 @@ class SegmentStoreSpec extends SparkSpec {
     val perThread = 6
     val threads = Seq.fill(2)(new Thread(() =>
       (1 to perThread).foreach { _ =>
-        store.modifyCatalog(cat => (cat.map(e =>
+        store.modifyCatalog(cat => (cat.rules.map(e =>
           if (e.ruleId == 1L) e.copy(rowCount = e.rowCount + 1) else e), ()))
       }))
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(store.loadCatalog().head.rowCount == 2L * perThread,
       "every increment must survive — a lost update means the lock leaked")
+  }
+
+  test("swap monitors are dropped once no swap of their target is in flight") {
+    val dir = Files.createTempDirectory("graft_jvm_locks").toString
+    val store = new SegmentStore(spark, dir)
+    save(store, Seq(entry(1L, "counter", rows = 0L)))
+    val before = SegmentStore.jvmLockCount
+    (1 to 100).foreach { i =>
+      // each history batch is a new swap target; the catalog save re-enters its lock
+      store.appendRunHistory(Seq(RunHistoryEntry(1L, s"2026-08-12T00:00:$i", i.toLong)))
+      store.modifyCatalog(cat => (cat.rules.map(_.copy(rowCount = i.toLong)), ()))
+    }
+    assert(SegmentStore.jvmLockCount <= before, "one monitor per history batch leaked")
+    assert(store.runHistory().count() == 100L && store.loadCatalog().head.rowCount == 100L)
   }
 
   test("write counts rows on the write pass itself (observe metric, no re-read)") {

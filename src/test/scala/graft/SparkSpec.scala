@@ -21,4 +21,22 @@ abstract class SparkSpec extends AnyFunSuite {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** The ids of the Spark jobs `body` launched on this thread. */
+  protected def jobsLaunchedBy(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"driver-only-${System.nanoTime()}"
+    sc.setJobGroup(group, "driver-only calls")
+    try body finally sc.clearJobGroup()
+    // job events reach the status tracker asynchronously but in order: once
+    // a later marker job shows up, every earlier job in `group` would too
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
+    sc.statusTracker.getJobIdsForGroup(group).toSeq
+  }
 }
