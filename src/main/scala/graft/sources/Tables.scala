@@ -95,6 +95,19 @@ object Tables {
     * of the column mapping; [[transactions]] derives from it by dropping
     * the id so the segment/analytics paths' view stays id-free (their
     * oracles and outputs never carry it).
+    *
+    * `city_tier` is `get_json_object(props, '$.k').cast(int) % 4 + 1`,
+    * computed as `coalesce(PropsK(props), <that parse>) % 4 + 1`: a `props`
+    * of exactly the shape `{"k": n}` ([[PropsK]]: U+0020 spaces only, `n` an
+    * integer of at most 9 digits with no leading zero) is read by a byte scan
+    * with no JSON parser, and every other text (null, tabs, leading zeros,
+    * floats, strings, duplicate or nested keys, broken JSON) goes through
+    * the parse unchanged. Every corpus and segbench row has the fast shape.
+    * Tier domain (unchanged by the scan): under ANSI mode (Spark's default),
+    * a `k` that is not an integer, e.g. `1e2` or `87.0` (which the parse
+    * renders as `"100.0"` / `"87.0"`), makes the cast, and so any query over
+    * the column, raise `CAST_INVALID_INPUT`; a missing `k` or unparsable
+    * `props` is a null tier.
     */
   def transactionsWithId(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir).select(
@@ -103,15 +116,21 @@ object Tables {
       col("value").as("amount"),
       col("ts"),
       col("event_type").as("category"),
-      (get_json_object(col("props"), "$.k").cast(IntegerType) % 4 + 1).as("city_tier"),
+      (coalesce(PropsK(col("props")), get_json_object(col("props"), "$.k").cast(IntegerType))
+        % 4 + 1).as("city_tier"),
       lit("EVENTS").as("transaction_type"))
 
-  /** Ingest-time materialization of the transaction view: parses the
-    * `props` JSON ONCE and writes plain typed columns, so every downstream
-    * segment/analytics query scans `city_tier` as a parquet column (with
-    * pushdown/pruning) instead of re-running `get_json_object` per row per
-    * query. At 100 TB the JSON parse is the dominant per-row cost on the
-    * segment path — pay it once at ingest, not per query. (Bucketing by
+  /** Ingest-time materialization of the transaction view: derives
+    * `city_tier` from `props` ONCE and writes plain typed columns, so every
+    * downstream segment/analytics query scans `city_tier` as a parquet
+    * column (with pushdown/pruning) instead of deriving it per row per
+    * query. Measured over 1e6 `{"k": n}` rows on a 2-CPU `local[2]` session
+    * (one aggregate over the column, warm): the `get_json_object` parse
+    * took 830-980 ms, the byte scan that now reads this shape 95-166 ms
+    * (reading `props` alone 105-159 ms), the materialized column 66-102 ms.
+    * So the parse is no longer paid on the corpus shape; materializing still
+    * saves the `props` read, keeps other `props` shapes off the parse, and
+    * lets the tier predicate push down to parquet. (Bucketing by
     * `user_id` would additionally pre-shuffle for the segment aggregate,
     * but bucket metadata only survives through a metastore-managed table
     * — `bucketBy(...).saveAsTable` read back via `spark.table` — not a

@@ -154,7 +154,8 @@ class PlannerSpec extends SparkSpec {
     val served = RollupServing.userWindowTotals(spark, store, tx, 14)
     val plan = served.queryExecution.executedPlan.toString
     assert(plan.contains("rollup_user_windows"), s"must scan the rollup:\n$plan")
-    assert(!plan.contains("events") && !plan.contains("get_json_object"),
+    assert(!plan.contains("events") && !plan.contains("get_json_object") &&
+      !plan.contains("props_k_int"),
       "served plan must not touch the raw event log")
 
     // ...and serving is exact: bit-identical to computing from raw

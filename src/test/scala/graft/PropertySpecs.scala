@@ -415,3 +415,136 @@ object SegmentKernelProps extends Properties("SegmentKernel") {
       Prop(mismatches.isEmpty) :| mismatches.mkString("\n")
     }
 }
+
+/** `Tables.transactionsWithId`'s `city_tier` against the expression it
+  * replaced, `get_json_object(props, '$.k').cast(int) % 4 + 1`: `props`
+  * drawn from the byte scan's shape ([[graft.sources.PropsK]]), its near
+  * misses, other JSON and broken text. Where the old column raises
+  * (ANSI `CAST_INVALID_INPUT`, e.g. `1e2` or `87.0`), the view must raise
+  * too. A second property pins the scan's acceptance set to the shape.
+  */
+object PropsTierProps extends Properties("PropsTier") {
+  import graft.sources.{PropsK, Tables}
+  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.functions._
+  import scala.util.{Failure, Success, Try}
+
+  // each check runs four small Spark jobs, plus one per row that raises
+  override def overrideParameters(p: org.scalacheck.Test.Parameters) = p.withMinSuccessfulTests(40)
+
+  private lazy val spark = {
+    val s = TestSession.spark
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
+  private val genSpaces: Gen[String] = Gen.choose(0, 3).flatMap(n =>
+    Gen.listOfN(n, Gen.frequency(8 -> " ", 1 -> "\t", 1 -> "\n", 1 -> "\r"))).map(_.mkString)
+  // 0-10 digits, sometimes a leading zero, `-` or `+`; and the Int edges
+  private val genNumber: Gen[String] = Gen.frequency(
+    8 -> (for {
+      sign <- Gen.frequency(6 -> "", 3 -> "-", 1 -> "+")
+      n <- Gen.frequency(1 -> Gen.const(0), 8 -> Gen.choose(1, 9), 2 -> Gen.const(10))
+      first <- Gen.frequency(3 -> Gen.choose('1', '9'), 1 -> Gen.const('0'))
+      rest <- Gen.listOfN(math.max(0, n - 1), Gen.numChar)
+    } yield sign + (if (n == 0) "" else first +: rest.mkString)),
+    1 -> Gen.oneOf("0", "-0", "999999999", "-999999999", "2147483647", "2147483648",
+      "-2147483648", "-2147483649", "4294967296"))
+  private val genShape: Gen[String] =
+    for (a <- genSpaces; v <- genNumber; b <- genSpaces) yield s"""{"k":$a$v$b}"""
+  private val genProps: Gen[String] = Gen.frequency(
+    6 -> genShape,
+    2 -> (for {
+      v <- Gen.oneOf("\"87\"", "87.0", "1e2", "-1E2", "null", "true", "\"x\"", "[1]",
+        "{\"k\": 1}", "８７", "-")
+      a <- genSpaces
+    } yield s"""{"k":$a$v}"""),
+    2 -> (for (v <- genNumber; w <- genNumber) yield s"""{"k": $v, "k": $w}"""),
+    1 -> (for (v <- genNumber) yield s"""{"a": 1, "k": $v}"""),
+    1 -> (for (v <- genNumber) yield s"""{"k": $v, "b": "x"}"""),
+    1 -> (for (v <- genNumber) yield s"""{"x": {"k": $v}}"""),
+    1 -> (for {
+      key <- Gen.oneOf("K", "kk", "ķ", "", "\\\"k\\\"", "\\u006b")
+      v <- genNumber
+    } yield s"""{"$key": $v}"""),
+    1 -> (for (v <- genNumber) yield s"{'k': $v}"),
+    1 -> (for (sp <- genSpaces; s <- genShape) yield sp + s),
+    1 -> (for (s <- genShape; cut <- Gen.choose(0, s.length)) yield s.take(cut)),
+    1 -> (for (s <- genShape; t <- Gen.oneOf("x", " ", "}", "\n", "é", ",", "{}")) yield s + t))
+
+  private val shape = java.util.regex.Pattern.compile("""\{"k": *(-?(?:0|[1-9][0-9]{0,8})) *\}""")
+
+  property("the byte scan takes exactly the {\"k\": n} shape, and reads its integer") =
+    forAll(Gen.listOfN(50, Gen.frequency(5 -> genProps, 1 -> Arbitrary.arbitrary[String]))) { ss =>
+      val wrong = ss.flatMap { s =>
+        val m = shape.matcher(s)
+        val k = PropsK.scan(UTF8String.fromString(s))
+        if (m.matches() && k == m.group(1).toLong || !m.matches() && k == PropsK.Miss) None
+        else Some(s"$s -> $k")
+      }
+      Prop(wrong.isEmpty) :| wrong.mkString("\n")
+    }
+
+  private def raisesCastInvalid(df: DataFrame): Boolean = Try(df.collect()) match {
+    case Failure(e) => Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CAST_INVALID_INPUT"))
+    case Success(_) => false
+  }
+
+  /** `body` under ANSI mode, given a corpus dir whose `events` rows carry
+    * `props` in order, with `event_id` 0, 1, ...
+    */
+  private def withEvents(props: Seq[Option[String]])(body: String => Prop): Prop = {
+    val s = spark
+    import s.implicits._
+    val key = "spark.sql.ansi.enabled"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, "true")
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft_props_tier").toString
+      props.zipWithIndex.map { case (p, i) => (i.toLong, 1L, 1.0, "view", p) }
+        .toDF("event_id", "user_id", "value", "event_type", "props")
+        .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+        .write.parquet(s"$dir/events.parquet")
+      body(dir)
+    } finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
+  private def tiers(dir: String): DataFrame = Tables.transactionsWithId(spark, dir)
+    .select(col("transaction_id").as("event_id"), col("city_tier"))
+
+  property("city_tier equals get_json_object(props, '$.k').cast(int) % 4 + 1, raises included") =
+    forAll(Gen.choose(1, 16).flatMap(n => Gen.listOfN(n, Gen.option(genProps)))) { props =>
+      withEvents(props) { dir =>
+        val s = spark
+        import s.implicits._
+        val raw = s.read.parquet(s"$dir/events.parquet")
+        val k = get_json_object(col("props"), "$.k")
+        val old = k.cast("int") % 4 + 1
+        // the rows whose old column raises: a parse the ANSI cast refuses
+        val raising = raw.filter(k.isNotNull && expr("try_cast(get_json_object(props, '$.k') AS INT)").isNull)
+          .select("event_id").as[Long].collect().toSeq
+        def rows(df: DataFrame): Seq[Row] =
+          df.filter(!col("event_id").isin(raising: _*)).orderBy("event_id").collect().toSeq
+        val want = rows(raw.select(col("event_id"), old.as("city_tier")))
+        val got = rows(tiers(dir))
+        val unraised = raising.filterNot(id => raisesCastInvalid(tiers(dir).filter(col("event_id") === id)))
+        Prop(got == want && unraised.isEmpty) :|
+          s"props $props: got $got, want $want; rows that raise only in the old column: $unraised"
+      }
+    }
+
+  // the tier domain: a quoted integer reads, a missing or null `k` is a null
+  // tier, a non-integer number raises
+  property("a non-integer k raises CAST_INVALID_INPUT; a null or quoted k reads") =
+    withEvents(Seq("""{"k": "87"}""", """{"k": null}""", """{"j": 1}""", """{"k": 1e2}""",
+        """{"k": 87.0}""").map(Some(_))) { dir =>
+      val s = spark
+      import s.implicits._
+      val read = tiers(dir).filter(col("event_id") < 3).orderBy("event_id")
+        .select(col("city_tier").cast("string")).as[String].collect().toSeq
+      Prop(read == Seq("4", null, null)) :| s"read $read" &&
+        Prop(Seq(3L, 4L).forall(id => raisesCastInvalid(tiers(dir).filter(col("event_id") === id)))) :|
+          "1e2 and 87.0 raise"
+    }
+}

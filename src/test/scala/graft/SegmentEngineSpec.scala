@@ -2,8 +2,12 @@ package graft
 
 import graft.model._
 import graft.operators._
+import graft.sources.{PropsK, PropsKExpr, Tables}
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, GetJsonObject}
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec,
   SortAggregateExec}
@@ -120,6 +124,35 @@ class SegmentEngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(collect(plan) { case a: ObjectHashAggregateExec => a }.isEmpty, plan)
       assert(collect(plan) { case a: SortAggregateExec => a }.isEmpty, plan)
     }
+  }
+
+  test("a city_tier rule reads props with the byte scan in codegen, and no corpus row falls back") {
+    val seg = SegmentEngine.materializeBase(Tables.transactions(spark, sf),
+      Seq(Condition("city_tier", "=", "2")))
+    seg.collect()
+    val plan = seg.queryExecution.executedPlan
+    // the operators compiled into a whole-stage codegen stage: below it,
+    // down to its InputAdapters
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    val compiled = collect(plan) { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    // a file scan lists its data filters as pushdown candidates; it evaluates none
+    val all = collect(plan) { case p if !p.isInstanceOf[FileSourceScanExec] => p }
+    def scans(ps: Seq[SparkPlan]) = ps.flatMap(_.expressions).flatMap(_.collect { case e: PropsKExpr => e })
+    assert(scans(compiled).nonEmpty && scans(compiled).size == scans(all).size, plan)
+    // get_json_object appears only as the coalesce fallback behind the scan
+    val exprs = all.flatMap(_.expressions)
+    val fallbacks = exprs.flatMap(_.collect {
+      case Coalesce(Seq(_: PropsKExpr, rest @ _*)) => rest.flatMap(_.collect { case g: GetJsonObject => g })
+    }).flatten
+    val parses = exprs.flatMap(_.collect { case g: GetJsonObject => g })
+    assert(parses.nonEmpty && parses.size == fallbacks.size, plan)
+
+    val props = Tables.events(spark, sf).filter($"props".isNotNull)
+    assert(props.count() == 1000)
+    assert(props.filter(PropsK($"props").isNull).count() == 0, "corpus rows reach the fallback")
   }
 
   /** `body` with `spark.sql.ansi.enabled` set to `on`, restored after. */

@@ -96,11 +96,11 @@ class SegmentStoreSpec extends SparkSpec {
     assert(fromMat.toSeq == fromView.toSeq)
 
     // the win: tier predicate reaches the parquet scan as a pushed filter,
-    // and no JSON parse appears anywhere in the plan
+    // and no JSON parse (nor the props byte scan) appears anywhere in the plan
     val plan = SegmentEngine.materializeBase(mat, conds)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("city_tier"))
-    assert(!plan.contains("get_json_object"))
+    assert(!plan.contains("get_json_object") && !plan.contains("props_k_int"))
   }
 
   test("loadCatalog reads catalogs written before the scheduling columns existed") {
