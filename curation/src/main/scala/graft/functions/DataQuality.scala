@@ -491,4 +491,34 @@ object DataQuality {
       .select("bucket", "lo", "hi", "n_base", "n_current",
         "share_base", "share_current", "drifted")
   }
+
+  /** STREAMING DRIFT MONITOR — the training-serving-skew pager: per
+    * micro-batch, the arriving value distribution is compared against a
+    * FIXED baseline snapshot with the exact [[driftReport]] arithmetic
+    * (stateless per trigger ⇒ stream ≡ batch exactly, StreamingSpec pins
+    * it), and
+    * the 10-row report lands under `batch=N` — a retried batch
+    * overwrites its own partition (the curateGateSink idempotent-sink
+    * discipline). A `drifted = true` row in the report stream IS the
+    * alert. The baseline's sample cuts are recomputed per trigger from
+    * the same deterministic id-mix (bounded work; a deployment caching
+    * them trades staleness for one take-ordered job per trigger). An
+    * empty micro-batch reports NULL current shares ("no data to
+    * compare"), never NaN.
+    */
+  def driftMonitorSink(events: DataFrame, baseline: DataFrame,
+      outDir: String, idCol: String = "event_id",
+      valueCol: String = "value", buckets: Int = 10,
+      threshold: Double = 0.05, sampleSize: Int = 512)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    events.writeStream.foreachBatch {
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        val b = batch.toDF().persist()
+        try {
+          val rep = driftReport(
+            baseline, b, idCol, valueCol, buckets, threshold, sampleSize)
+          rep.repartition(1)
+            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        } finally { b.unpersist(); () }
+    }
 }

@@ -813,11 +813,11 @@ object Dedup {
     */
   def writeClusterTable(docs: DataFrame, pairs: DataFrame, name: String,
       buckets: Int = 8, checkpointDir: Option[String] = None): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = docs.sparkSession
     dropClusterTable(spark, name)
     try {
-      graft.sources.Tables.writeBucketed(
+      graft.sources.ManagedTables.writeBucketed(
         dedupDecisions(docs, pairs, checkpointDir),
         s"${name}_clusters", "doc_id", buckets)
       val stored = spark.table(s"${name}_clusters")
@@ -840,7 +840,7 @@ object Dedup {
     */
   def clusterTable(spark: org.apache.spark.sql.SparkSession,
       name: String): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     require(spark.table(s"${name}_meta").first().getLong(0) >= 0L,
       s"cluster table $name has corrupt meta")
     spark.table(s"${name}_clusters")
@@ -849,7 +849,7 @@ object Dedup {
   /** Drop both cluster-table artifacts AND their directories. */
   def dropClusterTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_meta", s"${name}_clusters"))
 
   /** TARGETED DELETION from a [[writeClusterTable]] — the one artifact
@@ -876,7 +876,7 @@ object Dedup {
   def deleteFromClusterTable(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long], pairs: DataFrame,
       checkpointDir: Option[String] = None): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     require(ids.nonEmpty, "empty deletion batch")
     val ct = spark.table(s"${name}_clusters")
     import spark.implicits._
@@ -894,7 +894,7 @@ object Dedup {
         .join(remaining.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"))
         .join(remaining.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"))
       val recomputed = dedupDecisions(remaining, subPairs, checkpointDir)
-      graft.sources.Tables.rewriteBucketed(spark, s"${name}_clusters",
+      graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_clusters",
         untouched.select("doc_id", "cluster_id", "keep")
           .unionByName(recomputed.select("doc_id", "cluster_id", "keep")))
       val stored = spark.table(s"${name}_clusters")
@@ -1492,7 +1492,7 @@ object Dedup {
       windowLen: Int = 40, buckets: Int = 8,
       textCol: String = "text"): Unit = {
     require(windowLen >= 8, "windowLen < 8 would excise natural language")
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = seen.sparkSession
     dropSubstringIndex(spark, name)
     try {
@@ -1502,9 +1502,9 @@ object Dedup {
         .saveAsTable(s"${name}_meta")
       val d = seen.filter(col(textCol).isNotNull)
         .select(col("doc_id"), col(textCol).as("text"))
-      graft.sources.Tables.writeBucketed(d, s"${name}_docs", "doc_id",
+      graft.sources.ManagedTables.writeBucketed(d, s"${name}_docs", "doc_id",
         buckets)
-      graft.sources.Tables.writeBucketed(
+      graft.sources.ManagedTables.writeBucketed(
         substringIndexRows(spark.table(s"${name}_docs"), windowLen),
         s"${name}_winhash", "h", buckets)
     } catch {
@@ -1520,7 +1520,7 @@ object Dedup {
 
   def dropSubstringIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(spark,
+    graft.sources.ManagedTables.dropManagedTables(spark,
       Seq(s"${name}_meta", s"${name}_winhash", s"${name}_docs",
         s"${name}_deletes"))
 
@@ -1530,15 +1530,15 @@ object Dedup {
     * contract). */
   def upsertSubstringIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, batch: DataFrame, textCol: String = "text"): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val w = substringIndexW(spark, name)
     val d = batch.filter(col(textCol).isNotNull)
       .select(col("doc_id"), col(textCol).as("text"))
     // the two appends derive from the same batch frame and touch disjoint
     // tables — overlap them (guide §2.6)
     graft.Par.run(Seq(
-      () => graft.sources.Tables.appendBucketed(spark, s"${name}_docs", d),
-      () => graft.sources.Tables.appendBucketed(spark, s"${name}_winhash",
+      () => graft.sources.ManagedTables.appendBucketed(spark, s"${name}_docs", d),
+      () => graft.sources.ManagedTables.appendBucketed(spark, s"${name}_winhash",
         substringIndexRows(d, w))))
   }
 
@@ -1550,21 +1550,21 @@ object Dedup {
     * hash-certified by q_dedup_substrings_indexed's deleted clones. */
   def deleteFromSubstringIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "doc_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "doc_id", ids)
   }
 
   /** Fold tombstones into both payload tables and clear them. */
   def compactSubstringIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     if (spark.catalog.tableExists(s"${name}_deletes")) {
       Seq(s"${name}_winhash", s"${name}_docs").foreach { t =>
-        graft.sources.Tables.rewriteBucketed(spark, t,
-          graft.sources.Tables.minusDeletes(spark, name, spark.table(t),
+        graft.sources.ManagedTables.rewriteBucketed(spark, t,
+          graft.sources.ManagedTables.minusDeletes(spark, name, spark.table(t),
             "doc_id"))
       }
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -1580,14 +1580,14 @@ object Dedup {
   def substringScreen(spark: org.apache.spark.sql.SparkSession,
       name: String, batch: DataFrame,
       textCol: String = "text"): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val w = substringIndexW(spark, name)
     val d = batch.filter(col(textCol).isNotNull)
       .select(col("doc_id"), col(textCol).as("__t"))
     val batchH = d.select(col("doc_id"),
       posexplode(RollingHash.windowHashesCol(col("__t"), w))
         .as(Seq("pos", "__h")))
-    val seenH = graft.sources.Tables.minusDeletes(spark, name,
+    val seenH = graft.sources.ManagedTables.minusDeletes(spark, name,
       spark.table(s"${name}_winhash"), "doc_id")
     val cand = batchH.join(
       seenH.select(col("h").as("__h")).distinct().hint("SHUFFLE_HASH"),
@@ -1601,7 +1601,7 @@ object Dedup {
       .join(candTxt.select(col("__h").as("h")).distinct()
         .hint("SHUFFLE_HASH"), Seq("h"), "left_semi")
       .select(col("doc_id"), col("pos"))
-      .join(graft.sources.Tables.minusDeletes(spark, name,
+      .join(graft.sources.ManagedTables.minusDeletes(spark, name,
         spark.table(s"${name}_docs"), "doc_id"), Seq("doc_id"))
       .select(expr(s"substring(text, pos + 1, $w)").as("__win"))
       .distinct()
@@ -1726,12 +1726,12 @@ object Dedup {
   def writeLineDfTable(docs: DataFrame, name: String,
       lineSep: String = "\n", textCol: String = "text",
       sourceCol: String = "source", buckets: Int = 8): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = docs.sparkSession
     dropLineDfTable(spark, name)
     try {
       val d = boilerDocs(docs, textCol, sourceCol)
-      graft.sources.Tables.writeBucketed(
+      graft.sources.ManagedTables.writeBucketed(
         boilerLines(d, lineSep, textCol)
           .groupBy(col("__src").as("src"), col("line"))
           .agg(countDistinct(col("doc_id")).as("cnt")),
@@ -1748,7 +1748,7 @@ object Dedup {
   /** Drop both line-df artifacts AND their directories. */
   def dropLineDfTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_linedf", s"${name}_srctotals"))
 
   /** Fold a new (disjoint) batch's line statistics into the table —
@@ -1788,9 +1788,9 @@ object Dedup {
   private def foldLineDfPartials(spark: org.apache.spark.sql.SparkSession,
       name: String, batch: DataFrame, lineSep: String, textCol: String,
       sourceCol: String, sign: Long): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val d = boilerDocs(batch, textCol, sourceCol)
-    graft.sources.Tables.appendBucketed(spark, s"${name}_linedf",
+    graft.sources.ManagedTables.appendBucketed(spark, s"${name}_linedf",
       boilerLines(d, lineSep, textCol)
         .groupBy(col("__src").as("src"), col("line"))
         .agg((lit(sign) * countDistinct(col("doc_id"))).as("cnt")))
@@ -1817,7 +1817,7 @@ object Dedup {
       name: String, batch: DataFrame, minDocFrac: Double = 0.5,
       minDocs: Int = 2, lineSep: String = "\n", textCol: String = "text",
       sourceCol: String = "source"): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     require(minDocFrac > 0.0 && minDocFrac <= 1.0,
       "minDocFrac must be in (0, 1]")
     require(minDocs >= 2, "minDocs < 2 would strip every line")
@@ -2014,7 +2014,7 @@ object Dedup {
     */
   def semanticDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       name: String, threshold: Double): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val assigned = spark.table(s"${name}_assignments")
       .select(col("vec_id"), col("bucket").as("cluster"), col("v"))
     val a = assigned.as("a"); val b = assigned.as("b")

@@ -52,18 +52,18 @@ object MinhashIndex {
     */
   def write(docs: DataFrame, name: String, numHashes: Int = 64,
       bands: Int = 32, buckets: Int = 8, textCol: String = "text"): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = docs.sparkSession
     drop(spark, name)
     try {
       val sets = Dedup.ngramSets(docs, textCol)
-      graft.sources.Tables.writeBucketed(
+      graft.sources.ManagedTables.writeBucketed(
         sets, s"${name}_sets", "doc_id", buckets)
       // re-read the persisted sets so banding signs exactly the rows the
       // verification read will serve (one shingling pass, not two)
       val stored = spark.table(s"${name}_sets")
-      graft.sources.Tables.writeBucketed(
+      graft.sources.ManagedTables.writeBucketed(
         Dedup.minhashBandKeys(stored, numHashes, bands)
           .select(col("bucket"), col("band"), col("doc_id")),
         s"${name}_bands", "bucket", buckets)
@@ -76,9 +76,9 @@ object MinhashIndex {
   }
 
   /** Drop all three index tables AND their directories (crash-surviving
-    * stale dirs included — [[graft.sources.Tables.dropManagedTables]]). */
+    * stale dirs included — [[graft.sources.ManagedTables.dropManagedTables]]). */
   def drop(spark: SparkSession, name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_meta", s"${name}_bands", s"${name}_sets",
         s"${name}_deletes"))
 
@@ -92,8 +92,8 @@ object MinhashIndex {
     * mirror).
     */
   def deleteIds(spark: SparkSession, name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "doc_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "doc_id", ids)
   }
 
   /** Fold tombstones into BOTH index tables (stage-and-swap rewrites
@@ -101,14 +101,14 @@ object MinhashIndex {
     * untouched.
     */
   def compact(spark: SparkSession, name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     if (spark.catalog.tableExists(s"${name}_deletes")) {
       Seq(s"${name}_sets", s"${name}_bands").foreach { t =>
-        graft.sources.Tables.rewriteBucketed(spark, t,
-          graft.sources.Tables.minusDeletes(spark, name, spark.table(t),
+        graft.sources.ManagedTables.rewriteBucketed(spark, t,
+          graft.sources.ManagedTables.minusDeletes(spark, name, spark.table(t),
             "doc_id"))
       }
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -120,7 +120,7 @@ object MinhashIndex {
     */
   def upsert(spark: SparkSession, name: String, batch: DataFrame,
       textCol: String = "text"): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val (numHashes, bands) = geometry(spark, name)
     // shingle the batch ONCE (lazy reuse would re-run the tokenize +
     // shingle scan per append), then overlap the two independent appends
@@ -150,7 +150,7 @@ object MinhashIndex {
   def screen(spark: SparkSession, name: String, batch: DataFrame,
       threshold: Double, textCol: String = "text",
       maxCandidates: Int = 65536): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
     val (numHashes, bands) = geometry(spark, name)
 
@@ -158,7 +158,7 @@ object MinhashIndex {
       .localCheckpoint(true) // shingle once: banding + verify both read it
     val batchBands = Dedup.minhashBandKeys(batchSets, numHashes, bands)
 
-    val idx = graft.sources.Tables.minusDeletes(spark, name,
+    val idx = graft.sources.ManagedTables.minusDeletes(spark, name,
       spark.table(s"${name}_bands"), "doc_id")
     val cand = idx.join(
         broadcast(batchBands.withColumnRenamed("doc_id", "batch_doc")),
@@ -199,5 +199,5 @@ object MinhashIndex {
 
   private def appendBucketed(spark: SparkSession, table: String,
       df: DataFrame): Unit =
-    graft.sources.Tables.appendBucketed(spark, table, df)
+    graft.sources.ManagedTables.appendBucketed(spark, table, df)
 }

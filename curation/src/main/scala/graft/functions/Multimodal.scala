@@ -530,10 +530,10 @@ object Multimodal {
     */
   def writeSignatureTable(sigs: DataFrame, name: String,
       buckets: Int = 8): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = sigs.sparkSession
     dropPhashTable(spark, name)
-    try graft.sources.Tables.writeBucketed(
+    try graft.sources.ManagedTables.writeBucketed(
       sigs.select(col("doc_id"), col("dhash")),
       name, "doc_id", buckets)
     catch { case e: Throwable => dropPhashTable(spark, name); throw e }
@@ -541,7 +541,7 @@ object Multimodal {
 
   def dropPhashTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(spark, Seq(name, s"${name}_deletes"))
+    graft.sources.ManagedTables.dropManagedTables(spark, Seq(name, s"${name}_deletes"))
 
   /** TARGETED DELETION (takedowns — the phash table is exactly where
     * removed media must stop matching): O(batch) tombstone append;
@@ -553,8 +553,8 @@ object Multimodal {
     */
   def deleteFromPhashTable(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "doc_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "doc_id", ids)
   }
 
   /** Fold tombstones into the signature table (stage-and-swap rewrite
@@ -562,12 +562,12 @@ object Multimodal {
     */
   def compactPhashTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     if (spark.catalog.tableExists(s"${name}_deletes")) {
-      graft.sources.Tables.rewriteBucketed(spark, name,
-        graft.sources.Tables.minusDeletes(spark, name, spark.table(name),
+      graft.sources.ManagedTables.rewriteBucketed(spark, name,
+        graft.sources.ManagedTables.minusDeletes(spark, name, spark.table(name),
           "doc_id"))
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -588,10 +588,10 @@ object Multimodal {
     */
   def screenSignatures(spark: org.apache.spark.sql.SparkSession,
       name: String, sigs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     Dedup.bandedHammingPairsAgainst(
       sigs.select(col("doc_id"), col("dhash").as("sig")),
-      graft.sources.Tables.minusDeletes(spark, name, spark.table(name),
+      graft.sources.ManagedTables.minusDeletes(spark, name, spark.table(name),
           "doc_id")
         .select(col("doc_id"), col("dhash").as("sig")),
       maxHamming)
@@ -800,10 +800,10 @@ object Multimodal {
     */
   def writeVideoSignatureTable(sigs: DataFrame, name: String,
       buckets: Int = 8): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = sigs.sparkSession
     dropPhashTable(spark, name)
-    try graft.sources.Tables.writeBucketed(
+    try graft.sources.ManagedTables.writeBucketed(
       sigs.select(col("doc_id"), col("slot"), col("dhash")),
       name, "doc_id", buckets)
     catch { case e: Throwable => dropPhashTable(spark, name); throw e }
@@ -815,9 +815,9 @@ object Multimodal {
   def screenVideoSignatures(spark: org.apache.spark.sql.SparkSession,
       name: String, sigs: DataFrame, maxHamming: Int = 3,
       minMatchFrac: Double = 0.5): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     videoNearDupsAgainst(sigs,
-      graft.sources.Tables.minusDeletes(spark, name, spark.table(name),
+      graft.sources.ManagedTables.minusDeletes(spark, name, spark.table(name),
         "doc_id"),
       maxHamming, minMatchFrac)
   }

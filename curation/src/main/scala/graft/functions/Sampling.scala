@@ -878,7 +878,7 @@ object Sampling {
   def writeDsirModel(spark: org.apache.spark.sql.SparkSession, name: String,
       raw: DataFrame, target: DataFrame, buckets: Int = 2048,
       textCol: String = "text"): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     dropDsirModel(spark, name)
     try {
       spark.range(1).select(lit(buckets).cast("long").as("buckets"))
@@ -899,7 +899,7 @@ object Sampling {
     */
   def dsirScoreIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
       docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val buckets = spark.table(s"${name}_params")
       .select(col("buckets")).head().getLong(0).toInt
     dsirScore(docs, spark.table(s"${name}_ratios"), buckets, textCol)
@@ -927,7 +927,7 @@ object Sampling {
   def deleteFromDsirModel(spark: org.apache.spark.sql.SparkSession,
       name: String, deletedDocs: DataFrame, side: String = "raw",
       textCol: String = "text"): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     require(side == "raw" || side == "target",
       s"side must be 'raw' or 'target', got '$side'")
     val buckets = spark.table(s"${name}_params")
@@ -947,15 +947,15 @@ object Sampling {
       s"unlearn batch drives $neg bucket count(s) negative on side '$side'" +
         s" of DSIR model $name — the batch contains documents that were " +
         "never fit (or were already unlearned); refusing to publish")
-    graft.sources.Tables.rewriteTable(spark, s"${name}_ratios",
+    graft.sources.ManagedTables.rewriteTable(spark, s"${name}_ratios",
       quantizeRatios(newCounts, buckets).coalesce(1))
   }
 
   /** Drop both DSIR model tables and their directories. */
   def dropDsirModel(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_params", s"${name}_ratios"))
   }
 
@@ -1018,8 +1018,8 @@ object Sampling {
   def crossEntropyScoreIndexed(spark: org.apache.spark.sql.SparkSession,
       targetName: String, rawName: String, docs: DataFrame,
       addK: Double = 1.0, textCol: String = "text"): DataFrame = {
-    graft.sources.Tables.requireIdent(targetName)
-    graft.sources.Tables.requireIdent(rawName)
+    graft.sources.ManagedTables.requireIdent(targetName)
+    graft.sources.ManagedTables.requireIdent(rawName)
     require(addK > 0, "addK must be positive (unseen mass)")
     def stored(name: String) = (
       spark.table(s"${name}_model")

@@ -156,7 +156,7 @@ object Similarity {
     * [[writePqIndex]]: params first, any failure drops both.
     */
   def writeSqIndex(corpus: DataFrame, name: String, levels: Int = 256): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = corpus.sparkSession
     dropSqIndex(spark, name)
     val nv = normalized(corpus)
@@ -177,7 +177,7 @@ object Similarity {
   }
 
   def dropSqIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_params", s"${name}_codes", s"${name}_deletes"))
 
   /** TARGETED DELETION from the SQ8 index — codes are row-independent,
@@ -188,8 +188,8 @@ object Similarity {
     */
   def deleteFromSqIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "vec_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "vec_id", ids)
   }
 
   def compactSqIndex(spark: org.apache.spark.sql.SparkSession,
@@ -201,7 +201,7 @@ object Similarity {
     */
   def sqSearchIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
       queries: DataFrame, k: Int): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val pr = spark.table(s"${name}_params").orderBy("d").collect()
     require(pr.nonEmpty, s"SQ index $name has no params")
     val mins = pr.map(_.getDouble(1)).toIndexedSeq
@@ -209,7 +209,7 @@ object Similarity {
     val L = (pr.head.getInt(3) - 1).toDouble
     val minsLit = typedLit(mins)
     val spansLit = typedLit(spans)
-    val decoded = graft.sources.Tables.minusDeletes(spark, name,
+    val decoded = graft.sources.ManagedTables.minusDeletes(spark, name,
       spark.table(s"${name}_codes"), "vec_id").select(col("vec_id"),
       transform(col("code"), (c, i) =>
         element_at(minsLit, i + 1) +
@@ -369,7 +369,7 @@ object Similarity {
   def writeAnnIndex(corpus: DataFrame, name: String, centroids: Int = 8,
       sampleSize: Int = 256, iters: Int = 2, buckets: Int = 8,
       format: String = "parquet"): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = corpus.sparkSession
     dropAnnIndex(spark, name)
     val c = normalized(corpus)
@@ -385,7 +385,7 @@ object Similarity {
         .map { case (cv, cid) => (cid, cv.toSeq) }.toSeq
         .toDF("cid", "cv")
         .write.mode("overwrite").format(format).saveAsTable(s"${name}_centroids")
-      graft.sources.Tables.writeBucketed(
+      graft.sources.ManagedTables.writeBucketed(
         assignToCentroids(c, cents)
           .select(col("cluster").as("bucket"), col("vec_id"), col("v")),
         s"${name}_assignments", "bucket", buckets, format)
@@ -395,10 +395,10 @@ object Similarity {
   }
 
   /** Drop both ANN index tables AND their directories (crash-surviving
-    * stale dirs included — see [[graft.sources.Tables.dropManagedTables]]).
+    * stale dirs included — see [[graft.sources.ManagedTables.dropManagedTables]]).
     */
   def dropAnnIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_centroids", s"${name}_assignments",
         s"${name}_deletes"))
 
@@ -414,8 +414,8 @@ object Similarity {
     */
   def deleteFromAnnIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "vec_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "vec_id", ids)
   }
 
   /** Fold tombstones into the assignments table (stage-and-swap rewrite
@@ -425,12 +425,12 @@ object Similarity {
     */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     if (spark.catalog.tableExists(s"${name}_deletes")) {
-      graft.sources.Tables.rewriteBucketed(spark, s"${name}_assignments",
-        graft.sources.Tables.minusDeletes(spark, name,
+      graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_assignments",
+        graft.sources.ManagedTables.minusDeletes(spark, name,
           spark.table(s"${name}_assignments"), "vec_id"))
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -461,7 +461,7 @@ object Similarity {
     */
   def upsertAnnIndex(spark: org.apache.spark.sql.SparkSession, name: String,
       batch: DataFrame): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val cents = spark.table(s"${name}_centroids").orderBy("cid").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
     require(cents.nonEmpty, s"ANN index $name has no centroids")
@@ -512,7 +512,7 @@ object Similarity {
   def annSearchIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
       queries: DataFrame, k: Int, nprobe: Int = 4,
       maxQueries: Int = 65536): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val cents = spark.table(s"${name}_centroids").orderBy("cid").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
     require(cents.nonEmpty, s"ANN index $name has no centroids")
@@ -539,7 +539,7 @@ object Similarity {
       import spark.implicits._
       val probes = probeRows.toDF("query_id", "qv", "bucket")
       val cells = probeRows.map(_._3).distinct.sorted
-      val assigned = graft.sources.Tables.minusDeletes(spark, name,
+      val assigned = graft.sources.ManagedTables.minusDeletes(spark, name,
         spark.table(s"${name}_assignments")
           .filter(col("bucket").isin(cells.map(Integer.valueOf): _*)),
         "vec_id")
@@ -555,7 +555,7 @@ object Similarity {
           explode(col("__probes")).as("bucket"))
       val cells = probed.select("bucket").distinct()
         .collect().map(_.getInt(0)).sorted.toSeq
-      val assigned = graft.sources.Tables.minusDeletes(spark, name,
+      val assigned = graft.sources.ManagedTables.minusDeletes(spark, name,
         spark.table(s"${name}_assignments")
           .filter(col("bucket").isin(cells.map(Integer.valueOf): _*)),
         "vec_id")
@@ -1134,7 +1134,7 @@ object Similarity {
     */
   def writePqIndex(corpus: DataFrame, name: String, m: Int = 16,
       ksub: Int = 32, sampleSize: Int = 256, iters: Int = 2): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = corpus.sparkSession
     dropPqIndex(spark, name)
     val c = normalized(corpus)
@@ -1153,15 +1153,15 @@ object Similarity {
   }
 
   def dropPqIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_codebooks", s"${name}_codes", s"${name}_deletes"))
 
   /** TARGETED DELETION from the PQ index ([[deleteFromSqIndex]]'s
     * contract; codebooks are untouched — the frozen-fit trade). */
   def deleteFromPqIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "vec_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "vec_id", ids)
   }
 
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1173,12 +1173,12 @@ object Similarity {
     */
   private def compactCodesTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     if (spark.catalog.tableExists(s"${name}_deletes")) {
-      graft.sources.Tables.rewriteTable(spark, s"${name}_codes",
-        graft.sources.Tables.minusDeletes(spark, name,
+      graft.sources.ManagedTables.rewriteTable(spark, s"${name}_codes",
+        graft.sources.ManagedTables.minusDeletes(spark, name,
           spark.table(s"${name}_codes"), "vec_id"))
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -1190,7 +1190,7 @@ object Similarity {
     */
   def pqSearchIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
       queries: DataFrame, k: Int, maxQueries: Int = 65536): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val cbRows = spark.table(s"${name}_codebooks").orderBy("m", "code").collect()
     require(cbRows.nonEmpty, s"PQ index $name has no codebooks")
     val m = cbRows.map(_.getInt(0)).max + 1
@@ -1198,7 +1198,7 @@ object Similarity {
     val books = Array.tabulate(m, ksub) { (mm, code) =>
       cbRows(mm * ksub + code).getAs[scala.collection.Seq[Double]]("cv").toArray
     }
-    val live = graft.sources.Tables.minusDeletes(spark, name,
+    val live = graft.sources.ManagedTables.minusDeletes(spark, name,
       spark.table(s"${name}_codes"), "vec_id")
     // maxQueries is a SWITCH (round-17): above it the LUT frame computes
     // scan-side from broadcast codebooks and the flat product is an
@@ -1229,7 +1229,7 @@ object Similarity {
   def writeIvfPqResIndex(corpus: DataFrame, name: String, centroids: Int = 8,
       m: Int = 16, ksub: Int = 32, sampleSize: Int = 256, iters: Int = 2,
       buckets: Int = 8): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = corpus.sparkSession
     dropIvfPqResIndex(spark, name)
     val c = normalized(corpus)
@@ -1246,7 +1246,7 @@ object Similarity {
       }.toSeq.toDF("m", "code", "cv")
         .write.mode("overwrite").format("parquet").saveAsTable(s"${name}_codebooks")
       val centsLit = typedLit(cents.map(_.toIndexedSeq).toIndexedSeq)
-      graft.sources.Tables.writeBucketed(
+      graft.sources.ManagedTables.writeBucketed(
         assignToCentroids(c, cents)
           .withColumn("rv", zip_with(col("v"),
             element_at(centsLit, col("cluster") + 1), (x, cc) => x - cc))
@@ -1260,7 +1260,7 @@ object Similarity {
 
   def dropIvfPqResIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(spark,
+    graft.sources.ManagedTables.dropManagedTables(spark,
       Seq(s"${name}_centroids", s"${name}_codebooks", s"${name}_codes",
         s"${name}_deletes"))
 
@@ -1268,8 +1268,8 @@ object Similarity {
     * contract; coarse quantizer and residual codebooks untouched). */
   def deleteFromIvfPqResIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "vec_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "vec_id", ids)
   }
 
   def compactIvfPqResIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1287,7 +1287,7 @@ object Similarity {
   def ivfPqResSearchIndexed(spark: org.apache.spark.sql.SparkSession,
       name: String, queries: DataFrame, k: Int, nprobe: Int = 4,
       maxQueries: Int = 65536): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val cents = spark.table(s"${name}_centroids").orderBy("cid").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
     require(cents.nonEmpty, s"IVFADC index $name has no centroids")
@@ -1308,7 +1308,7 @@ object Similarity {
     // itself so the bucketed codes side arrives exchange-free and PRUNED.
     val rawQ = asDouble(queries).limit(maxQueries + 1).collect()
     def pruned(cells: Seq[Int]): DataFrame =
-      graft.sources.Tables.minusDeletes(spark, name,
+      graft.sources.ManagedTables.minusDeletes(spark, name,
         spark.table(s"${name}_codes")
           .filter(col("bucket").isin(cells.map(Integer.valueOf): _*)),
         "vec_id")
@@ -1370,11 +1370,11 @@ object Similarity {
     */
   def knnGraphIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
       k: Int, nprobe: Int = 4): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val cents = spark.table(s"${name}_centroids").orderBy("cid").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
     require(cents.nonEmpty, s"ANN index $name has no centroids")
-    val live = graft.sources.Tables.minusDeletes(spark, name,
+    val live = graft.sources.ManagedTables.minusDeletes(spark, name,
       spark.table(s"${name}_assignments"), "vec_id")
     val members = live.select(col("vec_id"), col("bucket"), col("v"))
     val probed = withProbeCells(live, cents, nprobe)
@@ -1574,7 +1574,7 @@ object Similarity {
     val cents = spark.table(s"${indexName}_centroids").orderBy("cid")
       .collect().map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
     require(cents.nonEmpty, s"ANN index $indexName has no centroids")
-    val live = graft.sources.Tables.minusDeletes(spark, indexName,
+    val live = graft.sources.ManagedTables.minusDeletes(spark, indexName,
       spark.table(s"${indexName}_assignments"), "vec_id")
     val ia = live.groupBy(col("bucket").as("cluster"))
       .agg(count(lit(1)).as("n_indexed"))
@@ -1722,9 +1722,9 @@ object Similarity {
     */
   def writeGroundTruth(corpus: DataFrame, queries: DataFrame, k: Int,
       name: String, buckets: Int = 8): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     dropGroundTruth(corpus.sparkSession, name)
-    graft.sources.Tables.writeBucketed(
+    graft.sources.ManagedTables.writeBucketed(
       bruteForceTopK(corpus, queries, k), s"${name}_truth", "query_id",
       buckets)
   }
@@ -1732,7 +1732,7 @@ object Similarity {
   /** Drop a [[writeGroundTruth]] table (stale-dir-surviving drop). */
   def dropGroundTruth(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_truth", s"${name}_deletes"))
 
   /** TARGETED DELETION from a ground-truth table — the truth rows are
@@ -1750,8 +1750,8 @@ object Similarity {
     */
   def deleteFromGroundTruth(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "vec_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "vec_id", ids)
   }
 
   /** The post-tombstone ground-truth read every consumer sees: rows whose
@@ -1777,11 +1777,11 @@ object Similarity {
     */
   def compactGroundTruth(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     if (spark.catalog.tableExists(s"${name}_deletes")) {
-      graft.sources.Tables.rewriteBucketed(spark, s"${name}_truth",
+      graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_truth",
         liveGroundTruth(spark, name))
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -1794,7 +1794,7 @@ object Similarity {
     */
   def recallAtKIndexed(spark: org.apache.spark.sql.SparkSession,
       name: String, approx: DataFrame, k: Int): DataFrame = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     recallAtK(approx, liveGroundTruth(spark, name), k)
   }
 
@@ -2131,10 +2131,10 @@ object Similarity {
     * complement of the codes/cells tables the coarse stages persist.
     */
   def writeVecTable(corpus: DataFrame, name: String, buckets: Int = 16): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = corpus.sparkSession
     dropVecTable(spark, name)
-    try graft.sources.Tables.writeBucketed(
+    try graft.sources.ManagedTables.writeBucketed(
       normalized(corpus).select(col("vec_id"), col("v")),
       s"${name}_vectors", "vec_id", buckets)
     catch { case e: Throwable => dropVecTable(spark, name); throw e }
@@ -2142,7 +2142,7 @@ object Similarity {
 
   def dropVecTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_vectors", s"${name}_deletes"))
 
   /** FULLY-PERSISTED two-stage search — both stages read stored artifacts
@@ -2159,7 +2159,7 @@ object Similarity {
       sqName: String, vecName: String, queries: DataFrame, k: Int,
       shortlist: Int = 40): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    graft.sources.Tables.requireIdent(vecName)
+    graft.sources.ManagedTables.requireIdent(vecName)
     val spark2 = spark
     import spark2.implicits._
     val cand = sqSearchIndexed(spark, sqName, queries, shortlist)
@@ -2167,7 +2167,7 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val ids = cand.map(_._2).distinct.toSeq
     val candDf = cand.toSeq.toDF("query_id", "neighbor_id", "coarse_rank")
-    val vt = graft.sources.Tables.minusDeletes(spark, vecName,
+    val vt = graft.sources.ManagedTables.minusDeletes(spark, vecName,
       spark.table(s"${vecName}_vectors"), "vec_id")
       .filter(col("vec_id").isin(ids: _*))
     val q = normalized(queries)
@@ -2241,7 +2241,7 @@ object Similarity {
     * per pair.
     */
   def writeBqIndex(corpus: DataFrame, name: String, dims: Int = 64): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = corpus.sparkSession
     dropBqIndex(spark, name)
     try withSignWords(normalized(corpus), dims)
@@ -2252,7 +2252,7 @@ object Similarity {
 
   def dropBqIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_words", s"${name}_deletes"))
 
   /** TARGETED DELETION from the BQ sign-word index — `_words` rows are
@@ -2264,18 +2264,18 @@ object Similarity {
     */
   def deleteFromBqIndex(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "vec_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "vec_id", ids)
   }
 
   def compactBqIndex(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     if (spark.catalog.tableExists(s"${name}_deletes")) {
-      graft.sources.Tables.rewriteTable(spark, s"${name}_words",
-        graft.sources.Tables.minusDeletes(spark, name,
+      graft.sources.ManagedTables.rewriteTable(spark, s"${name}_words",
+        graft.sources.ManagedTables.minusDeletes(spark, name,
           spark.table(s"${name}_words"), "vec_id"))
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -2286,18 +2286,18 @@ object Similarity {
     */
   def deleteFromVecTable(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit = {
-    graft.sources.Tables.requireIdent(name)
-    graft.sources.Tables.appendDeletes(spark, name, "vec_id", ids)
+    graft.sources.ManagedTables.requireIdent(name)
+    graft.sources.ManagedTables.appendDeletes(spark, name, "vec_id", ids)
   }
 
   def compactVecTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     if (spark.catalog.tableExists(s"${name}_deletes")) {
-      graft.sources.Tables.rewriteBucketed(spark, s"${name}_vectors",
-        graft.sources.Tables.minusDeletes(spark, name,
+      graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_vectors",
+        graft.sources.ManagedTables.minusDeletes(spark, name,
           spark.table(s"${name}_vectors"), "vec_id"))
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -2311,13 +2311,13 @@ object Similarity {
       bqName: String, vecName: String, queries: DataFrame, k: Int,
       shortlist: Int = 40, dims: Int = 64): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    graft.sources.Tables.requireIdent(vecName)
+    graft.sources.ManagedTables.requireIdent(vecName)
     val spark2 = spark
     import spark2.implicits._
     val q = withSignWords(normalized(queries), dims)
       .select(col("vec_id").as("query_id"), col("__bw").as("__qw"))
     val ham = hammingSum(col("words"), col("__qw"), signWordCount(dims))
-    val scored = graft.sources.Tables.minusDeletes(spark, bqName,
+    val scored = graft.sources.ManagedTables.minusDeletes(spark, bqName,
         spark.table(s"${bqName}_words"), "vec_id")
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -2327,7 +2327,7 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val ids = cand.map(_._2).distinct.toSeq
     val candDf = cand.toSeq.toDF("query_id", "neighbor_id", "coarse_rank")
-    val vt = graft.sources.Tables.minusDeletes(spark, vecName,
+    val vt = graft.sources.ManagedTables.minusDeletes(spark, vecName,
       spark.table(s"${vecName}_vectors"), "vec_id")
       .filter(col("vec_id").isin(ids: _*))
     val qv = normalized(queries)

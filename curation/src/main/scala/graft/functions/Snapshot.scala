@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *    the full-outer shuffle moves 16 bytes/doc, not document text — at
   *    100 TB the diff of two corpus versions shuffles gigabytes, not the
   *    corpora. With both snapshots stored bucketed by `doc_id`
-  *    (`Tables.writeBucketed`), the join is zero-shuffle.
+  *    (`ManagedTables.writeBucketed`), the join is zero-shuffle.
   *  - The content hash is `xxhash64`, codegen'd and null-safe (a NULL text
   *    hashes to the seed, so NULL ≡ NULL reads as unchanged — matching the
   *    oracle's `IS NOT DISTINCT FROM` ground truth).

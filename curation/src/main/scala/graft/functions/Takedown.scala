@@ -182,7 +182,7 @@ object Takedown {
       s"duplicate artifacts in registry: $keys")
     val batch = ids.distinct.sorted
     val hash = idsHash(batch)
-    registry.foreach(a => graft.sources.Tables.requireIdent(a.name))
+    registry.foreach(a => graft.sources.ManagedTables.requireIdent(a.name))
     // pre-probe every artifact's ledger CONCURRENTLY (pure reads of
     // per-artifact tables; each ledger is only written by its own apply
     // below, so probing up front is equivalent to probing just-in-time) —
@@ -269,26 +269,26 @@ object Takedown {
       df.join(org.apache.spark.sql.functions.broadcast(idsDf),
         col(idCol) === col("__id")).count()
     def residualCodes(nm: String): Long = residual(
-      graft.sources.Tables.minusDeletes(spark, nm,
+      graft.sources.ManagedTables.minusDeletes(spark, nm,
         spark.table(s"${nm}_codes"), "vec_id"), "vec_id")
     // per-artifact residual counts are independent pruned reads — overlap
     // them (guide §2.6); Par returns in registry order
     graft.Par.run(registry.map { a => () =>
       val n = a match {
         case SearchIndex(nm) => residual(
-          graft.sources.Tables.minusDeletes(spark, nm,
+          graft.sources.ManagedTables.minusDeletes(spark, nm,
             spark.table(s"${nm}_postings"), "doc_id"), "doc_id")
         case MinhashLsh(nm) => residual(
-          graft.sources.Tables.minusDeletes(spark, nm,
+          graft.sources.ManagedTables.minusDeletes(spark, nm,
             spark.table(s"${nm}_sets"), "doc_id"), "doc_id")
         case AnnIndex(nm) => residual(
-          graft.sources.Tables.minusDeletes(spark, nm,
+          graft.sources.ManagedTables.minusDeletes(spark, nm,
             spark.table(s"${nm}_assignments"), "vec_id"), "vec_id")
         case SqIndex(nm) => residualCodes(nm)
         case PqIndex(nm) => residualCodes(nm)
         case IvfPqResIndex(nm) => residualCodes(nm)
         case SubstringIndex(nm) => residual(
-          graft.sources.Tables.minusDeletes(spark, nm,
+          graft.sources.ManagedTables.minusDeletes(spark, nm,
             spark.table(s"${nm}_winhash"), "doc_id"), "doc_id")
         case GroundTruth(nm) =>
           // a truth row references an id on EITHER side; the live read
@@ -299,16 +299,16 @@ object Takedown {
                 col("neighbor_id") === col("__id"), "left_semi")
             .count()
         case FrontierTable(nm) => residual(
-          graft.sources.Tables.minusDeletes(spark, s"${nm}_frontier",
+          graft.sources.ManagedTables.minusDeletes(spark, s"${nm}_frontier",
             spark.table(s"${nm}_frontier"), "first_doc"), "first_doc")
         case BqIndex(nm) => residual(
-          graft.sources.Tables.minusDeletes(spark, nm,
+          graft.sources.ManagedTables.minusDeletes(spark, nm,
             spark.table(s"${nm}_words"), "vec_id"), "vec_id")
         case VecTable(nm) => residual(
-          graft.sources.Tables.minusDeletes(spark, nm,
+          graft.sources.ManagedTables.minusDeletes(spark, nm,
             spark.table(s"${nm}_vectors"), "vec_id"), "vec_id")
         case PhashTable(nm) => residual(
-          graft.sources.Tables.minusDeletes(spark, nm,
+          graft.sources.ManagedTables.minusDeletes(spark, nm,
             spark.table(nm), "doc_id"), "doc_id")
         case ClusterTable(nm, _) =>
           residual(spark.table(s"${nm}_clusters"), "doc_id")
@@ -400,11 +400,11 @@ object Takedown {
       retainBatches: Seq[String]): Unit = {
     val skip = registry.filter(subtractive).map(_.name).toSet
     registry.filterNot(a => skip(a.name)).map(_.name).distinct.foreach { n =>
-      graft.sources.Tables.requireIdent(n)
+      graft.sources.ManagedTables.requireIdent(n)
       if (spark.catalog.tableExists(s"${n}_takedowns")) {
         import spark.implicits._
         val retain = retainBatches.toDF("__keep_id")
-        graft.sources.Tables.rewriteTable(spark, s"${n}_takedowns",
+        graft.sources.ManagedTables.rewriteTable(spark, s"${n}_takedowns",
           spark.table(s"${n}_takedowns")
             .join(broadcast(retain), col("batch_id") === col("__keep_id"),
               "left_semi"))
@@ -415,7 +415,7 @@ object Takedown {
   /** Drop an artifact's takedown ledger — pair with the family's own
     * `drop*` when retiring the artifact. */
   def dropLedger(spark: SparkSession, name: String): Unit =
-    graft.sources.Tables.dropManagedTables(spark, Seq(s"${name}_takedowns"))
+    graft.sources.ManagedTables.dropManagedTables(spark, Seq(s"${name}_takedowns"))
 
   /** Content hash of a canonicalized id batch — the ledger's replay
     * validator (MD5 over the sorted distinct ids; collision-finding an

@@ -655,11 +655,11 @@ object TextAnalysis {
         // vocabulary only when its LAST occurrence is unlearned, which the
         // aggregated bigram counts alone cannot see: single-token documents
         // contribute vocabulary but no bigram)
-        () => graft.sources.Tables.writeBucketed(
+        () => graft.sources.ManagedTables.writeBucketed(
           docs.select(explode(tokens(col(textCol))).as("term"))
             .groupBy(col("term")).agg(count(lit(1)).as("cnt")),
           s"${name}_vocab", "term", buckets),
-        () => graft.sources.Tables.writeBucketed(
+        () => graft.sources.ManagedTables.writeBucketed(
           occ.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")),
           s"${name}_model", "w1", buckets)))
       import spark.implicits._
@@ -671,7 +671,7 @@ object TextAnalysis {
         () => Seq(spark.table(s"${name}_vocab").count()).toDF("v")
           .write.mode("overwrite").format("parquet")
           .saveAsTable(s"${name}_globals"),
-        () => graft.sources.Tables.writeBucketed(
+        () => graft.sources.ManagedTables.writeBucketed(
           spark.table(s"${name}_model").groupBy(col("w1"))
             .agg(sum(col("c12")).cast("long").as("c1")),
           s"${name}_ctx", "w1", buckets)))
@@ -714,18 +714,18 @@ object TextAnalysis {
     // overlap the chains, keep each chain's internal order (guide §2.6)
     graft.Par.run(Seq(
       () => {
-        graft.sources.Tables.rewriteBucketed(spark, s"${name}_model",
+        graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_model",
           spark.table(s"${name}_model")
             .join(dOcc, Seq("w1", "w2"), "left")
             .select(col("w1"), col("w2"),
               (col("c12") - coalesce(col("__d"), lit(0L))).as("c12"))
             .filter(col("c12") > 0))
-        graft.sources.Tables.rewriteBucketed(spark, s"${name}_ctx",
+        graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_ctx",
           spark.table(s"${name}_model").groupBy(col("w1"))
             .agg(sum(col("c12")).cast("long").as("c1")))
       },
       () => {
-        graft.sources.Tables.rewriteBucketed(spark, s"${name}_vocab",
+        graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_vocab",
           spark.table(s"${name}_vocab")
             .join(dTok, Seq("term"), "left")
             .select(col("term"),
@@ -758,7 +758,7 @@ object TextAnalysis {
   /** Drop all three LM tables AND their directories. */
   def dropLmTable(spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
     requireIndexName(name)
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_model", s"${name}_ctx", s"${name}_globals",
         s"${name}_vocab"))
   }
@@ -1067,7 +1067,7 @@ object TextAnalysis {
         () => toked.select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
           .write.mode("overwrite").format("parquet")
           .saveAsTable(s"${name}_doclens"),
-        () => graft.sources.Tables.writeBucketed(
+        () => graft.sources.ManagedTables.writeBucketed(
           bm25Postings(toked), s"${name}_postings", "term", buckets)))
     } catch {
       case e: Throwable => dropSearchIndex(spark, name); throw e
@@ -1075,11 +1075,11 @@ object TextAnalysis {
   }
 
   /** Drop both index tables AND their directories (crash-surviving stale
-    * dirs included — see [[graft.sources.Tables.dropManagedTables]]).
+    * dirs included — see [[graft.sources.ManagedTables.dropManagedTables]]).
     */
   def dropSearchIndex(spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
     requireIndexName(name)
-    graft.sources.Tables.dropManagedTables(
+    graft.sources.ManagedTables.dropManagedTables(
       spark, Seq(s"${name}_postings", s"${name}_globals", s"${name}_doclens",
         s"${name}_deletes"))
   }
@@ -1140,17 +1140,17 @@ object TextAnalysis {
           "compaction cannot fold its tombstones; rebuild the index " +
           "with writeSearchIndex first")
       val g = correctedBm25Stats(spark, name).first()
-      graft.sources.Tables.rewriteBucketed(spark, s"${name}_postings",
-        graft.sources.Tables.minusDeletes(spark, name,
+      graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_postings",
+        graft.sources.ManagedTables.minusDeletes(spark, name,
           spark.table(s"${name}_postings"), "doc_id"))
-      graft.sources.Tables.rewriteTable(spark, s"${name}_doclens",
-        graft.sources.Tables.minusDeletes(spark, name,
+      graft.sources.ManagedTables.rewriteTable(spark, s"${name}_doclens",
+        graft.sources.ManagedTables.minusDeletes(spark, name,
           spark.table(s"${name}_doclens"), "doc_id"))
       import spark.implicits._
       Seq((g.getLong(0), g.getLong(1))).toDF("n_docs", "sum_dl")
         .write.mode("overwrite").format("parquet")
         .saveAsTable(s"${name}_globals")
-      graft.sources.Tables.dropDeletes(spark, name)
+      graft.sources.ManagedTables.dropDeletes(spark, name)
     }
   }
 
@@ -1168,7 +1168,7 @@ object TextAnalysis {
   }
 
   private def requireIndexName(name: String): Unit =
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
 
   /** BM25 over a [[writeSearchIndex]] index — same scoring tail, same
     * results as [[bm25Search]] on the indexed corpus (BucketedSpec asserts
@@ -1180,7 +1180,7 @@ object TextAnalysis {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     requireIndexName(name)
     require(queryTerms.nonEmpty)
-    val postings = graft.sources.Tables.minusDeletes(spark, name,
+    val postings = graft.sources.ManagedTables.minusDeletes(spark, name,
       spark.table(s"${name}_postings")
         .filter(col("term").isin(queryTerms: _*)),
       "doc_id")
@@ -1796,10 +1796,10 @@ object TextAnalysis {
     */
   def writeFrontierTable(urls: DataFrame, name: String,
       buckets: Int = 64, urlCol: String = "url"): Unit = {
-    graft.sources.Tables.requireIdent(name)
+    graft.sources.ManagedTables.requireIdent(name)
     val spark = urls.sparkSession
     dropFrontierTable(spark, name)
-    graft.sources.Tables.writeBucketed(frontierRows(urls, urlCol),
+    graft.sources.ManagedTables.writeBucketed(frontierRows(urls, urlCol),
       s"${name}_frontier", "url_canonical", buckets)
   }
 
@@ -1817,12 +1817,12 @@ object TextAnalysis {
     val novel = frontierRows(batch, urlCol)
       .join(liveFrontier(spark, name).select(col("url_canonical")),
         Seq("url_canonical"), "left_anti")
-    graft.sources.Tables.appendBucketed(spark, s"${name}_frontier", novel)
+    graft.sources.ManagedTables.appendBucketed(spark, s"${name}_frontier", novel)
   }
 
   private def liveFrontier(spark: org.apache.spark.sql.SparkSession,
       name: String): DataFrame =
-    graft.sources.Tables.minusDeletes(spark, s"${name}_frontier",
+    graft.sources.ManagedTables.minusDeletes(spark, s"${name}_frontier",
       spark.table(s"${name}_frontier"), "first_doc")
 
   /** Screen an arriving slice against the persisted seen-set:
@@ -1860,21 +1860,21 @@ object TextAnalysis {
     * compliant behavior for a removed document's URLs. O(batch). */
   def deleteFromFrontierTable(spark: org.apache.spark.sql.SparkSession,
       name: String, ids: Seq[Long]): Unit =
-    graft.sources.Tables.appendDeletes(spark, s"${name}_frontier",
+    graft.sources.ManagedTables.appendDeletes(spark, s"${name}_frontier",
       "first_doc", ids)
 
   /** Fold tombstones into the stored rows (stage-and-swap; bytes leave
     * disk here). */
   def compactFrontierTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit = {
-    graft.sources.Tables.rewriteBucketed(spark, s"${name}_frontier",
+    graft.sources.ManagedTables.rewriteBucketed(spark, s"${name}_frontier",
       liveFrontier(spark, name))
-    graft.sources.Tables.dropDeletes(spark, s"${name}_frontier")
+    graft.sources.ManagedTables.dropDeletes(spark, s"${name}_frontier")
   }
 
   def dropFrontierTable(spark: org.apache.spark.sql.SparkSession,
       name: String): Unit =
-    graft.sources.Tables.dropManagedTables(spark,
+    graft.sources.ManagedTables.dropManagedTables(spark,
       Seq(s"${name}_frontier", s"${name}_frontier_deletes"))
 
   /** LINK-GRAPH DOMAIN AUTHORITY — weighted PageRank over the corpus's

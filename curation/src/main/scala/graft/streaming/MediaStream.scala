@@ -83,7 +83,7 @@ object MediaStream {
         if (present.isEmpty) sigs
         else sigs.filter(!col("doc_id").isin(present.toSeq: _*))
       if (!novel.isEmpty)
-        graft.sources.Tables.appendBucketed(spark, sigTable, novel)
+        graft.sources.ManagedTables.appendBucketed(spark, sigTable, novel)
     } finally { b.unpersist(); () }
   }
 
@@ -142,7 +142,7 @@ object MediaStream {
         if (present.isEmpty) sigs
         else sigs.filter(!col("doc_id").isin(present.toSeq: _*))
       if (!novel.isEmpty)
-        graft.sources.Tables.appendBucketed(spark, sigTable, novel)
+        graft.sources.ManagedTables.appendBucketed(spark, sigTable, novel)
     } finally { b.unpersist(); () }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Tables
+import graft.sources.{ManagedTables, Tables}
 import org.apache.spark.sql.functions._
 
 /** Bucketed (pre-shuffled) tables: the co-located-join path. Writing both
@@ -25,8 +25,8 @@ class BucketedSpec extends SparkSpec {
   test("bucketed tables join and aggregate without a shuffle") {
     val facts = (1L to 100L).map(u => (u, u * 2.0)).toDF("user_id", "amount")
     val dim = (1L to 100L).map(u => (u, s"name$u")).toDF("user_id", "name")
-    Tables.writeBucketed(facts, "bkt_facts", "user_id", 4)
-    Tables.writeBucketed(dim, "bkt_dim", "user_id", 4)
+    ManagedTables.writeBucketed(facts, "bkt_facts", "user_id", 4)
+    ManagedTables.writeBucketed(dim, "bkt_dim", "user_id", 4)
     try {
       // force the non-broadcast path: broadcast would trivially avoid the
       // exchange without proving bucket co-location

@@ -1158,7 +1158,7 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[(Long, Double)]
     val events = in.toDF().toDF("event_id", "value")
     val dir = java.nio.file.Files.createTempDirectory("graft_drift_sink").toString
-    val q = EventsStream.driftMonitorSink(events, baseline, dir).start()
+    val q = DataQuality.driftMonitorSink(events, baseline, dir).start()
     try {
       val batch0 = (0L until 50L).map(i => (i, i.toDouble * 2))
       val batch1 = (0L until 50L).map(i => (i, i.toDouble + 1000.0))

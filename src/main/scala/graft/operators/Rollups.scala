@@ -119,8 +119,8 @@ object Rollups {
     * refuses to overwrite a path its input plan reads from. Local default
     * is an eager `localCheckpoint` (executor-local blocks — cheap, but a
     * lost executor mid-write fails the job); pass `checkpointDir` to pin
-    * the barrier to reliable storage at cluster scale, mirroring
-    * [[graft.functions.Dedup.duplicateClusters]]' knob.
+    * the barrier to reliable storage at cluster scale, mirroring the
+    * curation module's `Dedup.duplicateClusters` knob.
     */
   def upsertDailyPartials(delta: DataFrame, path: String,
       checkpointDir: Option[String] = None): Unit = {

@@ -91,18 +91,16 @@ final class SegmentRunner(
     *
     * Documented deviation: the reference deletes blindly, leaving
     * dependents' `depends_on` dangling (their next run dies on a missing
-    * parent table). Here a delete with live dependents throws unless
-    * `force = true` — at scale a dangling parent takes down every dependent
-    * refresh, so the guard is the safe default and `force` replicates the
-    * reference's behavior.
+    * parent table). Here a delete with live dependents throws — at scale a
+    * dangling parent takes down every dependent refresh.
     */
-  def deleteRule(ruleId: Long, force: Boolean = false): Unit = {
+  def deleteRule(ruleId: Long): Unit = {
     store.modifyCatalog { catalog =>
       require(catalog.rules.exists(_.ruleId == ruleId), s"rule $ruleId not in catalog")
       val dependents = catalog.rules.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
-      require(force || dependents.isEmpty,
+      require(dependents.isEmpty,
         s"rule $ruleId has dependents ${dependents.mkString(",")}; " +
-          "re-plan or delete them first (or pass force = true)")
+          "re-plan or delete them first")
       (catalog.rules.filterNot(_.ruleId == ruleId), ())
     }
     store.delete(ruleId)

@@ -128,18 +128,20 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     */
   def loadCatalog(): Seq[SegmentCatalogEntry] = withCatalogLock(loadCatalogLocked().rules)
 
-  /** Serialize catalog mutations across processes. Acquisition is an atomic
-    * create-no-overwrite of `_catalog.lock`; a lock older than
-    * `staleLockMs` is presumed abandoned by a crashed writer and broken
-    * (the swap itself is crash-safe, so breaking a dead writer's lock never
-    * observes a torn catalog).
+  /** Serialize catalog mutations across processes. Acquisition is a
+    * create-no-overwrite of `_catalog.lock` (atomic on HDFS only, see
+    * below); a lock older than `staleLockMs` is presumed abandoned by a
+    * crashed writer and broken (the swap itself is crash-safe, so breaking
+    * a dead writer's lock never observes a torn catalog).
     */
   private def withCatalogLock[A](body: => A): A = {
     // Two layers: threads inside one driver JVM serialize on the catalog's
-    // swap monitor, which the save's swapIn re-enters (Hadoop's local
-    // create-exclusive is check-then-create, not atomic); driver processes
-    // serialize on the lock file, whose exclusive create IS atomic on HDFS
-    // namenodes and POSIX local mounts.
+    // swap monitor, which the save's swapIn re-enters; driver processes
+    // serialize on the lock file, whose create-no-overwrite is atomic on
+    // HDFS (the namenode decides). Hadoop's local file system checks for the
+    // file and then opens it without O_EXCL, so two driver processes on one
+    // local warehouse can both take the lock; on object stores (s3a) the
+    // create is a check-then-put and not exclusive either.
     val (fsys, p) = fs(catalogPath)
     SegmentStore.withJvmLock(fsys, p)(withCatalogFileLock(body))
   }
@@ -156,7 +158,11 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
         finally out.close()
         acquired = true
       } catch {
-        case _: java.io.IOException =>
+        case e: java.io.IOException =>
+          // only a held lock is waited for: any other failed create (the
+          // warehouse sits below a file, no permission) is rethrown at once
+          if (!e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] &&
+              !fsys.exists(lock)) throw e
           val age = try {
             System.currentTimeMillis() - fsys.getFileStatus(lock).getModificationTime
           } catch { case _: java.io.FileNotFoundException => 0L } // holder just released
@@ -273,7 +279,7 @@ object SegmentStore {
     * published. Its six callers are segment writes, the catalog
     * ([[SegmentStore.modifyCatalog]]), run-history files
     * ([[SegmentStore.appendRunHistory]]), `RollupServing.materialize`,
-    * `Tables.compact` and `Snapshot`'s pointer files. `writeStaging`
+    * `Tables.compact` and curation's snapshot pointers. `writeStaging`
     * materializes the new content into `<target>__staging` (its result is
     * returned), then the target is moved aside to `<target>__old` and the
     * staging copy renamed in. If `writeStaging` throws, the target is

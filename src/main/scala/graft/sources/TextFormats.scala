@@ -56,7 +56,7 @@ object TextFormats {
     * micro-batch picks up the new ones (Structured Streaming's file
     * source tracks seen files in the checkpoint — exactly-once per
     * file). Same explicit-schema discipline as [[readJsonl]]; compose
-    * with the [[graft.streaming.DocsStream]] gates for
+    * with the curation module's streaming gates for
     * dedup/quality-at-ingest (StreamingSpec runs the composition
     * end-to-end).
     */

@@ -212,7 +212,7 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(runner.getRule(99L).isEmpty)
 
     // parent with a live dependent: guarded (deviation from the reference's
-    // blind delete; force replicates it)
+    // blind delete)
     intercept[IllegalArgumentException](runner.deleteRule(id1))
     assert(store.exists(id1))
 

@@ -221,6 +221,15 @@ class SegmentStoreSpec extends SparkSpec {
     assert(!Files.exists(lock), "lock must be released after the save")
   }
 
+  test("a lock create failing for another reason than a held lock is rethrown") {
+    val file = Files.createTempFile("graft_not_a_dir", "")
+    val store = new SegmentStore(spark, s"$file/warehouse")
+    val t0 = System.nanoTime()
+    intercept[org.apache.hadoop.fs.ParentNotDirectoryException](
+      new SegmentRunner(store, tx).createRule("r", Seq(Condition("transaction_amount", ">", "1"))))
+    assert(System.nanoTime() - t0 < 10L * 1000 * 1000 * 1000, "a failed create must not wait for the lock")
+  }
+
   test("concurrent modifyCatalog calls do not lose updates (lock spans read-modify-write)") {
     val dir = Files.createTempDirectory("graft_cat_race").toString
     val store = new SegmentStore(spark, dir)
