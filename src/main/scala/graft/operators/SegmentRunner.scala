@@ -17,7 +17,8 @@ import org.apache.spark.sql.DataFrame
   *    store write (Q9), row-count + refresh metadata (S7).
   *
   * `refreshedAt` is caller-supplied rather than wall-clock so runs are
-  * reproducible.
+  * reproducible. A refresh batch calls `tx` at most once, so all of its
+  * rules see one listing of the view, a consistent snapshot no rule re-lists.
   */
 final class SegmentRunner(
     store: SegmentStore,
@@ -175,18 +176,20 @@ final class SegmentRunner(
 
   /** Evaluate and write each rule of `ids` (in order, planned from
     * `catalog`), then [[commit]] the batch — also when a rule throws, so the
-    * rules refreshed before it are kept.
+    * rules refreshed before it are kept. The rules share one view, built on
+    * first use (its plan, not its data: nothing is cached).
     */
   private def refresh(catalog: Seq[SegmentCatalogEntry], ids: Seq[Long],
       at: String, rearm: Boolean): Map[Long, Long] = {
     val byId = catalog.map(e => e.ruleId -> e).toMap
+    lazy val view = tx()
     var done = Vector.empty[(Long, Long)]
     try ids.foreach { id =>
       val plan = Planner.planStored(asRule(byId(id)))
       // write() handles the empty case (canonical-schema empty parquet, Q9);
       // probing emptiness first would execute the whole DAG twice.
       done :+= id -> store.write(id,
-        Planner.evaluate(plan, tx(), store.read, keyed, residualMode))
+        Planner.evaluate(plan, view, store.read, keyed, residualMode))
     } finally commit(done, at, rearm)
     done.toMap
   }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * previous segment readable, like the reference's transactional table
   * replace; a crashed swap rolls back ([[SegmentStore.resolve]]). An
   * empty result writes an empty file with the canonical 4-column schema so
-  * downstream readers never fail (S6, SURVEY Q9).
+  * downstream readers never fail (S6, SURVEY Q9), and reads trust that schema.
   */
 final class SegmentStore(spark: SparkSession, warehouse: String) {
 
@@ -59,10 +59,14 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     }
   }
 
-  /** The published segment; one never published fails as a missing path. */
+  /** The published segment, read in the canonical schema every write pins
+    * (no inference job; a file of other column types raises when read). One
+    * never published fails as a missing path.
+    */
   def read(ruleId: Long): DataFrame = {
     val (f, p) = fs(path(ruleId))
-    spark.read.parquet(SegmentStore.resolve(f, p).getOrElse(p).toString)
+    spark.read.schema(Schemas.segmentOutput)
+      .parquet(SegmentStore.resolve(f, p).getOrElse(p).toString)
   }
 
   def exists(ruleId: Long): Boolean = {

@@ -363,17 +363,20 @@ class SegmentRunnerSpec extends SparkSpec {
   test("a rule throwing mid-batch rethrows; the rules refreshed before it stay committed") {
     val dir = Files.createTempDirectory("graft_runner_fail").toString
     val store = new SegmentStore(spark, dir)
-    var calls = 0
-    val failing: () => DataFrame = () => {
-      calls += 1
-      if (calls == 2) throw new IllegalStateException("source down")
-      tx()
-    }
-    val runner = new SegmentRunner(store, failing)
+    // only the second rule reads city_tier; the first rule's pruned scan
+    // never evaluates the throwing column
+    val boom = udf((t: Int) => if (t >= 0) throw new IllegalStateException("source down") else t)
+      .asNondeterministic()
+    val runner = new SegmentRunner(store,
+      () => tx().repartition($"user_id").withColumn("city_tier", boom($"city_tier")))
     val (id1, _) = runner.createRule("first", Seq(cAmount))
     val (id2, _) = runner.createRule("second", Seq(cTier))
     val at = "2026-08-12T00:00:00Z"
-    intercept[IllegalStateException](runner.runAll(at))
+    val e = intercept[Exception](runner.runAll(at))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists {
+      case s: IllegalStateException => s.getMessage == "source down"
+      case _                        => false
+    }, s"the UDF's failure must be in the cause chain of $e")
     val cat = store.loadCatalog()
     val first = cat.find(_.ruleId == id1).get
     assert(first.rowCount == 2L && first.lastRefreshedAt.contains(at))
@@ -381,6 +384,39 @@ class SegmentRunnerSpec extends SparkSpec {
     val h = store.runHistory().collect()
       .map(r => (r.getAs[Long]("rule_id"), r.getAs[String]("refreshed_at"), r.getAs[Long]("row_count")))
     assert(h.toSeq == Seq((id1, at, 2L)))
+  }
+
+  test("a refresh batch builds the transaction view once") {
+    val dir = Files.createTempDirectory("graft_runner_view_once").toString
+    val store = new SegmentStore(spark, dir)
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val runner = new SegmentRunner(store, () => { calls.incrementAndGet(); tx() })
+    runner.createRule("r1", Seq(cAmount))
+    runner.createRule("r2", Seq(cTier))
+    val (_, p3) = runner.createRule("residual",
+      Seq(cAmount, cTier, Condition("transaction_amount", "<", "900")))
+    assert(p3 match { case SegmentPlan.Compound(_, _, residual) => residual.nonEmpty; case _ => false })
+    val (id4, p4) = runner.createRule("covered", Seq(cAmount, cTier))
+    assert(p4 == SegmentPlan.Compound(Seq(1L, 2L), SetOp.Intersection, Nil))
+    assert(runner.runAll("2026-08-12T00:00:00Z").size == 4)
+    assert(calls.get() == 1, "every rule of a batch must plan against one view")
+    calls.set(0)
+    assert(runner.run(id4, "2026-08-12T01:00:00Z") == 2L)
+    assert(calls.get() == 0, "a batch whose rules never read the view must not build it")
+  }
+
+  test("every job a refresh batch launches belongs to a segment write") {
+    val dir = Files.createTempDirectory("graft_runner_sql_jobs").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    runner.createRule("r1", Seq(cAmount))
+    runner.createRule("r2", Seq(cTier))
+    runner.createRule("residual", Seq(cAmount, cTier, Condition("transaction_amount", "<", "900")))
+    runner.createRule("covered", Seq(cAmount, cTier))
+    val jobs = jobsLaunchedBy(assert(runner.runAll("2026-08-12T00:00:00Z").size == 4))
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.nonEmpty),
+      s"${jobs.count(_.isEmpty)} of ${jobs.size} jobs ran outside any SQL execution")
   }
 
   test("a refresh failing mid-write keeps the previous segment and its row count") {

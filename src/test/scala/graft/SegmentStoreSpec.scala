@@ -270,6 +270,30 @@ class SegmentStoreSpec extends SparkSpec {
     assert(store.read(7L).count() == 2L)
   }
 
+  test("reading a published segment launches no Spark job") {
+    val dir = Files.createTempDirectory("graft_read_nojob").toString
+    val store = new SegmentStore(spark, dir)
+    val seg = Seq((1L, 2L, 1300.0, "UPI"), (2L, 1L, 40.0, "UPI"))
+      .toDF("user_id", "total_transactions", "total_spent", "transaction_types")
+    assert(store.write(7L, seg) == 2L)
+    var read: DataFrame = null
+    assert(jobsLaunchedBy { read = store.read(7L) }.isEmpty,
+      "a segment is written in the canonical schema; reading it must not infer one")
+    assert(read.schema == Schemas.segmentOutput)
+    assert(read.orderBy("user_id").collect().toSeq == seg.collect().toSeq)
+
+    // an empty segment still reads as no rows of the canonical schema
+    assert(store.write(8L, seg.filter($"user_id" < 0)) == 0L)
+    assert(store.read(8L).schema == Schemas.segmentOutput && store.read(8L).count() == 0L)
+
+    // a file that disagrees with the canonical types raises, never reads as null
+    seg.withColumn("total_spent", $"total_spent".cast("string"))
+      .write.parquet(s"$dir/segment_output_9")
+    intercept[org.apache.spark.SparkException](store.read(9L).collect())
+    // one never published fails as a missing path
+    intercept[org.apache.spark.sql.AnalysisException](store.read(10L))
+  }
+
   // ---- crash points -------------------------------------------------------
   //
   // Every rename/delete a publish makes on a swap path is a crash point
