@@ -37,6 +37,12 @@ object ConditionCompiler {
     "total_spend"       -> SpentCol,
     "transaction_count" -> CountCol)
 
+  /** A condition [[compile]] routes to HAVING: one on `total_spend` or
+    * `transaction_count`, compiled or skipped. Every other condition is a
+    * WHERE condition or skipped before the aggregate.
+    */
+  def isHaving(c: Condition): Boolean = aggregateFields.contains(c.field)
+
   /** WHERE-routed fields (reference: rule_parser.py:12-18). */
   private val whereFields = Set("transaction_amount", "city_tier", "transaction_date")
 
@@ -64,7 +70,7 @@ object ConditionCompiler {
     conditions.foreach { c =>
       compileOne(c, mode) match {
         case Right(col) =>
-          if (aggregateFields.contains(c.field)) havings += col else wheres += col
+          if (isHaving(c)) havings += col else wheres += col
         case Left(reason) =>
           skipped += ((c, reason))
       }

@@ -9,12 +9,20 @@ import org.apache.spark.sql.DataFrame
   * would actually call. Mirrors the two entry points:
   *
   *  - [[createRule]] = `POST /api/v1/rules` (reference
-  *    backend/app/api/rules.py:11-70): dependency detection against the
-  *    catalog, residual conditions stored on the rule, lineage recorded.
+  *    backend/app/api/rules.py:11-70): reuse detection against the
+  *    catalog, submitted conditions stored on the rule, lineage recorded.
   *  - [[run]] = the scheduler's `execute_rule` → SparkSegmentProcessor
   *    (reference backend/app/processor/spark_processor.py:205-237): plan
   *    dispatch (compound wins over base, Q5), materialization, empty-safe
   *    store write (Q9), row-count + refresh metadata (S7).
+  *
+  * Rules reuse stored segments exactly ([[Planner.planNew]]): a Compound
+  * rule is a HAVING filter over one parent's parquet and reads no `tx`.
+  * `residualMode = DropResidual` is reference parity instead: it plans the
+  * greedy cover ([[Planner.planGreedy]]) and evaluates it by set operations
+  * over its parents, keyed or row-faithful as `keyed` says. A default
+  * runner refuses to refresh a rule such a runner bound that is not exact
+  * reuse of its parent.
   *
   * `refreshedAt` is caller-supplied rather than wall-clock so runs are
   * reproducible. A refresh batch calls `tx` at most once, so all of its
@@ -32,27 +40,35 @@ final class SegmentRunner(
       dependencies = e.dependsOn,
       operation = e.operation.flatMap(SetOp.parse))
 
-  /** The catalog fields a plan decides: stored conditions (the residual
-    * for a compound rule), parents, operation and display SQL.
+  private val greedy = residualMode == Planner.DropResidual
+
+  private def plan(conditions: Seq[Condition], others: Seq[SegmentCatalogEntry]): SegmentPlan =
+    if (greedy) Planner.planGreedy(conditions, others.map(asRule))
+    else Planner.planNew(conditions, others.map(asRule))
+
+  /** The catalog fields a plan decides: the submitted conditions, parents,
+    * operation and display SQL.
     */
-  private def withPlan(e: SegmentCatalogEntry, plan: SegmentPlan): SegmentCatalogEntry =
+  private def withPlan(e: SegmentCatalogEntry, conditions: Seq[Condition],
+      plan: SegmentPlan): SegmentCatalogEntry =
     plan match {
-      case SegmentPlan.Base(cs) =>
-        e.copy(conditions = cs, dependsOn = Nil, operation = None,
-          sqlQuery = Some(ReferenceSql.generateSegmentSql(cs)))
-      case SegmentPlan.Compound(parents, op, residual) =>
+      case SegmentPlan.Base(_) =>
+        e.copy(conditions = conditions, dependsOn = Nil, operation = None,
+          sqlQuery = Some(ReferenceSql.generateSegmentSql(conditions)))
+      case SegmentPlan.Compound(parents, op, _) =>
         // sql_query holds the reference's display sentinel
         // `COMPOUND_OPERATION:<op>` (rules.py:211); dispatch never reads it (Q5)
         val name = op.toString.toLowerCase
-        e.copy(conditions = residual, dependsOn = parents,
+        e.copy(conditions = conditions, dependsOn = parents,
           operation = Some(name), sqlQuery = Some(s"COMPOUND_OPERATION:$name"))
     }
 
   /** Create + catalog a rule. Returns its id and the plan that was bound.
-    * Like the reference, the rule keeps only the conditions the dependency
-    * cover did NOT consume (reference rules.py:40-50). `schedule` and
+    * Deviation: the rule keeps its submitted conditions, not only those
+    * the cover left over (reference rules.py:40-50), so later rules match
+    * against what each stored segment means. `schedule` and
     * `isActive` govern scheduled execution ([[runAll]]/[[runDue]]). Id
-    * assignment and dependency detection run inside the catalog
+    * assignment and reuse detection run inside the catalog
     * transaction, so concurrent creates get distinct ids. Ids are never
     * reused: a new rule takes one past the catalog's high-water mark, not
     * past its current highest id, so a deleted rule's run history never
@@ -62,10 +78,10 @@ final class SegmentRunner(
       schedule: String = Schedule.Daily, isActive: Boolean = true): (Long, SegmentPlan) =
     store.modifyCatalog { catalog =>
       val id = catalog.nextRuleId
-      val plan = Planner.planNew(conditions, catalog.rules.map(asRule))
+      val p = plan(conditions, catalog.rules)
       val entry = withPlan(SegmentCatalogEntry(id, name, s"segment_output_$id", Nil, Nil, None,
-        schedule = schedule, isActive = isActive), plan)
-      (catalog.rules :+ entry, (id, plan))
+        schedule = schedule, isActive = isActive), conditions, p)
+      (catalog.rules :+ entry, (id, p))
     }
 
   /** List cataloged rules, paginated like the reference's
@@ -107,7 +123,7 @@ final class SegmentRunner(
     store.delete(ruleId)
   }
 
-  /** Update a rule's conditions: re-runs dependency detection excluding the
+  /** Update a rule's conditions: re-runs reuse detection excluding the
     * rule itself (reference rules.py:154-225, R7). Deviation: a rule with
     * dependents is refused, like [[deleteRule]]'s guard (the reference
     * updates it in place, which changes what its dependents mean and may
@@ -118,8 +134,8 @@ final class SegmentRunner(
       val dependents = catalog.rules.filter(_.dependsOn.contains(ruleId)).map(_.ruleId)
       require(dependents.isEmpty, s"rule $ruleId has dependents ${dependents.mkString(",")}; " +
         "re-plan or delete them first")
-      val plan = Planner.planNew(conditions, catalog.rules.filter(_.ruleId != ruleId).map(asRule))
-      (catalog.rules.map(e => if (e.ruleId == ruleId) withPlan(e, plan) else e), plan)
+      val p = plan(conditions, catalog.rules.filter(_.ruleId != ruleId))
+      (catalog.rules.map(e => if (e.ruleId == ruleId) withPlan(e, conditions, p) else e), p)
     }
 
   /** Materialize one rule into the store; returns the row count written.
@@ -186,12 +202,29 @@ final class SegmentRunner(
     var done = Vector.empty[(Long, Long)]
     try ids.foreach { id =>
       val plan = Planner.planStored(asRule(byId(id)))
+      if (!greedy) requireExact(id, plan, byId)
       // write() handles the empty case (canonical-schema empty parquet, Q9);
       // probing emptiness first would execute the whole DAG twice.
       done :+= id -> store.write(id,
         Planner.evaluate(plan, view, store.read, keyed, residualMode))
     } finally commit(done, at, rearm)
     done.toMap
+  }
+
+  /** Refuse a Compound plan that is not exact reuse of its one parent: a
+    * binding a `DropResidual` runner stored, which exact evaluation would
+    * misread (a single parent's whole segment, minus the rule's WHERE
+    * conditions the parent lacks).
+    */
+  private def requireExact(id: Long, plan: SegmentPlan,
+      byId: Map[Long, SegmentCatalogEntry]): Unit = plan match {
+    case SegmentPlan.Compound(Seq(p), SetOp.Intersection, conds)
+        if byId.get(p).exists(e => Planner.serves(e.conditions, conds)) =>
+    case SegmentPlan.Compound(parents, _, _) =>
+      throw new IllegalStateException(s"rule $id is bound to rules ${parents.mkString(",")} " +
+        "by the reference's greedy cover (DropResidual), not by exact reuse; refresh it " +
+        "under DropResidual or update its conditions")
+    case _ =>
   }
 
   /** One catalog transaction sets each refreshed rule's row count (S7),

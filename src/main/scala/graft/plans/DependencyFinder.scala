@@ -2,15 +2,18 @@ package graft.plans
 
 import graft.model._
 
-/** Segment-reuse rewrite: greedily expresses a new rule as an INTERSECTION
-  * of already-materialized segments whose condition-sets are subsets of the
-  * new rule's, leaving only residual conditions for fresh computation
-  * (reference: backend/app/utils/dependency_finder.py:19-74).
+/** The reference's segment-reuse rewrite, kept for reference parity
+  * ([[Planner.planGreedy]]): greedily expresses a new rule as an
+  * INTERSECTION of already-materialized segments whose condition-sets are
+  * subsets of the new rule's, leaving only residual conditions for fresh
+  * computation (reference: backend/app/utils/dependency_finder.py:19-74).
   *
-  * This is the reference's one genuinely custom optimization. It is a
-  * control-plane rewrite over catalog metadata — plain Scala above Spark, no
-  * Catalyst rule needed (SURVEY §4): at 100 TB it saves the entire scan +
-  * shuffle for the covered conditions by reusing parquet segment outputs.
+  * The cover is not exact: a WHERE condition filters transactions before
+  * the per-user aggregate, so neither it nor a HAVING bound distributes
+  * over an intersection of per-user segments ({amount > 500} ∩ {tier = 1}
+  * keeps a user whose only transaction over 500 is in another tier). The
+  * default path reuses a segment only where the result is exact
+  * ([[Planner.planNew]]).
   *
   * Determinism: candidates are ordered by condition-count descending
   * (reference dependency_finder.py:38 sorts by json_array_length desc) with

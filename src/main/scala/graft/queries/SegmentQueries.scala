@@ -219,6 +219,11 @@ private[graft] object SegmentQueries {
     Seq(Condition.between("transaction_date", "2024-01-10", "2024-01-12"),
       Condition("transaction_amount", ">", "150")))
 
+  /** The stored rules `parentConds` stand for, ids from 1. */
+  private val parentRules: Seq[Rule] = parentConds.zipWithIndex.map { case (cs, i) =>
+    Rule(id = i + 1L, name = s"rule${i + 1}", conditions = cs)
+  }
+
   private def parents(spark: SparkSession, dir: String): Seq[DataFrame] = {
     val tx = Tables.transactions(spark, dir)
     parentConds.map(SegmentEngine.materializeBase(tx, _))
@@ -274,19 +279,18 @@ private[graft] object SegmentQueries {
       Some(s"$parentsCte SELECT * FROM s1 EXCEPT SELECT * FROM s2 " +
         "EXCEPT SELECT * FROM s3 ORDER BY user_id")),
 
-    // End-to-end segment-reuse rewrite (R1-R5): a new rule whose conditions
-    // are covered by rules 1-3 plus a residual HAVING condition compiles to
-    // Compound([1,2,3], INTERSECTION, residual) and evaluates keyed.
+    // The reference's greedy reuse rewrite (R1-R3, kept for parity): a new
+    // rule whose conditions are covered by rules 1-3 plus a residual HAVING
+    // condition is covered by [2,3,1] with that residual, here intersected
+    // keyed with the residual's aggregate over the raw scan.
     Q("q_seg_planner_reuse",
       (s, d) => {
-        val existing = parentConds.zipWithIndex.map { case (cs, i) =>
-          Rule(id = i + 1, name = s"rule${i + 1}", conditions = cs)
-        }
         val newConds = parentConds.flatten :+ Condition("total_spend", ">", "500")
-        val plan = graft.plans.Planner.planNew(newConds, existing)
-        val tx = Tables.transactions(s, d)
-        val parentById = parents(s, d).zipWithIndex.map { case (df, i) => (i + 1).toLong -> df }.toMap
-        graft.plans.Planner.evaluate(plan, tx, parentById(_)).orderBy("user_id")
+        val cover = graft.plans.DependencyFinder.findBestDependency(newConds, parentRules).get
+        val byId = parentRules.map(_.id).zip(parents(s, d)).toMap
+        SegmentOps.combine(cover.operation, cover.dependencyRuleIds.map(byId) :+
+          SegmentEngine.materializeBase(Tables.transactions(s, d), cover.remaining))
+          .orderBy("user_id")
       },
       // Greedy cover claims by (size desc, id asc): rules 2 and 3 carry two
       // conditions each, so the dependency order is [2, 3, 1] and the keyed
@@ -295,7 +299,23 @@ private[graft] object SegmentQueries {
         "SELECT * FROM s2 " +
         "WHERE user_id IN (SELECT user_id FROM s3) " +
         "AND user_id IN (SELECT user_id FROM s1) " +
-        "AND user_id IN (SELECT user_id FROM sr) ORDER BY user_id")))
+        "AND user_id IN (SELECT user_id FROM sr) ORDER BY user_id")),
+
+    // Exact reuse (R4-R5), the default path: rule 1's WHERE set plus two
+    // HAVING conditions binds Compound over rule 1 alone and evaluates as
+    // a HAVING filter over its segment, never reading the raw scan. The
+    // oracle aggregates the raw events under the rule's own conditions.
+    Q("q_seg_exact_reuse",
+      (s, d) => {
+        val having = Seq(Condition("total_spend", ">", "500"),
+          Condition("transaction_count", ">=", "2"))
+        val plan = graft.plans.Planner.planNew(parentConds.head ++ having, parentRules)
+        require(plan == SegmentPlan.Compound(Seq(1L), SetOp.Intersection, having), s"bound $plan")
+        val byId = parentRules.map(_.id).zip(parents(s, d)).toMap
+        graft.plans.Planner.evaluate(plan, sys.error("exact reuse reads no events"), byId)
+          .orderBy("user_id")
+      },
+      Some(segSql("value > 250", s"${dSum("value")} > 500 AND count(user_id) >= 2"))))
 
   // -------------------------------------------------------------------------
   // Rollups and the shared oracle fragments (SURVEY §2.4, §2.7 T1/T4)

@@ -123,7 +123,8 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
       val (next, result) = f(loaded)
       val (fsys, p) = fs(catalogPath)
       val highWater = (loaded.highWater +: next.map(_.ruleId)).max
-      SegmentStore.publishBytes(fsys, p, SegmentStore.toJson(SegmentStore.Catalog(next, highWater)))
+      SegmentStore.publishBytes(fsys, p,
+        SegmentStore.toJson(SegmentStore.Catalog(next, highWater, SegmentStore.CatalogFormat)))
       result
     }
 
@@ -183,12 +184,21 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   /** Read the catalog, as published ([[SegmentStore.readPublished]]).
     * Callers hold the catalog lock. A parquet `_catalog/` written by an
     * earlier engine version is refused, never read as empty (an empty read
-    * would reassign rule ids over existing segments).
+    * would reassign rule ids over existing segments). So is a document
+    * older than [[SegmentStore.CatalogFormat]] holding a Compound rule: it
+    * stored that rule's greedy residual, not its submitted conditions.
     */
   private def loadCatalogLocked(): SegmentStore.Catalog = {
     val (fsys, p) = fs(catalogPath)
     SegmentStore.readPublished(fsys, p) match {
-      case Some(bytes) => SegmentStore.catalogFromJson(bytes)
+      case Some(bytes) =>
+        val c = SegmentStore.catalogFromJson(bytes)
+        if (c.format < SegmentStore.CatalogFormat)
+          c.rules.find(_.dependsOn.nonEmpty).foreach(e => throw new IllegalStateException(
+            s"$p predates catalog format ${SegmentStore.CatalogFormat}, which stores each " +
+              s"rule's submitted conditions; its Compound rule ${e.ruleId} stores a greedy " +
+              "cover's residual and is not read. Recreate the warehouse."))
+        c
       case None =>
         val legacy = new Path(s"$warehouse/_catalog")
         if (fsys.exists(legacy)) throw new IllegalStateException(
@@ -252,10 +262,17 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
 
 object SegmentStore {
 
-  /** The catalog document: the rules, and the highest rule id ever saved. */
-  final case class Catalog(rules: Seq[SegmentCatalogEntry], highWater: Long) {
+  /** The catalog document: the rules, the highest rule id ever saved and
+    * the document's format. A document without the mark is format 1.
+    */
+  final case class Catalog(rules: Seq[SegmentCatalogEntry], highWater: Long, format: Int = 1) {
     def nextRuleId: Long = highWater + 1L
   }
+
+  /** The catalog format this engine writes: each rule keeps its submitted
+    * conditions. Format 1 kept a Compound rule's greedy residual.
+    */
+  val CatalogFormat = 2
 
   /** One monitor per swap target while some thread holds or awaits it; its
     * count of such threads is updated in `compute`, and the entry dropped

@@ -5,7 +5,9 @@ import graft.plans.{DependencyFinder, Planner}
 import graft.sources.SegmentStore
 import java.nio.file.Files
 
-/** Control plane: greedy subset cover, plan precedence, store round-trip. */
+/** Control plane: exact reuse, the greedy parity cover, plan precedence,
+  * store round-trip.
+  */
 class PlannerSpec extends SparkSpec {
 
   private val cAmount = Condition("transaction_amount", ">", "500")
@@ -42,11 +44,36 @@ class PlannerSpec extends SparkSpec {
 
   test("offline re-analysis: composite only on exact composition (R9)") {
     val r4 = Rule(4, "r4", Seq(cAmount, cTier, cDate))
-    val plans = Planner.reclassifyAll(rules :+ r4)
-    // r3 = r1 ∪ r2 exactly ⇒ composite; r4 has no exact cover ⇒ base
-    assert(plans(3) == SegmentPlan.Compound(Seq(1, 2), SetOp.Intersection, Nil))
+    val r5 = Rule(5, "r5", Seq(cAmount, cHaving))
+    val plans = Planner.reclassifyAll(rules :+ r4 :+ r5)
+    // r5 = r1's WHERE set plus HAVING ⇒ composite over r1 alone; r3 = r1 ∪ r2
+    // and r4 share no rule's WHERE set ⇒ base
+    assert(plans(5) == SegmentPlan.Compound(Seq(1), SetOp.Intersection, Seq(cHaving)))
+    assert(plans(3) == SegmentPlan.Base(Seq(cAmount, cTier)))
     assert(plans(4) == SegmentPlan.Base(Seq(cAmount, cTier, cDate)))
     assert(plans(1) == SegmentPlan.Base(Seq(cAmount)))
+  }
+
+  test("exact reuse binds the same WHERE set with the largest HAVING subset, lowest id first") {
+    val cCount = Condition("transaction_count", ">=", "2")
+    val stored = Seq(
+      Rule(1, "where", Seq(cAmount)),
+      Rule(2, "having", Seq(cAmount, cHaving)),
+      Rule(3, "having-twin", Seq(cHaving, cAmount)),
+      Rule(4, "where-superset", Seq(cAmount, cTier)),
+      Rule(5, "having-only", Seq(cHaving)))
+    assert(Planner.planNew(Seq(cAmount, cHaving, cCount), stored) ==
+      SegmentPlan.Compound(Seq(2), SetOp.Intersection, Seq(cCount)))
+    assert(Planner.planNew(Seq(cAmount, cCount), stored) ==
+      SegmentPlan.Compound(Seq(1), SetOp.Intersection, Seq(cCount)))
+    assert(Planner.planNew(Seq(cHaving, cCount), stored) ==
+      SegmentPlan.Compound(Seq(5), SetOp.Intersection, Seq(cCount)))
+    // a WHERE superset or subset of a stored rule is not served by it
+    assert(Planner.planNew(Seq(cAmount, cTier, cDate), stored) ==
+      SegmentPlan.Base(Seq(cAmount, cTier, cDate)))
+    assert(Planner.planNew(Seq(cCount), stored) == SegmentPlan.Base(Seq(cCount)))
+    // nor a stored rule whose HAVING set is not a subset
+    assert(Planner.planNew(Seq(cAmount), stored.drop(1)) == SegmentPlan.Base(Seq(cAmount)))
   }
 
   test("stored rule with deps+op plans Compound even with conditions present (Q5)") {
@@ -73,6 +100,19 @@ class PlannerSpec extends SparkSpec {
         SegmentPlan.Compound(Nil, SetOp.Intersection),
         tx = seg, loadParent = _ => seg).collect()
     }
+    // the parity path (DropResidual) passes one parent through by its set
+    // operation and rejects zero parents there
+    val drop = Planner.DropResidual
+    for (keyed <- Seq(true, false)) {
+      assert(Planner.evaluate(SegmentPlan.Compound(Seq(1), SetOp.Intersection, Seq(cHaving)),
+        tx = sys.error("parity reads no tx"), loadParent = _ => seg,
+        keyed = keyed, residualMode = drop).collect().length == 1)
+      val e = intercept[IllegalArgumentException] {
+        Planner.evaluate(SegmentPlan.Compound(Nil, SetOp.Intersection),
+          tx = seg, loadParent = _ => seg, keyed = keyed, residualMode = drop).collect()
+      }
+      assert(e.getMessage.contains("no parent segments"))
+    }
     // faithful mode reproduces the reference's < 2-parent abort
     // (spark_processor.py:92-94) on the same single-cover plan
     intercept[IllegalArgumentException] {
@@ -83,7 +123,7 @@ class PlannerSpec extends SparkSpec {
     // and stays inert when two parents resolve
     val two = Planner.evaluate(
       SegmentPlan.Compound(Seq(1, 2), SetOp.Intersection),
-      tx = seg, loadParent = _ => seg, faithfulParentGuard = true)
+      tx = seg, loadParent = _ => seg, residualMode = drop, faithfulParentGuard = true)
     assert(two.collect().length == 1)
     // a non-vacuous residual must NOT rescue the faithful count: the
     // reference counts parent_segment_dfs only (spark_processor.py:92-94),

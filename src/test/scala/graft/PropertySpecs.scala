@@ -8,7 +8,8 @@ import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
 /** Property tests for the condition language, the greedy reuse cover,
-  * the metadata codec, the segment kernel and the `city_tier` byte scan.
+  * exact reuse, the metadata codec, the segment kernel and the `city_tier`
+  * byte scan.
   * ScalaCheck Properties run under sbt's built-in framework support.
   */
 object ConditionProps extends Properties("ConditionLanguage") {
@@ -191,6 +192,82 @@ object SegmentKernelProps extends Properties("SegmentKernel") {
         if (got == want) None else Some(s"$label view: $got != $want")
       }
       Prop(mismatches.isEmpty) :| mismatches.mkString("\n")
+    }
+}
+
+/** Exact reuse end to end: on random rule sets over random transactions,
+  * every segment [[graft.operators.SegmentRunner]] stores after `createRule`
+  * and `runAll` equals the base segment of the conditions the rule was
+  * submitted with. Each rule is fresh or an earlier rule plus one WHERE or
+  * HAVING condition, so rules bind Compound several levels deep and WHERE
+  * supersets, which must not reuse, occur as often as HAVING supersets.
+  */
+object ExactReuseProps extends Properties("ExactReuse") {
+  import graft.operators.{SegmentEngine, SegmentRunner}
+  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.functions._
+
+  // each check runs about twenty small Spark jobs
+  override def overrideParameters(p: org.scalacheck.Test.Parameters) = p.withMinSuccessfulTests(8)
+
+  private lazy val spark = {
+    val s = TestSession.spark
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
+  private val atoms: Vector[Condition] = Vector(
+    Condition("transaction_amount", ">", "200"),
+    Condition("transaction_amount", "<", "700"),
+    Condition("city_tier", "=", "1"),
+    Condition.in("city_tier", Seq("1", "2")),
+    Condition.between("transaction_date", "2024-01-02", "2024-01-04"),
+    Condition("total_spend", ">", "600"),
+    Condition("total_spend", "<", "2000"),
+    Condition("transaction_count", ">=", "2"))
+
+  private val genRuleSet: Gen[Vector[Seq[Condition]]] =
+    Gen.listOfN(5, Gen.zip(Gen.oneOf(true, false), Gen.choose(0, 99), Gen.pick(2, atoms),
+        Gen.oneOf(atoms)))
+      .map(_.foldLeft(Vector.empty[Seq[Condition]]) { case (rules, (superset, j, fresh, extra)) =>
+        if (superset && rules.nonEmpty) {
+          val parent = rules(j % rules.size)
+          rules :+ (if (parent.contains(extra)) parent else parent :+ extra)
+        } else rules :+ fresh.toSeq.take(1 + j % 2)
+      })
+
+  private val genTx: Gen[Seq[(Long, Double, String, String, Int, String)]] =
+    Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, for {
+      user <- Gen.choose(1L, 6L)
+      cents <- Gen.choose(100, 100000)
+      day <- Gen.choose(1, 5)
+      tier <- Gen.choose(1, 3)
+      kind <- Gen.oneOf("UPI", "CREDIT_CARD")
+    } yield (user, cents / 100.0, s"2024-01-0$day 10:00:00", "Dining", tier, kind)))
+
+  // no shrinking: each shrink step reruns the whole check's Spark jobs
+  property("every stored segment equals its submitted conditions' base segment") =
+    Prop.forAllNoShrink(genTx, genRuleSet) { (rows, rules) =>
+      val s = spark
+      import s.implicits._
+      val tx = rows.toDF("user_id", "amount", "ts_s", "category", "city_tier", "transaction_type")
+        .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
+      def rowsOf(df: DataFrame): Seq[Row] = df.orderBy("user_id").collect().toSeq
+      val dir = java.nio.file.Files.createTempDirectory("graft_exact_reuse_props")
+      try {
+        val store = new SegmentStore(spark, dir.toString)
+        val runner = new SegmentRunner(store, () => tx)
+        val bound = rules.zipWithIndex.map { case (cs, i) => runner.createRule(s"r$i", cs) }
+        runner.runAll("2026-08-12T00:00:00Z")
+        Prop.all(bound.zip(rules).map { case ((id, plan), cs) =>
+          Prop(rowsOf(store.read(id)) == rowsOf(SegmentEngine.materializeBase(tx, cs))) :|
+            s"rule $id ${cs.mkString(", ")} bound $plan"
+        }: _*)
+      } finally {
+        val walk = java.nio.file.Files.walk(dir)
+        try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+        finally walk.close()
+      }
     }
 }
 

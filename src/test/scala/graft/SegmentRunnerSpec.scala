@@ -25,6 +25,8 @@ class SegmentRunnerSpec extends SparkSpec {
 
   private val cAmount = Condition("transaction_amount", ">", "500")
   private val cTier   = Condition("city_tier", "=", "1")
+  private val cCount2 = Condition("transaction_count", ">=", "2")
+  private val cSpend  = Condition("total_spend", ">", "1000")
 
   test("canonical 4-rule scenario: base rules, compound reuse, store, lineage") {
     val dir = Files.createTempDirectory("graft_runner").toString
@@ -36,23 +38,33 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(id1 == 1L && id2 == 2L)
     assert(p1 == SegmentPlan.Base(Seq(cAmount)) && p2 == SegmentPlan.Base(Seq(cTier)))
 
-    // rule 3's conditions ⊇ rules 1+2 ⇒ compound INTERSECTION, no residual
+    // rule 3's WHERE set is no stored rule's ⇒ Base: rules 1 and 2 intersect
+    // to users {1,2}, but user 2's only transaction over 500 is in tier 2
     val (id3, p3) = runner.createRule("both", Seq(cAmount, cTier))
-    assert(p3 == SegmentPlan.Compound(Seq(1L, 2L), SetOp.Intersection, Nil))
+    assert(p3 == SegmentPlan.Base(Seq(cAmount, cTier)))
+    // rule 4 = rule 1's WHERE set plus a HAVING condition ⇒ compound over
+    // rule 1 alone, the HAVING condition its residual
+    val (id4, p4) = runner.createRule("repeat-big-spenders", Seq(cAmount, cCount2))
+    assert(p4 == SegmentPlan.Compound(Seq(1L), SetOp.Intersection, Seq(cCount2)))
 
     assert(runner.run(id1, "2026-08-12T00:00:00") == 2L) // users 1,2 have >500 txns
     assert(runner.run(id2, "2026-08-12T00:00:00") == 3L) // all users touch tier 1
-    assert(runner.run(id3, "2026-08-12T00:00:00") == 2L) // keyed: {1,2}
+    assert(runner.run(id3, "2026-08-12T00:00:00") == 1L) // {1}
+    assert(runner.run(id4, "2026-08-12T00:00:00") == 1L) // {1}
 
-    // keyed intersection keeps parent-1 aggregates: user 1 → 2 txns > 500
+    // user 1 → 2 txns > 500, in tier 1
     val seg3 = store.read(id3).orderBy("user_id").collect()
-    assert(seg3.map(_.getAs[Long]("user_id")).toSeq == Seq(1L, 2L))
+    assert(seg3.map(_.getAs[Long]("user_id")).toSeq == Seq(1L))
     assert(seg3.head.getAs[Long]("total_transactions") == 2L)
+    // the HAVING filter keeps rule 1's aggregates
+    assert(store.read(id4).collect().toSeq == store.read(id1).filter($"user_id" === 1L).collect().toSeq)
 
     val cat = store.loadCatalog()
-    assert(cat.find(_.ruleId == 3).get.rowCount == 2L)
+    assert(cat.find(_.ruleId == 3).get.rowCount == 1L)
     assert(cat.find(_.ruleId == 3).get.lastRefreshedAt.contains("2026-08-12T00:00:00"))
-    assert(store.lineage(3)._2.toSet == Set((1L, 3L), (2L, 3L)))
+    assert(cat.find(_.ruleId == 4).get.conditions == Seq(cAmount, cCount2),
+      "the catalog keeps the submitted conditions")
+    assert(store.lineage(4)._2.toSet == Set((1L, 4L)))
   }
 
   test("empty result writes canonical empty segment (Q9); runAll is topo-ordered") {
@@ -62,8 +74,8 @@ class SegmentRunnerSpec extends SparkSpec {
     val (id1, _) = runner.createRule("r1", Seq(cAmount))
     val (idEmpty, _) = runner.createRule("none",
       Seq(Condition("transaction_amount", ">", "99999")))
-    val (id3, _) = runner.createRule("compound", Seq(cAmount, cTier))
-    assert(id3 == 3L)
+    val (id3, p3) = runner.createRule("compound", Seq(cAmount, cCount2))
+    assert(id3 == 3L && p3.isInstanceOf[SegmentPlan.Compound])
     // runAll materializes parents before rule 3 even though 2 is unrelated
     val counts = runner.runAll("2026-08-12T01:00:00")
     assert(counts(idEmpty) == 0L)
@@ -90,6 +102,29 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(counts(1L) > 0 && counts(2L) > 0)
     assert(counts(id3) == 0L)
     assert(store.read(id3).schema == Schemas.segmentOutput) // Q9 empty write
+  }
+
+  test("a default runner refuses by name the greedy bindings a DropResidual runner stored") {
+    val dir = Files.createTempDirectory("graft_runner_parity").toString
+    val store = new SegmentStore(spark, dir)
+    val parity = new SegmentRunner(store, tx, residualMode = graft.plans.Planner.DropResidual)
+    // one greedy parent with another WHERE set, and two greedy parents
+    parity.createRule("r1", Seq(cAmount))
+    val (id2, p2) = parity.createRule("one-parent", Seq(cAmount, cTier, cCount2))
+    parity.createRule("r3", Seq(cTier))
+    val (id4, p4) = parity.createRule("two-parents", Seq(cTier, cAmount))
+    assert(p2 == SegmentPlan.Compound(Seq(1L), SetOp.Intersection, Seq(cTier, cCount2)))
+    assert(p4 == SegmentPlan.Compound(Seq(1L, 3L), SetOp.Intersection, Nil))
+    val runner = new SegmentRunner(store, tx)
+    assert(runner.run(1L, "2026-08-12T02:00:00") == 2L)
+    for (id <- Seq(id2, id4)) {
+      val e = intercept[IllegalStateException](runner.run(id, "2026-08-12T02:00:00"))
+      assert(e.getMessage.contains(s"rule $id is bound") && e.getMessage.contains("greedy"))
+    }
+    // an exact binding refreshes under either runner
+    val (id5, p5) = runner.createRule("exact", Seq(cAmount, cCount2))
+    assert(p5 == SegmentPlan.Compound(Seq(1L), SetOp.Intersection, Seq(cCount2)))
+    assert(runner.run(id5, "2026-08-12T02:00:00") == 1L)
   }
 
   test("schedule cadence: calculateNextRun per reference scheduler semantics") {
@@ -163,7 +198,7 @@ class SegmentRunnerSpec extends SparkSpec {
     val store = new SegmentStore(spark, dir)
     val runner = new SegmentRunner(store, tx)
     val (idP, _) = runner.createRule("parent", Seq(cAmount), isActive = false)
-    val (idC, plan) = runner.createRule("child", Seq(cAmount, cTier))
+    val (idC, plan) = runner.createRule("child", Seq(cAmount, cCount2))
     assert(plan.isInstanceOf[SegmentPlan.Compound])
 
     // parent inactive AND never materialized: child cannot run this batch
@@ -182,7 +217,7 @@ class SegmentRunnerSpec extends SparkSpec {
     val store = new SegmentStore(spark, dir)
     val runner = new SegmentRunner(store, tx)
     val (idP, _) = runner.createRule("parent", Seq(cAmount), isActive = false)
-    val (idC, plan) = runner.createRule("child", Seq(cAmount, cTier))
+    val (idC, plan) = runner.createRule("child", Seq(cAmount, cCount2))
     assert(plan.isInstanceOf[SegmentPlan.Compound])
     runner.run(idP, "2026-08-12T00:00:00Z")
     val counts = runner.runAll("2026-08-12T01:00:00Z")
@@ -203,7 +238,7 @@ class SegmentRunnerSpec extends SparkSpec {
     val runner = new SegmentRunner(store, tx)
     val (id1, _) = runner.createRule("r1", Seq(cAmount))
     val (id2, _) = runner.createRule("r2", Seq(cTier))
-    val (id3, _) = runner.createRule("compound", Seq(cAmount, cTier))
+    val (id3, _) = runner.createRule("compound", Seq(cAmount, cCount2))
     runner.runAll("2026-08-12T00:00:00Z")
 
     assert(runner.listRules().map(_.ruleId) == Seq(id1, id2, id3))
@@ -233,7 +268,7 @@ class SegmentRunnerSpec extends SparkSpec {
     val runner = new SegmentRunner(store, tx)
     val (id1, _) = runner.createRule("r1", Seq(cAmount))
     runner.createRule("r2", Seq(cTier))
-    val (id3, p3) = runner.createRule("compound", Seq(cAmount, cTier))
+    val (id3, p3) = runner.createRule("compound", Seq(cAmount, cCount2))
     assert(p3.isInstanceOf[SegmentPlan.Compound])
 
     // create path: compound rules carry the reference's literal sentinel,
@@ -251,7 +286,7 @@ class SegmentRunnerSpec extends SparkSpec {
       Seq(Condition("transaction_amount", ">", "99999"))).isInstanceOf[SegmentPlan.Base])
     assert(store.loadCatalog().find(_.ruleId == id3).get.sqlQuery
       .exists(_.contains("WHERE amount > '99999'")))
-    assert(runner.updateRule(id3, Seq(cAmount, cTier))
+    assert(runner.updateRule(id3, Seq(cAmount, cCount2))
       .isInstanceOf[SegmentPlan.Compound])
     assert(store.loadCatalog().find(_.ruleId == id3).get.sqlQuery
       .contains("COMPOUND_OPERATION:intersection"))
@@ -393,16 +428,38 @@ class SegmentRunnerSpec extends SparkSpec {
     val runner = new SegmentRunner(store, () => { calls.incrementAndGet(); tx() })
     runner.createRule("r1", Seq(cAmount))
     runner.createRule("r2", Seq(cTier))
-    val (_, p3) = runner.createRule("residual",
-      Seq(cAmount, cTier, Condition("transaction_amount", "<", "900")))
+    val (_, p3) = runner.createRule("residual", Seq(cAmount, cCount2))
     assert(p3 match { case SegmentPlan.Compound(_, _, residual) => residual.nonEmpty; case _ => false })
-    val (id4, p4) = runner.createRule("covered", Seq(cAmount, cTier))
-    assert(p4 == SegmentPlan.Compound(Seq(1L, 2L), SetOp.Intersection, Nil))
+    val (id4, p4) = runner.createRule("covered", Seq(cAmount))
+    assert(p4 == SegmentPlan.Compound(Seq(1L), SetOp.Intersection, Nil))
     assert(runner.runAll("2026-08-12T00:00:00Z").size == 4)
     assert(calls.get() == 1, "every rule of a batch must plan against one view")
     calls.set(0)
     assert(runner.run(id4, "2026-08-12T01:00:00Z") == 2L)
     assert(calls.get() == 0, "a batch whose rules never read the view must not build it")
+  }
+
+  test("a batch of only Compound rules reads no transactions and launches one job per rule") {
+    val dir = Files.createTempDirectory("graft_runner_compound_only").toString
+    val store = new SegmentStore(spark, dir)
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val runner = new SegmentRunner(store, () => { calls.incrementAndGet(); tx() })
+    val (id1, _) = runner.createRule("parent", Seq(cAmount), isActive = false)
+    val (id2, p2) = runner.createRule("repeat", Seq(cAmount, cCount2))
+    val (id3, p3) = runner.createRule("repeat-big", Seq(cAmount, cCount2, cSpend))
+    assert(p2 == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cCount2)))
+    assert(p3 == SegmentPlan.Compound(Seq(id2), SetOp.Intersection, Seq(cSpend)))
+    runner.run(id1, "2026-08-12T00:00:00Z")
+    calls.set(0)
+    var counts = Map.empty[Long, Long]
+    val jobs = jobsLaunchedBy { counts = runner.runAll("2026-08-12T01:00:00Z") }
+    assert(counts == Map(id2 -> 1L, id3 -> 1L))
+    assert(calls.get() == 0, "a Compound rule is a filter over its parent's segment")
+    assert(jobs.size == 2, s"one job per rule, got ${jobs.size}")
+    Seq(id2 -> Seq(cAmount, cCount2), id3 -> Seq(cAmount, cCount2, cSpend)).foreach {
+      case (id, conds) => assert(store.read(id).collect().toSeq ==
+        graft.operators.SegmentEngine.materializeBase(tx(), conds).collect().toSeq)
+    }
   }
 
   test("every job a refresh batch launches belongs to a segment write") {
@@ -411,8 +468,8 @@ class SegmentRunnerSpec extends SparkSpec {
     val runner = new SegmentRunner(store, tx)
     runner.createRule("r1", Seq(cAmount))
     runner.createRule("r2", Seq(cTier))
-    runner.createRule("residual", Seq(cAmount, cTier, Condition("transaction_amount", "<", "900")))
-    runner.createRule("covered", Seq(cAmount, cTier))
+    runner.createRule("residual", Seq(cAmount, cCount2))
+    runner.createRule("covered", Seq(cAmount))
     val jobs = jobsLaunchedBy(assert(runner.runAll("2026-08-12T00:00:00Z").size == 4))
     assert(jobs.nonEmpty)
     assert(jobs.forall(_.nonEmpty),
@@ -472,9 +529,9 @@ class SegmentRunnerSpec extends SparkSpec {
     val runner = new SegmentRunner(store, tx)
     val jobs = jobsLaunchedBy {
       val (id1, _) = runner.createRule("r1", Seq(cAmount))
-      val (id2, plan) = runner.createRule("r2", Seq(cAmount, cTier))
-      assert(plan == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cTier)))
-      runner.updateRule(id2, Seq(cAmount, cTier, Condition("transaction_amount", "<", "900")))
+      val (id2, plan) = runner.createRule("r2", Seq(cAmount, cCount2))
+      assert(plan == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cCount2)))
+      runner.updateRule(id2, Seq(cAmount, cCount2, cSpend))
       runner.setActive(id1, active = false)
       assert(runner.listRules().map(_.ruleId) == Seq(id1, id2))
       assert(runner.getRule(id1).exists(!_.isActive))
@@ -539,11 +596,14 @@ class SegmentRunnerSpec extends SparkSpec {
     val runner = new SegmentRunner(store, tx)
     runner.createRule("r1", Seq(cAmount))
     val (id2, _) = runner.createRule("r2", Seq(cTier))
-    // r2's new conditions now cover r1's ⇒ becomes compound on [1] + residual
-    val plan = runner.updateRule(id2, Seq(cAmount, cTier))
-    assert(plan == SegmentPlan.Compound(Seq(1L), SetOp.Intersection, Seq(cTier)))
+    // r2's new conditions are r1's WHERE set plus HAVING ⇒ compound on [1] + residual
+    val plan = runner.updateRule(id2, Seq(cAmount, cCount2))
+    assert(plan == SegmentPlan.Compound(Seq(1L), SetOp.Intersection, Seq(cCount2)))
     val entry = store.loadCatalog().find(_.ruleId == id2).get
-    assert(entry.dependsOn == Seq(1L) && entry.conditions == Seq(cTier))
+    assert(entry.dependsOn == Seq(1L) && entry.conditions == Seq(cAmount, cCount2))
+    // r2's stored set would serve its own update best: excluded, r1 serves
+    assert(runner.updateRule(id2, Seq(cAmount, cCount2, cSpend)) ==
+      SegmentPlan.Compound(Seq(1L), SetOp.Intersection, Seq(cCount2, cSpend)))
   }
 
   test("updateRule refuses a rule with dependents, so no update can bind a cycle") {
@@ -551,12 +611,12 @@ class SegmentRunnerSpec extends SparkSpec {
     val store = new SegmentStore(spark, dir)
     val runner = new SegmentRunner(store, tx)
     val (id1, _) = runner.createRule("r1", Seq(cAmount))
-    val (id2, p2) = runner.createRule("r2", Seq(cAmount, cTier))
-    assert(p2 == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cTier)))
+    val (id2, p2) = runner.createRule("r2", Seq(cAmount, cCount2))
+    assert(p2 == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cCount2)))
     val before = store.loadCatalog()
-    // re-planned against r2's residual {tier=1}, r1 would bind onto r2
+    // re-planned as a HAVING superset of r2, r1 would bind onto r2
     val e = intercept[IllegalArgumentException](
-      runner.updateRule(id1, Seq(cTier, Condition("transaction_amount", "<", "900"))))
+      runner.updateRule(id1, Seq(cAmount, cCount2, cSpend)))
     assert(e.getMessage.contains(s"rule $id1 has dependents $id2"))
     assert(store.loadCatalog() == before, "a refused update must leave the catalog as it was")
     assert(runner.runAll("2026-08-12T00:00:00Z").keySet == Set(id1, id2))

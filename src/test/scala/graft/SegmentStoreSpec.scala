@@ -133,6 +133,40 @@ class SegmentStoreSpec extends SparkSpec {
     assert(listing() == before && before == Seq("_catalog"), "nothing may be written")
   }
 
+  test("a catalog from before submitted conditions is refused if it holds a Compound rule") {
+    val dir = Files.createTempDirectory("graft_residualcat").toString
+    // format 1: rule 2 stores the greedy cover's residual {tier = 1}, not
+    // the conditions it was submitted with
+    val doc = """{"rules":[{"ruleId":1,"segmentName":"r1","tableName":"segment_output_1",
+        |"conditions":[{"field":"transaction_amount","operator":">","value":"500"}],"dependsOn":[]},
+        |{"ruleId":2,"segmentName":"r2","tableName":"segment_output_2",
+        |"conditions":[{"field":"city_tier","operator":"=","value":"1"}],"dependsOn":[1],
+        |"operation":"intersection"}],"highWater":2}""".stripMargin
+    val cat = java.nio.file.Paths.get(dir, "_catalog.json")
+    Files.writeString(cat, doc)
+    val store = new SegmentStore(spark, dir)
+    for (call <- Seq[() => Any](() => store.loadCatalog(),
+        () => store.modifyCatalog(c => (c.rules :+ entry(c.nextRuleId, "new"), ())))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("catalog format 2") && e.getMessage.contains("Compound rule 2"))
+    }
+    assert(Files.readString(cat) == doc, "a refused catalog must not be rewritten")
+  }
+
+  test("a catalog from before submitted conditions still reads when it holds only Base rules") {
+    val dir = Files.createTempDirectory("graft_basecat").toString
+    val cat = java.nio.file.Paths.get(dir, "_catalog.json")
+    Files.writeString(cat, """{"rules":[{"ruleId":1,"segmentName":"r1","tableName":"segment_output_1",
+        |"conditions":[{"field":"transaction_amount","operator":">","value":"500"}],"dependsOn":[]}],
+        |"highWater":3}""".stripMargin)
+    val store = new SegmentStore(spark, dir)
+    assert(store.loadCatalog() == Seq(entry(1L, "r1", -1L)))
+    save(store, store.loadCatalog() :+ entry(4L, "r4"))
+    assert(Files.readString(cat).contains(""""highWater":4,"format":2"""),
+      "the next save marks the document")
+    assert(store.loadCatalog().map(_.ruleId) == Seq(1L, 4L))
+  }
+
   test("a warehouse holding parquet run history is refused by name") {
     val dir = Files.createTempDirectory("graft_parquethist").toString
     Seq(RunHistoryEntry(1L, "2026-01-01T00:00:00Z", 3L)).toDF().write.parquet(s"$dir/_history")
