@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Materializes a base rule into the canonical segment shape:
   * filter → groupBy(user_id) → (count, exact sum, distinct type set)
-  * → having → null guard.
+  * ([[aggregate]]) → having and null guard ([[keeps]]).
   *
   * The reference pushes this whole pipeline as generated SQL into SQLite
   * (reference: backend/app/utils/rule_parser.py:96-136,
@@ -52,7 +52,13 @@ object SegmentEngine {
     materializeCompiled(tx, compiled)
   }
 
-  def materializeCompiled(tx: DataFrame, compiled: ConditionCompiler.Compiled): DataFrame = {
+  def materializeCompiled(tx: DataFrame, compiled: ConditionCompiler.Compiled): DataFrame =
+    aggregate(tx, compiled.where).filter(keeps(compiled.having))
+
+  /** The per-user aggregate of the transactions `where` passes, before any
+    * HAVING: every rule of one WHERE set selects its users from it.
+    */
+  def aggregate(tx: DataFrame, where: Option[Column]): DataFrame = {
     val names = typeNames(tx)
     val tt = col("transaction_type")
     val bit = if (names.isEmpty) lit(null).cast(LongType)
@@ -60,8 +66,7 @@ object SegmentEngine {
         w.when(tt === names(i), 1L << i))
     val mask = col("__type_mask")
     val types = names.indices.map(i => when((mask bitwiseAND (1L << i)) =!= 0L, names(i)))
-    val filtered = compiled.where.map(tx.filter).getOrElse(tx)
-    val agged = filtered
+    where.map(tx.filter).getOrElse(tx)
       .groupBy(col("user_id"))
       .agg(
         count(col("user_id")).as("total_transactions"),
@@ -69,9 +74,14 @@ object SegmentEngine {
         bit_or(bit).as("__type_mask"))
       .select(col("user_id"), col("total_transactions"), col("total_spent"),
         concat_ws(",", types: _*).as("transaction_types"))
-    val havinged = compiled.having.map(agged.filter).getOrElse(agged)
-    // Null guard matches reference: spark_processor.py:112 (P5).
-    havinged.filter(col("user_id").isNotNull)
+  }
+
+  /** The aggregate rows a rule of HAVING set `having` keeps: those it
+    * passes, minus the null user (reference spark_processor.py:112, P5).
+    */
+  def keeps(having: Option[Column]): Column = {
+    val known = col("user_id").isNotNull
+    having.fold(known)(_ && known)
   }
 
   /** Exact sum of `amount` as `DECIMAL(19,6)`: a long sum of micro-units,

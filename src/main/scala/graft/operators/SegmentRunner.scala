@@ -27,6 +27,8 @@ import org.apache.spark.sql.DataFrame
   * `refreshedAt` is caller-supplied rather than wall-clock so runs are
   * reproducible. A refresh batch calls `tx` at most once, so all of its
   * rules see one listing of the view, a consistent snapshot no rule re-lists.
+  * Under exact reuse it writes each WHERE set once: a Compound rule whose
+  * parent is in the batch publishes from its parent's write.
   */
 final class SegmentRunner(
     store: SegmentStore,
@@ -194,22 +196,51 @@ final class SegmentRunner(
     * `catalog`), then [[commit]] the batch — also when a rule throws, so the
     * rules refreshed before it are kept. The rules share one view, built on
     * first use (its plan, not its data: nothing is cached).
+    *
+    * Under exact reuse a rule joins its parent's group when both are in the
+    * batch, and a group of two or more is published by one Spark write
+    * ([[SegmentStore.writeGroup]]): each member is the group's source
+    * filtered by the member's own HAVING set. The source is the per-user
+    * aggregate of a Base root's WHERE set, or the stored segment of a
+    * Compound root's parent. A group of one is written on its own.
     */
   private def refresh(catalog: Seq[SegmentCatalogEntry], ids: Seq[Long],
       at: String, rearm: Boolean): Map[Long, Long] = {
     val byId = catalog.map(e => e.ruleId -> e).toMap
+    val plans = ids.map(id => id -> Planner.planStored(asRule(byId(id)))).toMap
+    val rootOf = collection.mutable.Map.empty[Long, Long]
+    val groups = collection.mutable.LinkedHashMap.empty[Long, Vector[Long]]
+    ids.foreach { id =>
+      val root = if (greedy) id else exactParent(plans(id), byId).flatMap(rootOf.get).getOrElse(id)
+      rootOf(id) = root
+      groups(root) = groups.getOrElse(root, Vector.empty) :+ id
+    }
     lazy val view = tx()
     var done = Vector.empty[(Long, Long)]
-    try ids.foreach { id =>
-      val plan = Planner.planStored(asRule(byId(id)))
-      if (!greedy) requireExact(id, plan, byId)
-      // write() handles the empty case (canonical-schema empty parquet, Q9);
-      // probing emptiness first would execute the whole DAG twice.
-      done :+= id -> store.write(id,
-        Planner.evaluate(plan, view, store.read, keyed, residualMode))
+    try groups.foreach { case (root, members) =>
+      if (!greedy) members.foreach(id => requireExact(id, plans(id), byId))
+      done ++= (members match {
+        // write() handles the empty case (canonical-schema empty parquet, Q9);
+        // probing emptiness first would execute the whole DAG twice.
+        case Seq(id) =>
+          Seq(id -> store.write(id, Planner.evaluate(plans(id), view, store.read, keyed, residualMode)))
+        case _ =>
+          val source = exactParent(plans(root), byId).fold(SegmentEngine.aggregate(view,
+            ConditionCompiler.compile(byId(root).conditions).where))(store.read)
+          store.writeGroup(source, members.map(id =>
+            id -> SegmentEngine.keeps(ConditionCompiler.compile(byId(id).conditions).having)))
+      })
     } finally commit(done, at, rearm)
     done.toMap
   }
+
+  /** The parent a Compound plan is exact reuse of ([[Planner.serves]]). */
+  private def exactParent(plan: SegmentPlan, byId: Map[Long, SegmentCatalogEntry]): Option[Long] =
+    plan match {
+      case SegmentPlan.Compound(Seq(p), SetOp.Intersection, conds)
+          if byId.get(p).exists(e => Planner.serves(e.conditions, conds)) => Some(p)
+      case _ => None
+    }
 
   /** Refuse a Compound plan that is not exact reuse of its one parent: a
     * binding a `DropResidual` runner stored, which exact evaluation would
@@ -218,9 +249,7 @@ final class SegmentRunner(
     */
   private def requireExact(id: Long, plan: SegmentPlan,
       byId: Map[Long, SegmentCatalogEntry]): Unit = plan match {
-    case SegmentPlan.Compound(Seq(p), SetOp.Intersection, conds)
-        if byId.get(p).exists(e => Planner.serves(e.conditions, conds)) =>
-    case SegmentPlan.Compound(parents, _, _) =>
+    case SegmentPlan.Compound(parents, _, _) if exactParent(plan, byId).isEmpty =>
       throw new IllegalStateException(s"rule $id is bound to rules ${parents.mkString(",")} " +
         "by the reference's greedy cover (DropResidual), not by exact reuse; refresh it " +
         "under DropResidual or update its conditions")

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.model._
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet-backed store for materialized segments + catalog metadata,
@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   * overwrites a segment in place: the new content is written beside it and
   * swapped in ([[SegmentStore.swapIn]]), so a failed refresh leaves the
   * previous segment readable, like the reference's transactional table
-  * replace; a crashed swap rolls back ([[SegmentStore.resolve]]). An
+  * replace; a crashed swap rolls back ([[SegmentStore.resolve]]). Segments
+  * that filter one source publish from one Spark write ([[writeGroup]]). An
   * empty result writes an empty file with the canonical 4-column schema so
   * downstream readers never fail (S6, SURVEY Q9), and reads trust that schema.
+  * A segment directory holds only `part-*` files (and their checksums).
   */
 final class SegmentStore(spark: SparkSession, warehouse: String) {
 
@@ -51,13 +53,62 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     val (fsys, p) = fs(path(ruleId))
     SegmentStore.swapIn(fsys, p) { dir =>
       val obs = org.apache.spark.sql.Observation(s"seg_write_$ruleId")
-      // names select the canonical columns, casts pin their types
-      df.select(Schemas.segmentOutput.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(dir.toString)
+      writeParquet(canonical(df).observe(obs, count(lit(1)).as("n")).write, dir)
       obs.get("n").asInstanceOf[Long]
     }
   }
+
+  /** Write several segments from one pass over `source`, returning each
+    * one's row count in `keep`'s order: segment `id` holds the rows of
+    * `source` its predicate passes. One Spark write lands every segment in
+    * its own partition of the scratch directory `segment_output_<root>__group`
+    * (`root` is the first id of `keep`); each partition is then swapped in
+    * ([[SegmentStore.swapIn]]) as that segment, and a segment with no rows
+    * gets the canonical empty file (Q9). The partitioned write sorts its rows by segment, so a lone segment
+    * should take [[write]]. Writes of one group directory serialize inside a
+    * JVM; the directory is never read, and the next write of it, or a
+    * [[delete]] of `root`, removes what a failed or crashed write left.
+    */
+  def writeGroup(source: DataFrame, keep: Seq[(Long, Column)]): Seq[(Long, Long)] = {
+    val root = keep.head._1
+    val (fsys, group) = fs(path(root) + SegmentStore.GroupSuffix)
+    SegmentStore.withJvmLock(fsys, group) {
+      fsys.delete(group, true)
+      val seg = col(SegmentStore.GroupColumn)
+      val obs = org.apache.spark.sql.Observation(s"seg_group_$root")
+      val counts = keep.map { case (id, _) => count(when(seg === id, 1)).as(id.toString) }
+      val rows = canonical(source)
+        .withColumn(SegmentStore.GroupColumn,
+          explode(array(keep.map { case (id, pred) => when(pred, lit(id)) }: _*)))
+        .filter(seg.isNotNull)
+        .observe(obs, counts.head, counts.tail: _*)
+      writeParquet(rows.write.partitionBy(SegmentStore.GroupColumn), group)
+      val written = keep.map { case (id, _) =>
+        val n = obs.get(id.toString).asInstanceOf[Long]
+        val (f, p) = fs(path(id))
+        SegmentStore.swapIn(f, p) { staging =>
+          val part = new Path(group, s"${SegmentStore.GroupColumn}=$id")
+          if (n > 0) require(fsys.rename(part, staging), s"rename $part -> $staging failed")
+          else writeParquet(spark.createDataFrame(
+            java.util.Collections.emptyList[Row](), Schemas.segmentOutput).write, staging)
+        }
+        id -> n
+      }
+      fsys.delete(group, true)
+      written
+    }
+  }
+
+  /** `df`'s canonical columns: names select them, casts pin their types. */
+  private def canonical(df: DataFrame): DataFrame =
+    df.select(Schemas.segmentOutput.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+
+  /** Overwrite `dir` with parquet, leaving no `_SUCCESS` marker: nothing
+    * reads one, as the swap is what publishes.
+    */
+  private def writeParquet(w: DataFrameWriter[Row], dir: Path): Unit =
+    w.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .mode(SaveMode.Overwrite).parquet(dir.toString)
 
   /** The published segment, read in the canonical schema every write pins
     * (no inference job; a file of other column types raises when read). One
@@ -74,12 +125,15 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   }
 
   /** Remove a segment's materialized parquet (rule DELETE, see
-    * SegmentRunner.deleteRule), with the swap siblings a failed or crashed
-    * swap can leave. False when nothing was materialized.
+    * SegmentRunner.deleteRule), with the swap siblings and the group
+    * directory ([[writeGroup]]) a failed or crashed write can leave. False
+    * when nothing was materialized.
     */
   def delete(ruleId: Long): Boolean = {
     val (f, p) = fs(path(ruleId))
     val (staging, old) = SegmentStore.swapSiblings(p)
+    val group = p.suffix(SegmentStore.GroupSuffix)
+    SegmentStore.withJvmLock(f, group)(f.delete(group, true))
     SegmentStore.withJvmLock(f, p)(Seq(staging, old, p).map(f.delete(_, true)).last)
   }
 
@@ -297,7 +351,8 @@ object SegmentStore {
   private[graft] def jvmLockCount: Int = jvmLocks.size
 
   /** Crash-safe replacement of a file or directory, the one way one is
-    * published. Its six callers are segment writes, the catalog
+    * published. Its six callers are segment writes ([[SegmentStore.write]],
+    * and one swap per segment of a [[SegmentStore.writeGroup]]), the catalog
     * ([[SegmentStore.modifyCatalog]]), run-history files
     * ([[SegmentStore.appendRunHistory]]), `RollupServing.materialize`,
     * `Tables.compact` and curation's snapshot pointers. `writeStaging`
@@ -345,6 +400,12 @@ object SegmentStore {
       val in = fsys.open(f)
       try in.readAllBytes() finally in.close()
     }
+
+  /** The scratch sibling a [[SegmentStore.writeGroup]] writes under, and
+    * the column its partitions are named by.
+    */
+  private val GroupSuffix = "__group"
+  private val GroupColumn = "rule_id"
 
   /** The `__staging` and `__old` siblings [[swapIn]] moves a target through. */
   private def swapSiblings(target: Path): (Path, Path) =

@@ -169,8 +169,9 @@ object SegmentKernelProps extends Properties("SegmentKernel") {
     rows <- Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, genTx(names)))
   } yield (names, rows)
 
+  // no shrinking: each shrink step reruns the whole check's Spark jobs
   property("kernel equals the decimal(38,6) sum and collect_set reference") =
-    forAll(genFrame, Gen.oneOf(None, Some("0"), Some("55.5555555"))) { case ((names, rows), over) =>
+    Prop.forAllNoShrink(genFrame, Gen.oneOf(None, Some("0"), Some("55.5555555"))) { case ((names, rows), over) =>
       val s = spark
       import s.implicits._
       val local = rows.toDF("user_id", "amount", "transaction_type")
@@ -200,14 +201,16 @@ object SegmentKernelProps extends Properties("SegmentKernel") {
   * and `runAll` equals the base segment of the conditions the rule was
   * submitted with. Each rule is fresh or an earlier rule plus one WHERE or
   * HAVING condition, so rules bind Compound several levels deep and WHERE
-  * supersets, which must not reuse, occur as often as HAVING supersets.
+  * supersets, which must not reuse, occur as often as HAVING supersets. A
+  * second `runAll` with a random subset of the rules inactive refreshes
+  * Compound chains from their inactive parents' stored segments.
   */
 object ExactReuseProps extends Properties("ExactReuse") {
   import graft.operators.{SegmentEngine, SegmentRunner}
   import org.apache.spark.sql.{DataFrame, Row}
   import org.apache.spark.sql.functions._
 
-  // each check runs about twenty small Spark jobs
+  // each check runs about forty small Spark jobs
   override def overrideParameters(p: org.scalacheck.Test.Parameters) = p.withMinSuccessfulTests(8)
 
   private lazy val spark = {
@@ -247,7 +250,8 @@ object ExactReuseProps extends Properties("ExactReuse") {
 
   // no shrinking: each shrink step reruns the whole check's Spark jobs
   property("every stored segment equals its submitted conditions' base segment") =
-    Prop.forAllNoShrink(genTx, genRuleSet) { (rows, rules) =>
+    Prop.forAllNoShrink(genTx, genRuleSet, Gen.listOfN(5, Gen.oneOf(true, false))) {
+        (rows, rules, active) =>
       val s = spark
       import s.implicits._
       val tx = rows.toDF("user_id", "amount", "ts_s", "category", "city_tier", "transaction_type")
@@ -258,11 +262,18 @@ object ExactReuseProps extends Properties("ExactReuse") {
         val store = new SegmentStore(spark, dir.toString)
         val runner = new SegmentRunner(store, () => tx)
         val bound = rules.zipWithIndex.map { case (cs, i) => runner.createRule(s"r$i", cs) }
-        runner.runAll("2026-08-12T00:00:00Z")
-        Prop.all(bound.zip(rules).map { case ((id, plan), cs) =>
+        def stored(pass: String): Prop = Prop.all(bound.zip(rules).map { case ((id, plan), cs) =>
           Prop(rowsOf(store.read(id)) == rowsOf(SegmentEngine.materializeBase(tx, cs))) :|
-            s"rule $id ${cs.mkString(", ")} bound $plan"
+            s"$pass: rule $id ${cs.mkString(", ")} bound $plan"
         }: _*)
+        runner.runAll("2026-08-12T00:00:00Z")
+        val first = stored("first runAll")
+        bound.zip(active).foreach { case ((id, _), on) => runner.setActive(id, on) }
+        val refreshed = runner.runAll("2026-08-12T01:00:00Z").keySet
+        val want = bound.zip(active).collect { case ((id, _), true) => id }.toSet
+        // `&&` takes its right side by name: read the store before it is deleted
+        val second = stored("second runAll")
+        first && second && Prop(refreshed == want) :| s"second runAll refreshed $refreshed, active $want"
       } finally {
         val walk = java.nio.file.Files.walk(dir)
         try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
@@ -368,8 +379,9 @@ object PropsTierProps extends Properties("PropsTier") {
   private def tiers(dir: String): DataFrame = Tables.transactionsWithId(spark, dir)
     .select(col("transaction_id").as("event_id"), col("city_tier"))
 
+  // no shrinking: each shrink step reruns the whole check's Spark jobs
   property("city_tier equals get_json_object(props, '$.k').cast(int) % 4 + 1, raises included") =
-    forAll(Gen.choose(1, 16).flatMap(n => Gen.listOfN(n, Gen.option(genProps)))) { props =>
+    Prop.forAllNoShrink(Gen.choose(1, 16).flatMap(n => Gen.listOfN(n, Gen.option(genProps)))) { props =>
       withEvents(props) { dir =>
         val s = spark
         import s.implicits._

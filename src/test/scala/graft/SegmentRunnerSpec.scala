@@ -4,7 +4,10 @@ import graft.model._
 import graft.operators.SegmentRunner
 import graft.sources.{RunHistoryEntry, SegmentStore}
 import java.nio.file.Files
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -439,7 +442,7 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(calls.get() == 0, "a batch whose rules never read the view must not build it")
   }
 
-  test("a batch of only Compound rules reads no transactions and launches one job per rule") {
+  test("a Compound chain refreshes from its inactive parent's segment in one job") {
     val dir = Files.createTempDirectory("graft_runner_compound_only").toString
     val store = new SegmentStore(spark, dir)
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -455,11 +458,83 @@ class SegmentRunnerSpec extends SparkSpec {
     val jobs = jobsLaunchedBy { counts = runner.runAll("2026-08-12T01:00:00Z") }
     assert(counts == Map(id2 -> 1L, id3 -> 1L))
     assert(calls.get() == 0, "a Compound rule is a filter over its parent's segment")
-    assert(jobs.size == 2, s"one job per rule, got ${jobs.size}")
+    assert(jobs.size == 1, s"one write publishes the chain, got ${jobs.size} jobs")
     Seq(id2 -> Seq(cAmount, cCount2), id3 -> Seq(cAmount, cCount2, cSpend)).foreach {
       case (id, conds) => assert(store.read(id).collect().toSeq ==
         graft.operators.SegmentEngine.materializeBase(tx(), conds).collect().toSeq)
     }
+  }
+
+  test("a Base rule and two Compound rules under it publish from one SQL execution") {
+    val dir = Files.createTempDirectory("graft_runner_group").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val (id1, _) = runner.createRule("parent", Seq(cAmount))
+    val (id2, p2) = runner.createRule("repeat", Seq(cAmount, cCount2))
+    val (id3, p3) = runner.createRule("repeat-big", Seq(cAmount, cCount2, cSpend))
+    assert(p2 == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cCount2)))
+    assert(p3 == SegmentPlan.Compound(Seq(id2), SetOp.Intersection, Seq(cSpend)))
+    // the plans of the batch's SQL executions, by execution id
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, SparkPlanInfo]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    var counts = Map.empty[Long, Long]
+    spark.sparkContext.addSparkListener(listener)
+    val jobs = try jobsLaunchedBy { counts = runner.runAll("2026-08-12T00:00:00Z") }
+      finally spark.sparkContext.removeSparkListener(listener)
+    val executions = jobs.flatten.distinct
+    assert(executions.size == 1, s"one write publishes the three rules, got ${executions.size}")
+    def scans(p: SparkPlanInfo): Seq[String] =
+      (if (p.nodeName.startsWith("Scan")) Seq(p.simpleString) else Nil) ++ p.children.flatMap(scans)
+    val read = executions.flatMap(e => Option(plans.get(e.toLong)).toSeq.flatMap(scans))
+    assert(read.isEmpty, s"the batch must read no stored segment, read ${read.mkString("; ")}")
+    assert(counts == Map(id1 -> 2L, id2 -> 1L, id3 -> 1L))
+    Seq(id1 -> Seq(cAmount), id2 -> Seq(cAmount, cCount2), id3 -> Seq(cAmount, cCount2, cSpend))
+      .foreach { case (id, conds) => assert(store.read(id).orderBy("user_id").collect().toSeq ==
+        graft.operators.SegmentEngine.materializeBase(tx(), conds).orderBy("user_id").collect().toSeq)
+      }
+  }
+
+  test("a grouped rule whose HAVING keeps no user stores the empty segment") {
+    val dir = Files.createTempDirectory("graft_runner_group_empty").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val (id1, _) = runner.createRule("parent", Seq(cAmount))
+    val (id2, p2) = runner.createRule("nobody", Seq(cAmount, Condition("total_spend", ">", "99999")))
+    assert(p2.isInstanceOf[SegmentPlan.Compound])
+    val at = "2026-08-12T00:00:00Z"
+    assert(runner.runAll(at) == Map(id1 -> 2L, id2 -> 0L))
+    assert(store.read(id2).schema == Schemas.segmentOutput && store.read(id2).count() == 0L)
+    assert(store.loadCatalog().find(_.ruleId == id2).get.rowCount == 0L)
+    assert(store.runHistory().as[RunHistoryEntry].collect().toSeq.sortBy(_.rule_id) ==
+      Seq(RunHistoryEntry(id1, at, 2L), RunHistoryEntry(id2, at, 0L)))
+  }
+
+  test("concurrent refreshes of one rule group never share its group directory") {
+    val dir = Files.createTempDirectory("graft_runner_group_race").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val rules = Seq(Seq(cAmount), Seq(cAmount, cCount2), Seq(cAmount, cCount2, cSpend))
+    val ids = rules.map(runner.createRule("raced", _)._1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to 2).map(t => new Thread(() =>
+      (1 to 4).foreach { i =>
+        try runner.runAll(s"2026-08-12T0$i:0$t:00Z")
+        catch { case e: Throwable => errors.add(e) }
+      }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, s"${errors.size} of 8 refreshes threw:\n" +
+      errors.asScala.map(_.toString).mkString("\n"))
+    ids.zip(rules).foreach { case (id, conds) =>
+      assert(store.read(id).orderBy("user_id").collect().toSeq ==
+        graft.operators.SegmentEngine.materializeBase(tx(), conds).orderBy("user_id").collect().toSeq)
+    }
+    val left = new java.io.File(dir).list().filter(n => n.contains("__"))
+    assert(left.isEmpty, s"swap or group leftovers: ${left.mkString(", ")}")
   }
 
   test("every job a refresh batch launches belongs to a segment write") {

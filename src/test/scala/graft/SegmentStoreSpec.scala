@@ -23,7 +23,8 @@ class MockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 /** MockFs under its own scheme that crashes the process at the k-th
   * rename or delete of a swap target (a segment, the catalog, the rollup or
-  * a `_history` log file) or of its `__staging`/`__old` sibling
+  * a `_history` log file) or of its `__staging`/`__old` sibling or a
+  * segment's `__group` directory
   * ([[CrashFs.arm]]): that operation and every later one on a swap
   * path throw, as if the process had died. `_catalog.lock` is exempt (a
   * stale lock has its own test); other files are untouched.
@@ -40,7 +41,7 @@ class CrashFs extends MockFs {
 }
 
 object CrashFs {
-  private val SwapPath = """(segment_output_\d+|_catalog\.json|rollup_user_windows|[0-9a-f-]{36}\.json)(__staging|__old)?""".r
+  private val SwapPath = """(segment_output_\d+|_catalog\.json|rollup_user_windows|[0-9a-f-]{36}\.json)(__staging|__old|__group)?""".r
   private val ops = new java.util.concurrent.atomic.AtomicLong(0)
   @volatile private var crashAt = Long.MaxValue
 
@@ -328,6 +329,28 @@ class SegmentStoreSpec extends SparkSpec {
     intercept[org.apache.spark.sql.AnalysisException](store.read(10L))
   }
 
+  test("a published segment directory holds only part files and their checksums") {
+    val dir = Files.createTempDirectory("graft_part_files").toString
+    val store = new SegmentStore(spark, dir)
+    val seg = Seq((1L, 2L, 1300.0, "UPI"), (2L, 1L, 40.0, "UPI"))
+      .toDF("user_id", "total_transactions", "total_spent", "transaction_types")
+    assert(store.write(7L, seg) == 2L)
+    assert(store.writeGroup(seg, Seq(8L -> lit(true), 9L -> ($"user_id" === 2L),
+      10L -> lit(false))) == Seq(8L -> 2L, 9L -> 1L, 10L -> 0L))
+    assert(store.read(9L).collect().toSeq == seg.filter($"user_id" === 2L).collect().toSeq)
+    assert(store.read(10L).schema == Schemas.segmentOutput && store.read(10L).count() == 0L)
+    for (id <- 7L to 10L) {
+      val files = new java.io.File(s"$dir/segment_output_$id").list().toSeq
+      assert(files.exists(_.startsWith("part-")), s"segment $id holds no part file")
+      assert(files.forall(n => n.startsWith("part-") || n.startsWith(".part-") && n.endsWith(".crc")),
+        s"segment $id holds ${files.mkString(", ")}")
+    }
+    assert(new java.io.File(dir).list().forall(!_.contains("__")), "the group directory is scratch")
+    // a group directory a crashed write left goes with its root's segment
+    Files.createDirectories(java.nio.file.Paths.get(dir, "segment_output_8__group", "rule_id=9"))
+    assert(store.delete(8L) && !new java.io.File(s"$dir/segment_output_8__group").exists())
+  }
+
   // ---- crash points -------------------------------------------------------
   //
   // Every rename/delete a publish makes on a swap path is a crash point
@@ -378,37 +401,43 @@ class SegmentStoreSpec extends SparkSpec {
     dst.toString
   }
 
-  /** What a fresh store on the plain scheme reads: catalog ids and names,
-    * rule 1's segment, the served 14-day window, the streaming segment and
-    * the run history.
+  /** What a fresh store on the plain scheme reads, by item: catalog ids and
+    * names, rule 1's segment, the served 14-day window, the streaming
+    * segment and the run history.
     */
-  private def published(dir: String): Seq[Any] = {
+  private def published(dir: String): Seq[(String, Any)] = {
     val store = new SegmentStore(spark, dir)
-    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
-    Seq(store.loadCatalog().map(e => (e.ruleId, e.segmentName)), rows(store.read(1L)),
-      RollupServing.serveSegment(spark, store, 14, Nil).map(rows), rows(store.read(streamId)),
-      store.runHistory().as[RunHistoryEntry].collect().toSeq.sortBy(h => (h.rule_id, h.refreshed_at)))
+    Seq("catalog" -> catalogOf(store), "rule 1's segment" -> rowsOf(store.read(1L)),
+      "served window" -> RollupServing.serveSegment(spark, store, 14, Nil).map(rowsOf),
+      "streaming segment" -> rowsOf(store.read(streamId)), "run history" -> historyOf(store))
   }
 
-  private def replayCrashPoints(call: SegmentStore => Unit): Unit = {
-    val before = published(crashTemplate)
-    val clean = copyOf(crashTemplate)
+  private def rowsOf(df: DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
+  private def catalogOf(store: SegmentStore) = store.loadCatalog().map(e => (e.ruleId, e.segmentName))
+  private def historyOf(store: SegmentStore) =
+    store.runHistory().as[RunHistoryEntry].collect().toSeq.sortBy(h => (h.rule_id, h.refreshed_at))
+
+  /** Replay `call` against copies of `template`, crashing at each of its
+    * swap-path operations in turn; every item `read` names must read as
+    * its previous or its new content.
+    */
+  private def replayCrashPoints(call: SegmentStore => Unit, template: => String = crashTemplate,
+      read: String => Seq[(String, Any)] = published): Unit = {
+    val before = read(template)
+    val clean = copyOf(template)
     CrashFs.arm(Long.MaxValue)
     call(crashStore(clean))
     val ops = CrashFs.count
-    val after = published(clean)
+    val after = read(clean)
     assert(ops > 0 && after != before, "the call must publish something")
     info(s"$ops crash points")
     for (k <- 1L to ops) {
-      val dir = copyOf(crashTemplate)
+      val dir = copyOf(template)
       CrashFs.arm(k)
       try scala.util.Try(call(crashStore(dir))) finally CrashFs.arm(Long.MaxValue)
-      val got = published(dir)
-      val items = Seq("catalog", "rule 1's segment", "served window", "streaming segment", "run history")
-      items.zipWithIndex.foreach {
-        case (item, i) => assert(got(i) == before(i) || got(i) == after(i),
-          s"crash at operation $k of $ops: the $item reads ${got(i)}, " +
-            s"neither previous ${before(i)} nor new ${after(i)}")
+      read(dir).zip(before.zip(after)).foreach {
+        case ((item, got), ((_, was), (_, now))) => assert(got == was || got == now,
+          s"crash at operation $k of $ops: the $item reads $got, neither previous $was nor new $now")
       }
       val store = new SegmentStore(spark, dir)
       val (id, _) = new SegmentRunner(store, tx).createRule("probe", Seq(crashRule))
@@ -422,6 +451,28 @@ class SegmentStoreSpec extends SparkSpec {
 
   test("crash point: run's segment swap and catalog commit") {
     replayCrashPoints(store => new SegmentRunner(store, txNew).run(1L, "2026-08-12T01:00:00Z"))
+  }
+
+  /** A Base rule and a Compound rule under it, both materialized: a
+    * refresh batch publishes the two from one write.
+    */
+  private lazy val groupTemplate: String = {
+    val dir = Files.createTempDirectory("graft_crash_group_tmpl").toString
+    CrashFs.arm(Long.MaxValue)
+    val runner = new SegmentRunner(crashStore(dir), tx)
+    runner.createRule("r1", Seq(crashRule))
+    runner.createRule("r2", Seq(crashRule, Condition("total_spend", ">", "550")))
+    runner.runAll("2026-08-12T00:00:00Z")
+    dir
+  }
+
+  test("crash point: one batch publishing a Base and a Compound rule from one write") {
+    replayCrashPoints(store => new SegmentRunner(store, txNew).runAll("2026-08-12T01:00:00Z"),
+      groupTemplate, { dir =>
+        val store = new SegmentStore(spark, dir)
+        Seq("catalog" -> catalogOf(store), "rule 1's segment" -> rowsOf(store.read(1L)),
+          "rule 2's segment" -> rowsOf(store.read(2L)), "run history" -> historyOf(store))
+      })
   }
 
   test("crash point: RollupServing.materialize") {
