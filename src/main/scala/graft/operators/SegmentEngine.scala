@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Materializes a base rule into the canonical segment shape:
   * filter → groupBy(user_id) → (count, exact sum, distinct type set)
-  * ([[aggregate]]) → having and null guard ([[keeps]]).
+  * ([[aggregate]]) → having → null guard.
   *
   * The reference pushes this whole pipeline as generated SQL into SQLite
   * (reference: backend/app/utils/rule_parser.py:96-136,
@@ -52,8 +52,13 @@ object SegmentEngine {
     materializeCompiled(tx, compiled)
   }
 
-  def materializeCompiled(tx: DataFrame, compiled: ConditionCompiler.Compiled): DataFrame =
-    aggregate(tx, compiled.where).filter(keeps(compiled.having))
+  def materializeCompiled(tx: DataFrame, compiled: ConditionCompiler.Compiled): DataFrame = {
+    val agged = aggregate(tx, compiled.where)
+    // HAVING, then the null guard, as two filters: the optimizer then folds
+    // the type-name decoding into the aggregate (one filter over the
+    // decoding projection keeps it a separate operator)
+    compiled.having.fold(agged)(agged.filter).filter(col("user_id").isNotNull)
+  }
 
   /** The per-user aggregate of the transactions `where` passes, before any
     * HAVING: every rule of one WHERE set selects its users from it.
