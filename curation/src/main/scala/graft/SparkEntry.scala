@@ -5,7 +5,7 @@ import graft.oracles.PipelineOracles._
 import graft.operators._
 import graft.queries.Q
 import graft.queries.SegmentQueries.{dSum, tierSql, twoSourceCte, withScratchDir}
-import graft.sources.Tables
+import graft.sources.{ManagedTables, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -858,9 +858,9 @@ object SparkEntry {
     // the RAW corpus, so equality also re-proves the ingest lost nothing.
     Q("q_events_partitioned",
       (s, d) => withScratchDir("graft_events_part") { dir =>
-        Tables.writePartitionedByDay(Tables.events(s, d), dir.toString,
+        ManagedTables.writePartitionedByDay(Tables.events(s, d), dir.toString,
           filesPerDay = 2)
-        val part = Tables.eventsPartitioned(s, dir.toString)
+        val part = ManagedTables.eventsPartitioned(s, dir.toString)
         // driver-side metadata probe (partition column min — resolved from
         // directory names, no data read), so the query is sf-independent
         val firstDay = part.agg(min(col("event_date"))).collect()(0).getDate(0)

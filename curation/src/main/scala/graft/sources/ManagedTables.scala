@@ -181,4 +181,66 @@ object ManagedTables {
     spark.sql(s"ALTER TABLE $stage RENAME TO $table")
     dropManagedTables(spark, Seq(old))
   }
+
+  /** Ingest-time DATE PARTITIONING of the event stream: one parquet
+    * directory per event day (`event_date=YYYY-MM-DD/`). Time-bounded
+    * queries — daily totals, rollup windows, retention, sessions over a
+    * range — then touch only the matching directories: the date predicate
+    * becomes a `PartitionFilters` entry resolved against directory names
+    * at planning time, and at 100 TB a 30-day rollup reads 30 days, not
+    * the full history. Pair with [[writeBucketed]] when the downstream
+    * key is also fixed; partitioning prunes IO by time, bucketing removes
+    * the key shuffle.
+    */
+  def writePartitionedByDay(events: DataFrame, outPath: String,
+      filesPerDay: Int = 1): Unit =
+    events
+      .withColumn("event_date", to_date(col("ts")))
+      // cluster by day so small days don't fragment into one file per
+      // shuffle partition — but salt WITHIN the day (filesPerDay > 1) when
+      // a single day is too big for one write task: hash-partitioning on
+      // the date alone would funnel a whole day through one task
+      .repartition(col("event_date"), pmod(hash(col("ts")), lit(filesPerDay)))
+      .write.mode("overwrite")
+      // dynamic overwrite: a repeat ingest replaces ONLY the days present
+      // in the incoming batch — the default static mode would truncate the
+      // whole directory and silently drop every previously ingested day
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("event_date").parquet(outPath)
+
+  /** Read back a [[writePartitionedByDay]] layout; date predicates on
+    * `event_date` prune directories before any file is opened.
+    */
+  def eventsPartitioned(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path)
+
+  /** Small-file compaction for a parquet directory: rewrite its contents
+    * into ⌈bytes / targetFileBytes⌉ files. Streaming sinks and frequent
+    * small ingests fragment a directory into thousands of tiny files,
+    * and at scale the scan's file-listing + per-file open cost comes to
+    * dominate the read — periodic compaction is standard table
+    * maintenance. Publishes through [[SegmentStore.swapIn]]: the rewrite
+    * lands in a staging sibling first (the original stays intact and
+    * readable throughout), then swaps in with two renames — a crash
+    * mid-swap leaves the previous data ([[SegmentStore.resolve]]).
+    * Renames are atomic on HDFS and local filesystems; on object stores
+    * (s3a) rename is a copy-based client operation — use a
+    * manifest-committing table format there.
+    * For a [[writePartitionedByDay]] layout, compact each day's directory
+    * individually — rewriting the root would flatten the partitioning.
+    * Returns the number of files written (0 = empty directory, no-op).
+    */
+  def compact(spark: SparkSession, dir: String,
+      targetFileBytes: Long = 512L << 20): Int = {
+    val hPath = new org.apache.hadoop.fs.Path(dir)
+    val fsys = hPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val bytes = fsys.getContentSummary(hPath).getLength
+    if (bytes == 0L) return 0
+    val nFiles = math.max(1L, math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
+    SegmentStore.swapIn(fsys, hPath) { staging =>
+      spark.read.parquet(dir).repartition(nFiles)
+        .write.mode("overwrite").parquet(staging.toString)
+    }
+    nFiles
+  }
 }

@@ -87,14 +87,14 @@ class BucketedSpec extends SparkSpec {
       def files = new java.io.File(dir).listFiles()
         .count(f => f.getName.endsWith(".parquet"))
       assert(files == 10)
-      val n = Tables.compact(spark, dir) // default target far above total size
+      val n = ManagedTables.compact(spark, dir) // default target far above total size
       assert(n == 1 && files == 1)
       val back = spark.read.parquet(dir)
       assert(back.count() == 1000L)
       assert(back.filter($"id" === 7L).collect().head.getAs[String]("s") == "row7")
       // empty directory: no-op, not a schema-inference crash
       val empty = java.nio.file.Files.createTempDirectory("graft_compact_empty")
-      assert(Tables.compact(spark, empty.toString) == 0)
+      assert(ManagedTables.compact(spark, empty.toString) == 0)
       java.nio.file.Files.delete(empty)
     } finally {
       import scala.reflect.io.Directory
@@ -111,7 +111,7 @@ class BucketedSpec extends SparkSpec {
         (3L, "2024-01-03 12:00:00", 3.0))
         .toDF("user_id", "ts_s", "value")
         .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
-      Tables.writePartitionedByDay(ev, dir)
+      ManagedTables.writePartitionedByDay(ev, dir)
 
       // layout: one directory per day
       val dirs = new java.io.File(dir).listFiles().map(_.getName)
@@ -119,7 +119,7 @@ class BucketedSpec extends SparkSpec {
       assert(dirs.toSeq == Seq("event_date=2024-01-01", "event_date=2024-01-02",
         "event_date=2024-01-03"))
 
-      val q = Tables.eventsPartitioned(spark, dir)
+      val q = ManagedTables.eventsPartitioned(spark, dir)
         .filter($"event_date" === java.sql.Date.valueOf("2024-01-02"))
       assert(q.collect().map(_.getAs[Long]("user_id")).toSeq == Seq(2L))
       // the date predicate must resolve at planning time against directory
@@ -136,13 +136,13 @@ class BucketedSpec extends SparkSpec {
       val batch2 = Seq((4L, "2024-01-04 09:00:00", 4.0))
         .toDF("user_id", "ts_s", "value")
         .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
-      Tables.writePartitionedByDay(batch2, dir)
+      ManagedTables.writePartitionedByDay(batch2, dir)
       val after = new java.io.File(dir).listFiles().map(_.getName)
         .filter(_.startsWith("event_date=")).sorted
       assert(after.toSeq == Seq("event_date=2024-01-01", "event_date=2024-01-02",
         "event_date=2024-01-03", "event_date=2024-01-04"),
         s"repeat ingest must only touch its own days, saw ${after.toSeq}")
-      assert(Tables.eventsPartitioned(spark, dir).count() == 4L)
+      assert(ManagedTables.eventsPartitioned(spark, dir).count() == 4L)
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(dir)).deleteRecursively()

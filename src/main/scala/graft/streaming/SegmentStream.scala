@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State is bounded by the user key space (the product semantics — a
   * segment IS per-user running state), not by time; an eviction policy
   * (watermark on last activity) layers on top if the key space is
-  * unbounded, same note as [[EventsStream.runningUserTotals]].
+  * unbounded.
   */
 object SegmentStream {
 
