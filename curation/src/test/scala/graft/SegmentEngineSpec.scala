@@ -70,12 +70,13 @@ class SegmentEngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("malformed conditions silently skipped; fully-vacuous rule = all users (Q10)") {
-    val compiled = ConditionCompiler.compile(Seq(
+    val malformed = Seq(
       Condition("bogus", ">", "1"),
       Condition("transaction_amount", "LIKE", "x"),
-      Condition("transaction_amount", ">", "")))
+      Condition("transaction_amount", ">", ""))
+    val compiled = ConditionCompiler.compile(malformed)
     assert(compiled.isVacuous && compiled.skipped.size == 3)
-    val out = SegmentEngine.materializeCompiled(fixture, compiled)
+    val out = SegmentEngine.materializeBase(fixture, malformed)
     assert(out.count() == 2) // both users
   }
 

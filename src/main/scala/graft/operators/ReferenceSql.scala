@@ -11,7 +11,7 @@ import graft.model.{CondValue, Condition}
   * as an execution path (SURVEY §7.1) — but a catalog listing should
   * round-trip the same display text a reference user sees. Compound rules
   * store the `COMPOUND_OPERATION:<op>` sentinel instead
-  * ([[SegmentRunner.compoundSentinel]], rules.py:211).
+  * (written by [[SegmentRunner.createRule]] and `updateRule`, rules.py:211).
   *
   * Faithfulness notes (all pinned in SegmentRunnerSpec):
   *  - the reference collapses ALL whitespace of its template to single

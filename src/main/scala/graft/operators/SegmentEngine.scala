@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Materializes a base rule into the canonical segment shape:
   * filter → groupBy(user_id) → (count, exact sum, distinct type set)
-  * ([[aggregate]]) → having → null guard.
+  * ([[aggregate]]) → having → null guard ([[keeps]]).
   *
   * The reference pushes this whole pipeline as generated SQL into SQLite
   * (reference: backend/app/utils/rule_parser.py:96-136,
@@ -49,15 +49,7 @@ object SegmentEngine {
       conditions: Seq[Condition],
       mode: ConditionCompiler.Mode = ConditionCompiler.DefaultMode): DataFrame = {
     val compiled = ConditionCompiler.compile(conditions, mode)
-    materializeCompiled(tx, compiled)
-  }
-
-  def materializeCompiled(tx: DataFrame, compiled: ConditionCompiler.Compiled): DataFrame = {
-    val agged = aggregate(tx, compiled.where)
-    // HAVING, then the null guard, as two filters: the optimizer then folds
-    // the type-name decoding into the aggregate (one filter over the
-    // decoding projection keeps it a separate operator)
-    compiled.having.fold(agged)(agged.filter).filter(col("user_id").isNotNull)
+    keeps(compiled.having).foldLeft(aggregate(tx, compiled.where))(_.filter(_))
   }
 
   /** The per-user aggregate of the transactions `where` passes, before any
@@ -81,13 +73,15 @@ object SegmentEngine {
         concat_ws(",", types: _*).as("transaction_types"))
   }
 
-  /** The aggregate rows a rule of HAVING set `having` keeps: those it
-    * passes, minus the null user (reference spark_processor.py:112, P5).
+  /** The filters that pick the rows a rule of HAVING set `having` keeps
+    * from its WHERE set's [[aggregate]], or from a stored segment of that
+    * set: those its HAVING set passes, minus the null user (reference
+    * spark_processor.py:112, P5). A lone rule applies them one after
+    * another, HAVING first: the optimizer then folds the type-name decoding
+    * into the aggregate (one filter over the decoding projection keeps it a
+    * separate operator). A group write tests their conjunction.
     */
-  def keeps(having: Option[Column]): Column = {
-    val known = col("user_id").isNotNull
-    having.fold(known)(_ && known)
-  }
+  def keeps(having: Option[Column]): Seq[Column] = having.toSeq :+ col("user_id").isNotNull
 
   /** Exact sum of `amount` as `DECIMAL(19,6)`: a long sum of micro-units,
     * cast and summed in ANSI mode whatever the session sets.

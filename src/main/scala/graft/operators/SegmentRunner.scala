@@ -18,11 +18,11 @@ import org.apache.spark.sql.DataFrame
   *
   * Rules reuse stored segments exactly ([[Planner.planNew]]): a Compound
   * rule is a HAVING filter over one parent's parquet and reads no `tx`.
-  * `residualMode = DropResidual` is reference parity instead: it plans the
-  * greedy cover ([[Planner.planGreedy]]) and evaluates it by set operations
-  * over its parents, keyed or row-faithful as `keyed` says. A default
-  * runner refuses to refresh a rule such a runner bound that is not exact
-  * reuse of its parent.
+  * `residualMode = DropResidual(keyed)` is reference parity instead: it
+  * plans the greedy cover ([[Planner.planGreedy]]) and evaluates it by set
+  * operations over its parents, keyed or row-faithful as `keyed` says. A
+  * default runner refuses to refresh a rule such a runner bound that is not
+  * exact reuse of its parent.
   *
   * `refreshedAt` is caller-supplied rather than wall-clock so runs are
   * reproducible. A refresh batch calls `tx` at most once, so all of its
@@ -33,7 +33,6 @@ import org.apache.spark.sql.DataFrame
 final class SegmentRunner(
     store: SegmentStore,
     tx: () => DataFrame,
-    keyed: Boolean = true,
     residualMode: Planner.ResidualMode = Planner.ApplyResidual) {
 
   private def asRule(e: SegmentCatalogEntry): Rule =
@@ -42,7 +41,7 @@ final class SegmentRunner(
       dependencies = e.dependsOn,
       operation = e.operation.flatMap(SetOp.parse))
 
-  private val greedy = residualMode == Planner.DropResidual
+  private val greedy = residualMode != Planner.ApplyResidual
 
   private def plan(conditions: Seq[Condition], others: Seq[SegmentCatalogEntry]): SegmentPlan =
     if (greedy) Planner.planGreedy(conditions, others.map(asRule))
@@ -198,11 +197,13 @@ final class SegmentRunner(
     * first use (its plan, not its data: nothing is cached).
     *
     * Under exact reuse a rule joins its parent's group when both are in the
-    * batch, and a group of two or more is published by one Spark write
-    * ([[SegmentStore.writeGroup]]): each member is the group's source
-    * filtered by the member's own HAVING set. The source is the per-user
-    * aggregate of a Base root's WHERE set, or the stored segment of a
-    * Compound root's parent. A group of one is written on its own.
+    * batch, and every group, one rule or more, is evaluated the same way:
+    * each member is the rows of the group's source that its own HAVING set
+    * keeps ([[SegmentEngine.keeps]]). The source is the per-user aggregate
+    * of a Base root's WHERE set, or the stored segment of a Compound root's
+    * parent. One [[SegmentStore.writeGroup]] call publishes the group, and
+    * the store picks its write. Under `DropResidual` each rule is a group of
+    * one, computed by [[Planner.evaluate]].
     */
   private def refresh(catalog: Seq[SegmentCatalogEntry], ids: Seq[Long],
       at: String, rearm: Boolean): Map[Long, Long] = {
@@ -216,19 +217,19 @@ final class SegmentRunner(
       groups(root) = groups.getOrElse(root, Vector.empty) :+ id
     }
     lazy val view = tx()
+    def compiled(id: Long) = ConditionCompiler.compile(byId(id).conditions)
     var done = Vector.empty[(Long, Long)]
+    // the writes handle the empty case (canonical-schema empty parquet, Q9);
+    // probing emptiness first would execute the whole DAG twice.
     try groups.foreach { case (root, members) =>
-      if (!greedy) members.foreach(id => requireExact(id, plans(id), byId))
-      done ++= (members match {
-        // write() handles the empty case (canonical-schema empty parquet, Q9);
-        // probing emptiness first would execute the whole DAG twice.
-        case Seq(id) =>
-          Seq(id -> store.write(id, Planner.evaluate(plans(id), view, store.read, keyed, residualMode)))
-        case _ =>
-          val source = exactParent(plans(root), byId).fold(SegmentEngine.aggregate(view,
-            ConditionCompiler.compile(byId(root).conditions).where))(store.read)
-          store.writeGroup(source, members.map(id =>
-            id -> SegmentEngine.keeps(ConditionCompiler.compile(byId(id).conditions).having)))
+      done ++= (residualMode match {
+        case Planner.ApplyResidual =>
+          members.foreach(id => requireExact(id, plans(id), byId))
+          val source = exactParent(plans(root), byId)
+            .fold(SegmentEngine.aggregate(view, compiled(root).where))(store.read)
+          store.writeGroup(source, members.map(id => id -> SegmentEngine.keeps(compiled(id).having)))
+        case parity =>
+          Seq(root -> store.write(root, Planner.evaluate(plans(root), view, store.read, parity)))
       })
     } finally commit(done, at, rearm)
     done.toMap

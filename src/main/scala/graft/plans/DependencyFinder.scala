@@ -34,21 +34,18 @@ object DependencyFinder {
   def canonical(conditions: Seq[Condition]): Set[Condition] = conditions.toSet
 
   /** Finds the best dependency cover for `conditions` among `existing`
-    * rules, optionally excluding one rule id (used on update so a rule never
-    * depends on itself — reference rules.py:162, dependency_finder.py:39-40).
+    * rules. A caller re-planning a rule leaves that rule out of `existing`,
+    * so it never depends on itself (reference rules.py:162,
+    * dependency_finder.py:39-40).
     *
     * Returns Some only if ≥1 dependency was claimed AND the cover consumed
     * ≥1 condition (reference dependency_finder.py:65-71, R3).
     */
-  def findBestDependency(
-      conditions: Seq[Condition],
-      existing: Seq[Rule],
-      excludeRuleId: Option[Long] = None): Option[Detection] = {
+  def findBestDependency(conditions: Seq[Condition], existing: Seq[Rule]): Option[Detection] = {
     val target = canonical(conditions)
     if (target.isEmpty) return None
 
     val candidates = existing
-      .filter(r => excludeRuleId.forall(_ != r.id))
       .filter(_.conditions.nonEmpty)
       .sortBy(r => (-r.conditions.size, r.id))
 

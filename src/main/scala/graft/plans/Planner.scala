@@ -81,27 +81,28 @@ object Planner {
     }
 
   /** Which reuse a runner plans and [[evaluate]] computes. `ApplyResidual`
-    * (default) is exact reuse ([[planNew]]): a Compound plan's residual
-    * HAVING conditions filter its one parent. `DropResidual` is reference
-    * parity: the greedy cover ([[planGreedy]]), its parents combined by the
-    * plan's set operation and its residual dropped, as the reference
+    * (default) is exact reuse ([[planNew]]): a Compound plan's HAVING
+    * conditions filter its one parent. `DropResidual` is reference parity:
+    * the greedy cover ([[planGreedy]]), its parents combined by the plan's
+    * set operation, keyed or row-faithful as `keyed` says
+    * ([[SegmentOps.combine]]), and its residual dropped, as the reference
     * generates SQL for the residual but ignores it at dispatch (SURVEY
     * Q5/R4-R5).
     */
   sealed trait ResidualMode
   case object ApplyResidual extends ResidualMode
-  case object DropResidual  extends ResidualMode
+  final case class DropResidual(keyed: Boolean = true) extends ResidualMode
 
   /** Evaluate a plan. `loadParent` resolves a parent rule id to its
     * materialized segment (from the SegmentStore, or recomputed).
     *
-    * Under `ApplyResidual` a Compound plan is exact reuse: its one parent
-    * filtered by the HAVING conditions the plan carries, over the segment
-    * columns `total_spent` and `total_transactions`; `tx` is not read.
-    * Under `DropResidual` its parents combine by the plan's set operation,
-    * keyed or row-faithful as `keyed` says ([[SegmentOps.combine]]); a
-    * single parent passes through and only zero parents is an error
-    * (deliberate deviation from the reference's ≥2 abort, U6).
+    * Under `ApplyResidual` a Compound plan is exact reuse: the rows of its
+    * one parent that the plan's HAVING conditions keep
+    * ([[SegmentEngine.keeps]]), over the segment columns `total_spent` and
+    * `total_transactions`; `tx` is not read. Under `DropResidual` its
+    * parents combine by the plan's set operation; a single parent passes
+    * through and only zero parents is an error (deliberate deviation from
+    * the reference's ≥2 abort, U6).
     * `faithfulParentGuard = true` reproduces that abort: a Compound plan
     * with fewer than two parents aborts (spark_processor.py:92-94 counts
     * `parent_segment_dfs` only, so the residual never rescues the count).
@@ -110,7 +111,6 @@ object Planner {
       plan: SegmentPlan,
       tx: => DataFrame,
       loadParent: Long => DataFrame,
-      keyed: Boolean = true,
       residualMode: ResidualMode = ApplyResidual,
       faithfulParentGuard: Boolean = false): DataFrame =
     plan match {
@@ -126,9 +126,9 @@ object Planner {
             require(parents.size == 1 && op == SetOp.Intersection,
               s"exact reuse reads one parent by intersection, got $op over " +
                 s"${parents.size} parents; a greedy cover evaluates only under DropResidual")
-            val parent = loadParent(parents.head)
-            ConditionCompiler.compile(conds).having.fold(parent)(parent.filter)
-          case DropResidual =>
+            SegmentEngine.keeps(ConditionCompiler.compile(conds).having)
+              .foldLeft(loadParent(parents.head))(_.filter(_))
+          case DropResidual(keyed) =>
             require(parents.nonEmpty, "Compound rule resolved no parent segments")
             SegmentOps.combine(op, parents.map(loadParent), keyed)
         }

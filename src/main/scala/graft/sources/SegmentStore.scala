@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * overwrites a segment in place: the new content is written beside it and
   * swapped in ([[SegmentStore.swapIn]]), so a failed refresh leaves the
   * previous segment readable, like the reference's transactional table
-  * replace; a crashed swap rolls back ([[SegmentStore.resolve]]). Segments
-  * that filter one source publish from one Spark write ([[writeGroup]]). An
+  * replace; a crashed swap rolls back ([[SegmentStore.resolve]]). The
+  * segments that filter one source publish in one [[writeGroup]] call,
+  * which alone decides how they are written. An
   * empty result writes an empty file with the canonical 4-column schema so
   * downstream readers never fail (S6, SURVEY Q9), and reads trust that schema.
   * A segment directory holds only `part-*` files (and their checksums).
@@ -58,46 +59,50 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
     }
   }
 
-  /** Write several segments from one pass over `source`, returning each
-    * one's row count in `keep`'s order: segment `id` holds the rows of
-    * `source` its predicate passes. One Spark write lands every segment in
-    * its own partition of the scratch directory `segment_output_<root>__group`
-    * (`root` is the first id of `keep`); each partition is then swapped in
-    * ([[SegmentStore.swapIn]]) as that segment, and a segment with no rows
-    * gets the canonical empty file (Q9). The partitioned write sorts its rows by segment, so a lone segment
-    * should take [[write]]. Writes of one group directory serialize inside a
-    * JVM; the directory is never read, and the next write of it, or a
-    * [[delete]] of `root`, removes what a failed or crashed write left.
+  /** Publish one group of segments from `source`, returning each one's row
+    * count in `keep`'s order: segment `id` holds the rows of `source` that
+    * pass all of its filters. A lone segment is `source` filtered one
+    * filter after another ([[write]]). Two or more come from one Spark
+    * write, which sorts its rows by segment into partitions of the scratch
+    * directory `segment_output_<root>__group` (`root` is the first id of
+    * `keep`); each partition is then swapped in ([[SegmentStore.swapIn]])
+    * as that segment, and a segment with no rows gets the canonical empty
+    * file (Q9). Writes of one group directory serialize inside a JVM; the
+    * directory is never read, and the next write of it, or a [[delete]] of
+    * `root`, removes what a failed or crashed write left.
     */
-  def writeGroup(source: DataFrame, keep: Seq[(Long, Column)]): Seq[(Long, Long)] = {
-    val root = keep.head._1
-    val (fsys, group) = fs(path(root) + SegmentStore.GroupSuffix)
-    SegmentStore.withJvmLock(fsys, group) {
-      fsys.delete(group, true)
-      val seg = col(SegmentStore.GroupColumn)
-      val obs = org.apache.spark.sql.Observation(s"seg_group_$root")
-      val counts = keep.map { case (id, _) => count(when(seg === id, 1)).as(id.toString) }
-      val rows = canonical(source)
-        .withColumn(SegmentStore.GroupColumn,
-          explode(array(keep.map { case (id, pred) => when(pred, lit(id)) }: _*)))
-        .filter(seg.isNotNull)
-        .observe(obs, counts.head, counts.tail: _*)
-      writeParquet(rows.write.partitionBy(SegmentStore.GroupColumn), group)
-      val written = keep.map { case (id, _) =>
-        val n = obs.get(id.toString).asInstanceOf[Long]
-        val (f, p) = fs(path(id))
-        SegmentStore.swapIn(f, p) { staging =>
-          val part = new Path(group, s"${SegmentStore.GroupColumn}=$id")
-          if (n > 0) require(fsys.rename(part, staging), s"rename $part -> $staging failed")
-          else writeParquet(spark.createDataFrame(
-            java.util.Collections.emptyList[Row](), Schemas.segmentOutput).write, staging)
+  def writeGroup(source: DataFrame, keep: Seq[(Long, Seq[Column])]): Seq[(Long, Long)] =
+    keep match {
+      case Seq((id, filters)) => Seq(id -> write(id, filters.foldLeft(source)(_.filter(_))))
+      case _ =>
+        val root = keep.head._1
+        val (fsys, group) = fs(path(root) + SegmentStore.GroupSuffix)
+        SegmentStore.withJvmLock(fsys, group) {
+          fsys.delete(group, true)
+          val seg = col(SegmentStore.GroupColumn)
+          val obs = org.apache.spark.sql.Observation(s"seg_group_$root")
+          val counts = keep.map { case (id, _) => count(when(seg === id, 1)).as(id.toString) }
+          val rows = canonical(source)
+            .withColumn(SegmentStore.GroupColumn, explode(array(keep.map { case (id, filters) =>
+              when(filters.reduce(_ && _), lit(id)) }: _*)))
+            .filter(seg.isNotNull)
+            .observe(obs, counts.head, counts.tail: _*)
+          writeParquet(rows.write.partitionBy(SegmentStore.GroupColumn), group)
+          val written = keep.map { case (id, _) =>
+            val n = obs.get(id.toString).asInstanceOf[Long]
+            val (f, p) = fs(path(id))
+            SegmentStore.swapIn(f, p) { staging =>
+              val part = new Path(group, s"${SegmentStore.GroupColumn}=$id")
+              if (n > 0) require(fsys.rename(part, staging), s"rename $part -> $staging failed")
+              else writeParquet(spark.createDataFrame(
+                java.util.Collections.emptyList[Row](), Schemas.segmentOutput).write, staging)
+            }
+            id -> n
+          }
+          fsys.delete(group, true)
+          written
         }
-        id -> n
-      }
-      fsys.delete(group, true)
-      written
     }
-  }
 
   /** `df`'s canonical columns: names select them, casts pin their types. */
   private def canonical(df: DataFrame): DataFrame =
@@ -351,11 +356,11 @@ object SegmentStore {
   private[graft] def jvmLockCount: Int = jvmLocks.size
 
   /** Crash-safe replacement of a file or directory, the one way one is
-    * published. Its six callers are segment writes ([[SegmentStore.write]],
-    * and one swap per segment of a [[SegmentStore.writeGroup]]), the catalog
-    * ([[SegmentStore.modifyCatalog]]), run-history files
-    * ([[SegmentStore.appendRunHistory]]), `RollupServing.materialize`,
-    * `Tables.compact` and curation's snapshot pointers. `writeStaging`
+    * published. It publishes segments ([[SegmentStore.write]], and one swap
+    * per segment of a partitioned [[SegmentStore.writeGroup]]), small files
+    * through [[publishBytes]] (the catalog, run-history files and curation's
+    * snapshot pointers), the rollup (`RollupServing.materialize`) and
+    * curation's compactions (`ManagedTables.compact`). `writeStaging`
     * materializes the new content into `<target>__staging` (its result is
     * returned), then the target is moved aside to `<target>__old` and the
     * staging copy renamed in. If `writeStaging` throws, the target is

@@ -33,7 +33,7 @@ class PlannerSpec extends SparkSpec {
     assert(Planner.planNew(Seq(cDate), rules) == SegmentPlan.Base(Seq(cDate)))
     // excluding rule 3 falls back to the two singles
     val d = DependencyFinder.findBestDependency(
-      Seq(cAmount, cTier), rules, excludeRuleId = Some(3)).get
+      Seq(cAmount, cTier), rules.filterNot(_.id == 3)).get
     assert(d.dependencyRuleIds == Seq(1, 2) && d.remaining.isEmpty)
   }
 
@@ -102,14 +102,14 @@ class PlannerSpec extends SparkSpec {
     }
     // the parity path (DropResidual) passes one parent through by its set
     // operation and rejects zero parents there
-    val drop = Planner.DropResidual
     for (keyed <- Seq(true, false)) {
+      val drop = Planner.DropResidual(keyed)
       assert(Planner.evaluate(SegmentPlan.Compound(Seq(1), SetOp.Intersection, Seq(cHaving)),
         tx = sys.error("parity reads no tx"), loadParent = _ => seg,
-        keyed = keyed, residualMode = drop).collect().length == 1)
+        residualMode = drop).collect().length == 1)
       val e = intercept[IllegalArgumentException] {
         Planner.evaluate(SegmentPlan.Compound(Nil, SetOp.Intersection),
-          tx = seg, loadParent = _ => seg, keyed = keyed, residualMode = drop).collect()
+          tx = seg, loadParent = _ => seg, residualMode = drop).collect()
       }
       assert(e.getMessage.contains("no parent segments"))
     }
@@ -123,7 +123,8 @@ class PlannerSpec extends SparkSpec {
     // and stays inert when two parents resolve
     val two = Planner.evaluate(
       SegmentPlan.Compound(Seq(1, 2), SetOp.Intersection),
-      tx = seg, loadParent = _ => seg, residualMode = drop, faithfulParentGuard = true)
+      tx = seg, loadParent = _ => seg, residualMode = Planner.DropResidual(),
+      faithfulParentGuard = true)
     assert(two.collect().length == 1)
     // a non-vacuous residual must NOT rescue the faithful count: the
     // reference counts parent_segment_dfs only (spark_processor.py:92-94),

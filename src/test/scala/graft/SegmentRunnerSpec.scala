@@ -6,7 +6,10 @@ import graft.sources.{RunHistoryEntry, SegmentStore}
 import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SortExec, SparkPlanInfo}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -89,9 +92,9 @@ class SegmentRunnerSpec extends SparkSpec {
   test("reference shipped-DB scenario: faithful compound rule yields 0 rows (Q1/BASELINE)") {
     val dir = Files.createTempDirectory("graft_runner4").toString
     val store = new SegmentStore(spark, dir)
-    // keyed = false + DropResidual ⇒ bug-compatible with the reference
+    // DropResidual(keyed = false) ⇒ bug-compatible with the reference
     val runner = new SegmentRunner(store, tx,
-      keyed = false, residualMode = graft.plans.Planner.DropResidual)
+      residualMode = graft.plans.Planner.DropResidual(keyed = false))
     // amount > 600 (not 500): under >500 user 1's aggregates coincide in
     // both parents and the full-row intersect would keep that row
     val cAmount600 = Condition("transaction_amount", ">", "600")
@@ -110,7 +113,7 @@ class SegmentRunnerSpec extends SparkSpec {
   test("a default runner refuses by name the greedy bindings a DropResidual runner stored") {
     val dir = Files.createTempDirectory("graft_runner_parity").toString
     val store = new SegmentStore(spark, dir)
-    val parity = new SegmentRunner(store, tx, residualMode = graft.plans.Planner.DropResidual)
+    val parity = new SegmentRunner(store, tx, residualMode = graft.plans.Planner.DropResidual())
     // one greedy parent with another WHERE set, and two greedy parents
     parity.createRule("r1", Seq(cAmount))
     val (id2, p2) = parity.createRule("one-parent", Seq(cAmount, cTier, cCount2))
@@ -512,6 +515,46 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(store.loadCatalog().find(_.ruleId == id2).get.rowCount == 0L)
     assert(store.runHistory().as[RunHistoryEntry].collect().toSeq.sortBy(_.rule_id) ==
       Seq(RunHistoryEntry(id1, at, 2L), RunHistoryEntry(id2, at, 0L)))
+  }
+
+  /** The one file write `body` ran, once the listener has seen it. */
+  private def fileWriteOf(body: => Unit): QueryExecution = {
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand])) writes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"expected one file write, saw ${writes.size}")
+    writes.peek()
+  }
+
+  test("a lone rule's write holds no Generate or Sort; a lone Base rule plans as materializeBase") {
+    val dir = Files.createTempDirectory("graft_runner_lone").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    val (id1, _) = runner.createRule("repeat", Seq(cAmount, cCount2))
+    val (id2, p2) = runner.createRule("repeat-big", Seq(cAmount, cCount2, cSpend))
+    assert(p2 == SegmentPlan.Compound(Seq(id1), SetOp.Intersection, Seq(cSpend)))
+    // two batches of one rule each: the Compound rule's parent is outside its batch
+    val base = fileWriteOf(assert(runner.run(id1, "2026-08-12T00:00:00Z") == 1L))
+    val compound = fileWriteOf(assert(runner.run(id2, "2026-08-12T00:00:00Z") == 1L))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    for (qe <- Seq(base, compound)) {
+      val found = aqe.collect(qe.executedPlan) { case p @ (_: GenerateExec | _: SortExec) => p.nodeName }
+      assert(found.isEmpty, s"a lone rule's write planned ${found.mkString(", ")}:\n${qe.executedPlan}")
+    }
+    // the rows the write observes and stores, below its row-count metric
+    val written = base.optimizedPlan.collectFirst { case c: CollectMetrics => c.child }.get
+    val expected = graft.operators.SegmentEngine.materializeBase(tx(), Seq(cAmount, cCount2))
+      .queryExecution.optimizedPlan
+    assert(written.canonicalized == expected.canonicalized, s"$written\nis not\n$expected")
   }
 
   test("concurrent refreshes of one rule group never share its group directory") {

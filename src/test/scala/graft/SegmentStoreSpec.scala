@@ -335,8 +335,8 @@ class SegmentStoreSpec extends SparkSpec {
     val seg = Seq((1L, 2L, 1300.0, "UPI"), (2L, 1L, 40.0, "UPI"))
       .toDF("user_id", "total_transactions", "total_spent", "transaction_types")
     assert(store.write(7L, seg) == 2L)
-    assert(store.writeGroup(seg, Seq(8L -> lit(true), 9L -> ($"user_id" === 2L),
-      10L -> lit(false))) == Seq(8L -> 2L, 9L -> 1L, 10L -> 0L))
+    assert(store.writeGroup(seg, Seq(8L -> Seq(lit(true)), 9L -> Seq($"user_id" === 2L),
+      10L -> Seq(lit(false)))) == Seq(8L -> 2L, 9L -> 1L, 10L -> 0L))
     assert(store.read(9L).collect().toSeq == seg.filter($"user_id" === 2L).collect().toSeq)
     assert(store.read(10L).schema == Schemas.segmentOutput && store.read(10L).count() == 0L)
     for (id <- 7L to 10L) {
