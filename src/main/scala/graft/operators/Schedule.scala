@@ -17,7 +17,7 @@ import java.time.temporal.ChronoUnit
   * `calculate_next_run` but is unreachable (scheduler.py:62-133). We
   * implement the evident intent: [[SegmentRunner.runDue]] re-arms
   * `nextRunAt = calculateNextRun(schedule, now)` after every scheduled run.
-  * `runDue(now, faithfulSchedule = true)` reproduces the reference's
+  * The reference-parity runner's `runDue(now)` reproduces the reference's
   * never-re-arm behavior exactly (the rule stays due and re-runs every
   * tick once its arm time passes).
   */

@@ -1,4 +1,4 @@
-package graft.operators
+package graft.parity
 
 import graft.model.SetOp
 import org.apache.spark.sql.DataFrame

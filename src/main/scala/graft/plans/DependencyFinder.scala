@@ -2,8 +2,8 @@ package graft.plans
 
 import graft.model._
 
-/** The reference's segment-reuse rewrite, kept for reference parity
-  * ([[Planner.planGreedy]]): greedily expresses a new rule as an
+/** The reference's segment-reuse rewrite, kept for reference parity (the
+  * parity runner's `planGreedy`): greedily expresses a new rule as an
   * INTERSECTION of already-materialized segments whose condition-sets are
   * subsets of the new rule's, leaving only residual conditions for fresh
   * computation (reference: backend/app/utils/dependency_finder.py:19-74).

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.model._
-import graft.operators.{ConditionCompiler, SegmentEngine, SegmentOps}
+import graft.operators.{ConditionCompiler, SegmentEngine}
 import org.apache.spark.sql.DataFrame
 
 /** Binds rules to execution plans and evaluates them
@@ -14,9 +14,9 @@ import org.apache.spark.sql.DataFrame
   * conditions filter transactions before the per-user aggregate, so S then
   * holds every user R can select with R's own aggregates, and
   * R = σ_having(R)(S): a filter over S's parquet that scans no `events`.
-  * The reference's greedy multi-parent cover ([[DependencyFinder]]) is kept
-  * only for reference parity ([[planGreedy]], evaluated under
-  * [[DropResidual]]).
+  * The reference's greedy multi-parent cover ([[DependencyFinder]]) and its
+  * set-operation evaluation are not this object's: they plan and refresh
+  * rules only in the reference-parity runner.
   *
   * Precedence (SURVEY Q5): a rule carrying dependencies + operation is
   * Compound even if it also has base conditions — the reference checks
@@ -46,17 +46,6 @@ object Planner {
       case None => SegmentPlan.Base(conditions)
     }
 
-  /** The reference's plan for a new rule: the greedy multi-parent cover of
-    * [[DependencyFinder]] (reference rules.py:27-37), Base when no cover
-    * consumes a condition. For reference parity only: parents that share
-    * no WHERE set do not intersect to the rule's segment.
-    */
-  def planGreedy(conditions: Seq[Condition], existing: Seq[Rule]): SegmentPlan =
-    DependencyFinder.findBestDependency(conditions, existing) match {
-      case Some(d) => SegmentPlan.Compound(d.dependencyRuleIds, d.operation, d.remaining)
-      case None    => SegmentPlan.Base(conditions)
-    }
-
   /** Offline re-analysis (R9): re-plan every rule against all the others
     * by the same exact rule as [[planNew]] (reference:
     * backend/update_segment_query.py:43-89 re-classifies by exact
@@ -80,57 +69,25 @@ object Planner {
       case _                                 => SegmentPlan.Base(rule.conditions)
     }
 
-  /** Which reuse a runner plans and [[evaluate]] computes. `ApplyResidual`
-    * (default) is exact reuse ([[planNew]]): a Compound plan's HAVING
-    * conditions filter its one parent. `DropResidual` is reference parity:
-    * the greedy cover ([[planGreedy]]), its parents combined by the plan's
-    * set operation, keyed or row-faithful as `keyed` says
-    * ([[SegmentOps.combine]]), and its residual dropped, as the reference
-    * generates SQL for the residual but ignores it at dispatch (SURVEY
-    * Q5/R4-R5).
-    */
-  sealed trait ResidualMode
-  case object ApplyResidual extends ResidualMode
-  final case class DropResidual(keyed: Boolean = true) extends ResidualMode
-
   /** Evaluate a plan. `loadParent` resolves a parent rule id to its
     * materialized segment (from the SegmentStore, or recomputed).
     *
-    * Under `ApplyResidual` a Compound plan is exact reuse: the rows of its
-    * one parent that the plan's HAVING conditions keep
-    * ([[SegmentEngine.keeps]]), over the segment columns `total_spent` and
-    * `total_transactions`; `tx` is not read. Under `DropResidual` its
-    * parents combine by the plan's set operation; a single parent passes
-    * through and only zero parents is an error (deliberate deviation from
-    * the reference's ≥2 abort, U6).
-    * `faithfulParentGuard = true` reproduces that abort: a Compound plan
-    * with fewer than two parents aborts (spark_processor.py:92-94 counts
-    * `parent_segment_dfs` only, so the residual never rescues the count).
+    * A Compound plan is exact reuse: the rows of its one parent that the
+    * plan's HAVING conditions keep ([[SegmentEngine.keeps]]), over the
+    * segment columns `total_spent` and `total_transactions`; `tx` is not
+    * read. One parent is enough: a deliberate deviation from the reference's
+    * ≥2-parent abort (U6). A plan of any other shape, such as the greedy
+    * cover's, is refused.
     */
-  def evaluate(
-      plan: SegmentPlan,
-      tx: => DataFrame,
-      loadParent: Long => DataFrame,
-      residualMode: ResidualMode = ApplyResidual,
-      faithfulParentGuard: Boolean = false): DataFrame =
+  def evaluate(plan: SegmentPlan, tx: => DataFrame, loadParent: Long => DataFrame): DataFrame =
     plan match {
       case SegmentPlan.Base(conds) =>
         SegmentEngine.materializeBase(tx, conds)
       case SegmentPlan.Compound(parents, op, conds) =>
-        if (faithfulParentGuard)
-          require(parents.size >= 2,
-            s"Compound rule resolved ${parents.size} parent segments (< 2); " +
-              "the reference aborts here (spark_processor.py:92-94)")
-        residualMode match {
-          case ApplyResidual =>
-            require(parents.size == 1 && op == SetOp.Intersection,
-              s"exact reuse reads one parent by intersection, got $op over " +
-                s"${parents.size} parents; a greedy cover evaluates only under DropResidual")
-            SegmentEngine.keeps(ConditionCompiler.compile(conds).having)
-              .foldLeft(loadParent(parents.head))(_.filter(_))
-          case DropResidual(keyed) =>
-            require(parents.nonEmpty, "Compound rule resolved no parent segments")
-            SegmentOps.combine(op, parents.map(loadParent), keyed)
-        }
+        require(parents.size == 1 && op == SetOp.Intersection,
+          s"exact reuse reads one parent by intersection, got $op over " +
+            s"${parents.size} parents; a greedy cover evaluates only by set operations")
+        SegmentEngine.keeps(ConditionCompiler.compile(conds).having)
+          .foldLeft(loadParent(parents.head))(_.filter(_))
     }
 }

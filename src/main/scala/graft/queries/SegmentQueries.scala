@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.model._
 import graft.operators._
+import graft.parity.SegmentOps
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

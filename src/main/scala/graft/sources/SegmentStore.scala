@@ -132,14 +132,15 @@ final class SegmentStore(spark: SparkSession, warehouse: String) {
   /** Remove a segment's materialized parquet (rule DELETE, see
     * SegmentRunner.deleteRule), with the swap siblings and the group
     * directory ([[writeGroup]]) a failed or crashed write can leave. False
-    * when nothing was materialized.
+    * when nothing was published: neither the target nor a crashed swap's
+    * `__old` copy ([[SegmentStore.resolve]]).
     */
   def delete(ruleId: Long): Boolean = {
     val (f, p) = fs(path(ruleId))
     val (staging, old) = SegmentStore.swapSiblings(p)
     val group = p.suffix(SegmentStore.GroupSuffix)
     SegmentStore.withJvmLock(f, group)(f.delete(group, true))
-    SegmentStore.withJvmLock(f, p)(Seq(staging, old, p).map(f.delete(_, true)).last)
+    SegmentStore.withJvmLock(f, p)(Seq(staging, old, p).map(f.delete(_, true)).tail.contains(true))
   }
 
   // ---- catalog --------------------------------------------------------------

@@ -1,6 +1,8 @@
 package graft
 
 import graft.model._
+import graft.parity.ReferenceRunner
+import graft.parity.ReferenceRunner.requireTwoParents
 import graft.plans.{DependencyFinder, Planner}
 import graft.sources.SegmentStore
 import java.nio.file.Files
@@ -100,31 +102,29 @@ class PlannerSpec extends SparkSpec {
         SegmentPlan.Compound(Nil, SetOp.Intersection),
         tx = seg, loadParent = _ => seg).collect()
     }
-    // the parity path (DropResidual) passes one parent through by its set
-    // operation and rejects zero parents there
+    // the parity path (ReferenceRunner.evaluate) passes one parent through
+    // by its set operation and rejects zero parents there
     for (keyed <- Seq(true, false)) {
-      val drop = Planner.DropResidual(keyed)
-      assert(Planner.evaluate(SegmentPlan.Compound(Seq(1), SetOp.Intersection, Seq(cHaving)),
+      assert(ReferenceRunner.evaluate(SegmentPlan.Compound(Seq(1), SetOp.Intersection, Seq(cHaving)),
         tx = sys.error("parity reads no tx"), loadParent = _ => seg,
-        residualMode = drop).collect().length == 1)
+        keyed = keyed).collect().length == 1)
       val e = intercept[IllegalArgumentException] {
-        Planner.evaluate(SegmentPlan.Compound(Nil, SetOp.Intersection),
-          tx = seg, loadParent = _ => seg, residualMode = drop).collect()
+        ReferenceRunner.evaluate(SegmentPlan.Compound(Nil, SetOp.Intersection),
+          tx = seg, loadParent = _ => seg, keyed = keyed).collect()
       }
       assert(e.getMessage.contains("no parent segments"))
     }
-    // faithful mode reproduces the reference's < 2-parent abort
+    // requireTwoParents reproduces the reference's < 2-parent abort
     // (spark_processor.py:92-94) on the same single-cover plan
     intercept[IllegalArgumentException] {
       Planner.evaluate(
-        SegmentPlan.Compound(Seq(1), SetOp.Intersection),
-        tx = seg, loadParent = _ => seg, faithfulParentGuard = true).collect()
+        requireTwoParents(SegmentPlan.Compound(Seq(1), SetOp.Intersection)),
+        tx = seg, loadParent = _ => seg).collect()
     }
     // and stays inert when two parents resolve
-    val two = Planner.evaluate(
-      SegmentPlan.Compound(Seq(1, 2), SetOp.Intersection),
-      tx = seg, loadParent = _ => seg, residualMode = Planner.DropResidual(),
-      faithfulParentGuard = true)
+    val two = ReferenceRunner.evaluate(
+      requireTwoParents(SegmentPlan.Compound(Seq(1, 2), SetOp.Intersection)),
+      tx = seg, loadParent = _ => seg, keyed = true)
     assert(two.collect().length == 1)
     // a non-vacuous residual must NOT rescue the faithful count: the
     // reference counts parent_segment_dfs only (spark_processor.py:92-94),
@@ -138,8 +138,8 @@ class PlannerSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] {
       Planner.evaluate(
-        SegmentPlan.Compound(Seq(1), SetOp.Intersection, Seq(cAmount)),
-        tx = txf, loadParent = _ => seg, faithfulParentGuard = true).collect()
+        requireTwoParents(SegmentPlan.Compound(Seq(1), SetOp.Intersection, Seq(cAmount))),
+        tx = txf, loadParent = _ => seg).collect()
     }
   }
 

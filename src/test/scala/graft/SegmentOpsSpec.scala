@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.SetOp
-import graft.operators.SegmentOps
+import graft.parity.SegmentOps
 import org.apache.spark.sql.DataFrame
 
 /** Set-op algebra: row-faithful (bug-compatible, SURVEY Q1) vs keyed. */

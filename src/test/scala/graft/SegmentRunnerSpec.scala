@@ -2,6 +2,7 @@ package graft
 
 import graft.model._
 import graft.operators.SegmentRunner
+import graft.parity.ReferenceRunner
 import graft.sources.{RunHistoryEntry, SegmentStore}
 import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
@@ -92,9 +93,8 @@ class SegmentRunnerSpec extends SparkSpec {
   test("reference shipped-DB scenario: faithful compound rule yields 0 rows (Q1/BASELINE)") {
     val dir = Files.createTempDirectory("graft_runner4").toString
     val store = new SegmentStore(spark, dir)
-    // DropResidual(keyed = false) ⇒ bug-compatible with the reference
-    val runner = new SegmentRunner(store, tx,
-      residualMode = graft.plans.Planner.DropResidual(keyed = false))
+    // the reference runner, keyed = false ⇒ bug-compatible with the reference
+    val runner = new ReferenceRunner(store, tx, keyed = false)
     // amount > 600 (not 500): under >500 user 1's aggregates coincide in
     // both parents and the full-row intersect would keep that row
     val cAmount600 = Condition("transaction_amount", ">", "600")
@@ -113,7 +113,7 @@ class SegmentRunnerSpec extends SparkSpec {
   test("a default runner refuses by name the greedy bindings a DropResidual runner stored") {
     val dir = Files.createTempDirectory("graft_runner_parity").toString
     val store = new SegmentStore(spark, dir)
-    val parity = new SegmentRunner(store, tx, residualMode = graft.plans.Planner.DropResidual())
+    val parity = new ReferenceRunner(store, tx)
     // one greedy parent with another WHERE set, and two greedy parents
     parity.createRule("r1", Seq(cAmount))
     val (id2, p2) = parity.createRule("one-parent", Seq(cAmount, cTier, cCount2))
@@ -180,20 +180,21 @@ class SegmentRunnerSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_runner_faithful").toString
     val store = new SegmentStore(spark, dir)
     val runner = new SegmentRunner(store, tx)
+    val reference = new ReferenceRunner(store, tx)
     val (id, _) = runner.createRule("hourly", Seq(cAmount), schedule = "HOURLY")
 
     val t1 = "2026-08-12T06:00:00Z"
-    assert(runner.runDue(t1, faithfulSchedule = true).keySet == Set(id))
+    assert(reference.runDue(t1).keySet == Set(id))
     val entry = store.loadCatalog().find(_.ruleId == id).get
     assert(entry.nextRunAt.isEmpty, "faithful mode must not re-arm nextRunAt")
     assert(entry.lastRefreshedAt.contains(t1), "last refresh still recorded")
 
     // one second later — cadence is HOURLY, but the reference re-runs
     // anyway because the rule was never re-armed
-    assert(runner.runDue("2026-08-12T06:00:01Z", faithfulSchedule = true)
+    assert(reference.runDue("2026-08-12T06:00:01Z")
       .keySet == Set(id))
 
-    // switching back to default mode re-arms from the current tick
+    // the default runner re-arms from the current tick
     assert(runner.runDue("2026-08-12T06:00:02Z").keySet == Set(id))
     assert(store.loadCatalog().find(_.ruleId == id).get
       .nextRunAt.contains("2026-08-12T07:00:02Z"))
@@ -266,6 +267,22 @@ class SegmentRunnerSpec extends SparkSpec {
     assert(runner.getRule(id1).isEmpty && !store.exists(id1))
     assert(runner.listRules().map(_.ruleId) == Seq(id2))
     intercept[IllegalArgumentException](runner.deleteRule(99L))
+  }
+
+  test("updateRule and setActive refuse an unknown rule id by name and write no catalog") {
+    val dir = Files.createTempDirectory("graft_runner_unknown").toString
+    val store = new SegmentStore(spark, dir)
+    val runner = new SegmentRunner(store, tx)
+    runner.createRule("r1", Seq(cAmount))
+    val catalog = java.nio.file.Paths.get(dir, "_catalog.json")
+    val before = Files.getLastModifiedTime(catalog)
+    Thread.sleep(20) // a save after this point carries a later modification time
+    val updated = intercept[NoSuchElementException](runner.updateRule(99L, Seq(cTier)))
+    val flipped = intercept[NoSuchElementException](runner.setActive(99L, active = false))
+    assert(updated.getMessage.contains("rule 99") && flipped.getMessage.contains("rule 99"))
+    assert(Files.getLastModifiedTime(catalog) == before, "no catalog may be written")
+    assert(store.loadCatalog().map(e => (e.ruleId, e.conditions, e.isActive)) ==
+      Seq((1L, Seq(cAmount), true)))
   }
 
   test("catalog sql_query sentinel COMPOUND_OPERATION:<op> round-trips (rules.py:211 crumb)") {

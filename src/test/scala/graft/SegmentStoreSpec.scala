@@ -244,6 +244,20 @@ class SegmentStoreSpec extends SparkSpec {
     assert(store.loadCatalog().map(_.segmentName) == Seq("v1"))
   }
 
+  test("delete reports and removes a segment a crashed swap left published as __old") {
+    val dir = Files.createTempDirectory("graft_delete_old").toString
+    val store = new SegmentStore(spark, dir)
+    val seg = Seq((1L, 2L, 1300.0, "UPI"))
+      .toDF("user_id", "total_transactions", "total_spent", "transaction_types")
+    assert(store.write(7L, seg) == 1L)
+    // the state a crash between the swap's two renames leaves behind
+    assert(hfs(dir).rename(new Path(s"$dir/segment_output_7"), new Path(s"$dir/segment_output_7__old")))
+    assert(store.exists(7L), "the moved-aside copy is still published")
+    assert(store.delete(7L), "delete removed a published segment")
+    assert(!store.exists(7L))
+    assert(!store.delete(7L), "nothing is left to delete")
+  }
+
   test("a stale catalog lock from a dead writer is broken, a fresh save proceeds") {
     val dir = Files.createTempDirectory("graft_stale_lock").toString
     val store = new SegmentStore(spark, dir)
