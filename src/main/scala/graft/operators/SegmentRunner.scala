@@ -210,13 +210,13 @@ object SegmentRunner {
       dependencies = e.dependsOn,
       operation = e.operation.flatMap(SetOp.parse))
 
-  private[graft] def requireRule(catalog: Seq[SegmentCatalogEntry], ruleId: Long): Unit =
+  private def requireRule(catalog: Seq[SegmentCatalogEntry], ruleId: Long): Unit =
     if (!catalog.exists(_.ruleId == ruleId))
       throw new NoSuchElementException(s"rule $ruleId not in catalog")
 
   /** Catalog a new rule bound by `plan` ([[SegmentRunner.createRule]]). */
   private[graft] def create(store: SegmentStore, name: String, conditions: Seq[Condition],
-      schedule: String = Schedule.Daily, isActive: Boolean = true)(
+      schedule: String, isActive: Boolean)(
       plan: (Seq[Condition], Seq[Rule]) => SegmentPlan): (Long, SegmentPlan) =
     store.modifyCatalog { catalog =>
       val id = catalog.nextRuleId

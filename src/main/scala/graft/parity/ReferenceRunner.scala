@@ -1,29 +1,28 @@
 package graft.parity
 
 import graft.model._
-import graft.operators.{SegmentEngine, SegmentRunner}
+import graft.operators.{Schedule, SegmentEngine, SegmentRunner}
 import graft.plans.{DependencyFinder, Planner}
 import graft.sources.SegmentStore
 import org.apache.spark.sql.DataFrame
 
-/** The reference's rule lifecycle, kept for behavioural parity only. Rules
+/** The reference's rule lifecycle, kept for behavioural parity only: rules
   * bind the greedy cover ([[ReferenceRunner.planGreedy]]) and refresh one
-  * write each by set operations, keyed or row-faithful as `keyed` says
+  * write each by the reference's full-row set operations
   * ([[ReferenceRunner.evaluate]]). The catalog, ordering and commit steps
-  * are [[SegmentRunner]]'s, which refuses by name to refresh a greedy
-  * binding that is not exact reuse.
+  * are [[SegmentRunner]]'s.
   */
-final class ReferenceRunner(store: SegmentStore, tx: () => DataFrame, keyed: Boolean = true) {
+final class ReferenceRunner(store: SegmentStore, tx: () => DataFrame) {
 
   def createRule(name: String, conditions: Seq[Condition]): (Long, SegmentPlan) =
-    SegmentRunner.create(store, name, conditions)(ReferenceRunner.planGreedy)
+    SegmentRunner.create(store, name, conditions, Schedule.Daily, isActive = true)(
+      ReferenceRunner.planGreedy)
 
   def runAll(refreshedAt: String): Map[Long, Long] =
     refresh(refreshedAt)(SegmentRunner.runnable(store, _)(_.isActive))
 
-  /** A tick that never re-arms, as the reference's `execute_rule` updates
-    * only `last_run_at` (scheduler.py:62-133): once a rule's arm time has
-    * passed it re-runs on every tick.
+  /** A tick that never re-arms (scheduler.py:62-133): once a rule's arm
+    * time has passed it re-runs on every tick.
     */
   def runDue(now: String): Map[Long, Long] = refresh(now)(SegmentRunner.due(store, _, now))
 
@@ -33,7 +32,7 @@ final class ReferenceRunner(store: SegmentStore, tx: () => DataFrame, keyed: Boo
     lazy val view = tx()
     SegmentRunner.publish(store, pick(catalog), at, rearm = false) { id =>
       val plan = Planner.planStored(SegmentRunner.asRule(byId(id)))
-      Seq(id -> store.write(id, ReferenceRunner.evaluate(plan, view, store.read, keyed)))
+      Seq(id -> store.write(id, ReferenceRunner.evaluate(plan, view, store.read, keyed = false)))
     }
   }
 }
@@ -49,10 +48,11 @@ object ReferenceRunner {
       case None    => SegmentPlan.Base(conditions)
     }
 
-  /** Evaluate a plan as the reference dispatches it (spark_processor.py:63-119):
-    * a Compound plan's parents combine by its set operation and its residual
-    * is dropped (SURVEY Q5/R4-R5). One parent passes through, a deviation
-    * from the reference's abort ([[requireTwoParents]]); none is an error.
+  /** A plan as the reference dispatches it (spark_processor.py:63-119): a
+    * Compound plan's parents combine by its set operation, keyed or
+    * full-row ([[SegmentOps.combine]]), and its residual is dropped (SURVEY
+    * Q5/R4-R5). One parent passes through, a deviation from the reference's
+    * abort ([[requireTwoParents]]); none is an error.
     */
   def evaluate(plan: SegmentPlan, tx: => DataFrame, loadParent: Long => DataFrame,
       keyed: Boolean): DataFrame =

@@ -5,6 +5,7 @@ import graft.operators.SegmentRunner
 import graft.parity.ReferenceRunner
 import graft.sources.{RunHistoryEntry, SegmentStore}
 import java.nio.file.Files
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
@@ -93,8 +94,8 @@ class SegmentRunnerSpec extends SparkSpec {
   test("reference shipped-DB scenario: faithful compound rule yields 0 rows (Q1/BASELINE)") {
     val dir = Files.createTempDirectory("graft_runner4").toString
     val store = new SegmentStore(spark, dir)
-    // the reference runner, keyed = false ⇒ bug-compatible with the reference
-    val runner = new ReferenceRunner(store, tx, keyed = false)
+    // the reference runner's full-row set operations ⇒ bug-compatible
+    val runner = new ReferenceRunner(store, tx)
     // amount > 600 (not 500): under >500 user 1's aggregates coincide in
     // both parents and the full-row intersect would keep that row
     val cAmount600 = Condition("transaction_amount", ">", "600")
@@ -275,12 +276,17 @@ class SegmentRunnerSpec extends SparkSpec {
     val runner = new SegmentRunner(store, tx)
     runner.createRule("r1", Seq(cAmount))
     val catalog = java.nio.file.Paths.get(dir, "_catalog.json")
-    val before = Files.getLastModifiedTime(catalog)
+    // a save swaps a new file in by rename, so it changes the file's identity
+    // even where the file system's timestamps are too coarse to tell
+    def identity = Files.readAttributes(catalog, classOf[BasicFileAttributes]).fileKey()
+    val (before, beforeKey) = (Files.getLastModifiedTime(catalog), identity)
+    assert(beforeKey != null, "the file system reports no file identity")
     Thread.sleep(20) // a save after this point carries a later modification time
     val updated = intercept[NoSuchElementException](runner.updateRule(99L, Seq(cTier)))
     val flipped = intercept[NoSuchElementException](runner.setActive(99L, active = false))
     assert(updated.getMessage.contains("rule 99") && flipped.getMessage.contains("rule 99"))
-    assert(Files.getLastModifiedTime(catalog) == before, "no catalog may be written")
+    assert(Files.getLastModifiedTime(catalog) == before && identity == beforeKey,
+      "no catalog may be written")
     assert(store.loadCatalog().map(e => (e.ruleId, e.conditions, e.isActive)) ==
       Seq((1L, Seq(cAmount), true)))
   }
